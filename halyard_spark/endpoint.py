@@ -296,8 +296,11 @@ class SparqlEndpoint:
                         ep.triples, query, services=ep.services, dataset=dataset
                     )
                     payload = serialize(df).encode()
-                except Exception as exc:  # malformed query -> protocol error
+                except (SyntaxError, ValueError) as exc:  # parse error / planner rejection
                     self.send_error(400, str(exc)[:500])
+                    return
+                except Exception as exc:  # evaluation failure: the server's fault
+                    self.send_error(500, str(exc)[:500])
                     return
                 self.send_response(200)
                 self.send_header("Content-Type", mtype)

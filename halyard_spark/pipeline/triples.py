@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from halyard_spark import nt
+from halyard_spark.session import local_frame
 
 P = {
     "imports": "<urn:p:imports>",
@@ -129,7 +130,8 @@ def emit_triples(
     )
 
     # namespace metadata triple (HalyardBulkLoad.java:453-458 analog)
-    ns = spark.createDataFrame(
+    ns = local_frame(
+        spark,
         [(nt.iri(nt.NS), P["namespacePrefix"], nt.lit("hs"), None)],
         "subj string, pred string, obj string, ctx string",
     )

@@ -14,6 +14,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from halyard_spark.session import local_frame
+
 
 def _shared_vars(left: DataFrame, right: DataFrame) -> list[str]:
     return [c for c in left.columns if c in set(right.columns)]
@@ -330,7 +332,7 @@ def union_bag(left: DataFrame, right: DataFrame) -> DataFrame:
 def values_table(spark, rows: list[tuple], schema: str) -> DataFrame:
     """BindingSetAssignment (VALUES): inline table (HTEE:1106-1145);
     merging with incoming bindings is values_join."""
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def values_join(left: DataFrame, vals: DataFrame) -> DataFrame:

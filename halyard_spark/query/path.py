@@ -3,9 +3,19 @@
 Halyard evaluates ``p+`` / ``p*`` with RDF4J's pull PathIteration
 re-entering the strategy per step
 (strategy/.../HalyardTupleExprEvaluation.java:1073-1098) — a row-at-a-time
-nested loop.  Distributed form: BFS frontier expansion with hash joins,
-dedup against the seen set, and ``localCheckpoint`` per round to keep the
-plan bounded.  Same shape as the connected-components stage.
+nested loop whose work grows with the reachable subgraph.  Two
+distributed forms, chosen by what the seeds are and how far they reach:
+
+- Seeds known on the driver (the constant of ``<s> p* ?o``): per-hop
+  probes.  Each hop is one job that reads the edges leaving the
+  frontier from the lazy edge scan; the frontier and the seen pairs stay
+  on the driver, where they are exactly counted.  Nothing is
+  checkpointed, and the probe starts no Python worker.
+- Seeds in a DataFrame, or a probe that outgrew its bounds: the edge set
+  is deduped and checkpointed once, then BFS rounds of up to 32 fused
+  hash-join hops each, with dedup against the seen set and a
+  ``localCheckpoint`` per round to keep the plan bounded.  Same shape
+  as the connected-components stage.
 """
 
 from __future__ import annotations
@@ -14,6 +24,8 @@ import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from halyard_spark.session import local_frame
 
 
 def _round_sql_array(fv: str, ev: str, hops: int, broadcast: bool) -> str:
@@ -134,9 +146,75 @@ def transitive_closure(
     return closure
 
 
+# Bounds of the bound-seed probe (_probe): a traversal from driver-side
+# seeds stays on the driver while each hop reads at most _PROBE_ROWS edges,
+# the pairs found stay within _PROBE_ROWS and it needs at most _PROBE_HOPS
+# edge scans.  Past any bound it hands its state to the fused rounds.
+_PROBE_HOPS = 8
+_PROBE_ROWS = 4096
+
+
+def _probe(edges: DataFrame, roots: list[str], advance: int, hops_left: int):
+    """Driver-side BFS from ``roots``: per hop, one bounded ``collect``
+    reads the edges leaving the not-yet-expanded frontier nodes from the
+    lazy ``edges`` scan (the exactly counted frontier rides in the
+    filter, a broadcast that parquet can push down), and the join with
+    the frontier, the dedup against the seen pairs and the count happen
+    on the driver.  That is one job on a one-partition scan; on a wider
+    one Spark's incremental ``limit`` adds a job per 4x more partitions.
+    Adjacency read once is reused, so cycles back into expanded nodes
+    cost no scan.  ``advance`` exact steps come first (the min_length
+    seed advance of :func:`reachable_from`), then BFS hops while
+    ``hops_left != 0`` (-1 = to convergence).
+
+    Returns ``(frontier, seen, advance, hops_left, done)``: with ``done``
+    the pairs in ``seen`` are the whole answer; otherwise a bound was hit
+    and the four values are the state to resume from."""
+    adj: dict[str, set[str]] = {}
+    scans = 0
+
+    def step(pairs: set) -> set | None:
+        nonlocal scans
+        todo = sorted({n for _, n in pairs} - adj.keys())
+        if todo:
+            if scans == _PROBE_HOPS:
+                return None
+            scans += 1
+            got = (
+                edges.where(F.col("src").isin(todo) & F.col("dst").isNotNull())
+                .select("src", "dst")
+                .limit(_PROBE_ROWS + 1)
+                .collect()
+            )
+            if len(got) > _PROBE_ROWS:
+                return None
+            adj.update((n, set()) for n in todo)
+            for src, dst in got:
+                adj[src].add(dst)
+        out = {(r, d) for r, n in pairs for d in adj[n]}
+        return out if len(out) <= _PROBE_ROWS else None
+
+    frontier = {(r, r) for r in roots}
+    seen: set = set()
+    while frontier and hops_left != 0:
+        nxt = step(frontier)
+        if nxt is None:
+            return frontier, seen, advance, hops_left, False
+        if advance:
+            frontier, advance = nxt, advance - 1
+            continue
+        frontier = nxt - seen
+        seen |= frontier
+        if hops_left > 0:
+            hops_left -= 1
+        if len(seen) > _PROBE_ROWS:
+            return frontier, seen, advance, hops_left, False
+    return frontier, seen, advance, hops_left, True
+
+
 def reachable_from(
     edges: DataFrame,
-    sources: DataFrame,
+    sources: DataFrame | list[str],
     min_length: int = 1,
     max_length: int | None = None,
     hops_per_round: int | None = None,
@@ -144,17 +222,26 @@ def reachable_from(
     _sources_from_edges: bool = False,
 ) -> DataFrame:
     """Bound-source property path: all (src, dst) with a directed path of
-    length >= min_length from each src in ``sources`` (a one-column
-    DataFrame named ``src``).
+    length >= min_length from each src in ``sources`` — a one-column
+    DataFrame named ``src``, or a list of terms known on the driver (the
+    constant of ``<s> p* ?o``).
 
     This is the ``<s> p+ ?o`` shape.  The reference evaluates it
     per-binding so the scan narrows (RDF4J PathIteration re-entering the
     strategy, strategy/.../HalyardTupleExprEvaluation.java:1073-1098);
     computing the whole-graph closure first — quadratic in component
     diameter — would be a scale-killer.  Distributed form: frontier BFS
-    seeded from the bound side, carrying (root, node) pairs; each round is
-    one equi-join on the frontier (small) against edges, so work is
+    seeded from the bound side, carrying (root, node) pairs, so work is
     proportional to the reachable subgraph, not the whole graph.
+
+    Driver-side seeds start with :func:`_probe`: one job per hop, each a
+    filter on the LAZY edge scan, with the frontier and the seen pairs
+    kept on the driver.  A traversal that converges within its bounds
+    (a constant's neighbourhood, a star, a short chain) never
+    materializes the edge set and returns a JVM-local frame.  Once the
+    traversal outgrows those hops, or when ``sources`` is a DataFrame,
+    the fused rounds below run, resuming from the probe's frontier and
+    seen pairs.
 
     min_length >= 2 advances the seeds exactly (min_length - 1) steps
     before collecting — {o : path(s, o) >= k} = {o : s ->^(k-1) m and
@@ -168,37 +255,80 @@ def reachable_from(
     because every round's anti-join only admits never-seen (root, node)
     pairs from a finite space.
 
-    ``hops_per_round`` batches that many 1-hop joins into ONE Spark job
-    before the convergence action (``None`` = auto: 32 on degree-1
-    broadcast-joined graphs, up to 16 on low-fanout (degree <= 4) ones,
-    4 otherwise): each round is
-    still frontier-sized
-    work (never a whole-graph closure), but a diameter-D traversal costs
-    ceil(D / hops_per_round) driver actions instead of D — on
-    latency-bound deep chains this is a ~hops_per_round× wall-clock win.
-    Revisits across the round are dropped at the round-end anti-join, so
-    cyclic graphs stay bounded.
+    Fused rounds: the edge set is deduped and checkpointed once, and
+    ``hops_per_round`` 1-hop joins run as ONE Spark job before the
+    convergence action (``None`` = auto: 32 on degree-1 broadcast-joined
+    graphs, up to 16 on low-fanout (degree <= 4) ones, 4 otherwise).
+    Each round is still frontier-sized work (never a whole-graph
+    closure), but a diameter-D traversal costs ceil(D / hops_per_round)
+    driver actions instead of D.  Revisits across the round are dropped
+    at the round-end anti-join, so cyclic graphs stay bounded.
 
-    Join strategy: a checkpointed edge RDD carries NO size statistics,
-    so Catalyst defaults every hop to a sort-merge join — two exchanges
-    + two sorts per hop, ~10 scheduled shuffles per round, which
-    dominates wall clock on deep graphs (measured: fixed ~0.6 s per
-    shuffle stage regardless of data size).  The edge count is known
-    (the eager checkpoint just materialized it), so hops BROADCAST the
-    edge table whenever its estimated size fits the session's
-    autoBroadcastJoinThreshold: every hop becomes a narrow broadcast-
-    hash join, the whole multi-hop chain fuses into ONE codegen stage,
-    and — when the graph's max out-degree keeps worst-case duplicate
-    carriage bounded — per-hop dedup is deferred to the round-end
-    aggregation (the broadcast hops are so cheap that bounded duplicate
-    carriage is cheaper than a shuffle per hop).  High-fanout or
-    above-threshold edge sets keep the per-hop distinct — at that scale
-    data volume, not scheduling latency, is the budget.
+    Join strategy in the fused rounds: a checkpointed edge RDD carries
+    NO size statistics, so Catalyst would default every hop to a
+    sort-merge join — two exchanges + two sorts per hop.  The edge count
+    is known (the eager checkpoint just materialized it), so hops
+    BROADCAST the edge table whenever its estimated size fits the
+    session's autoBroadcastJoinThreshold: every hop becomes a narrow
+    broadcast-hash join, the whole multi-hop chain fuses into ONE codegen
+    stage, and — when the graph's max out-degree keeps worst-case
+    duplicate carriage bounded — per-hop dedup is deferred to the
+    round-end aggregation.  High-fanout or above-threshold edge sets keep
+    the per-hop distinct — at that scale data volume, not scheduling
+    latency, is the budget.
     """
     if min_length < 0:
         raise ValueError(f"min_length must be >= 0; got {min_length}")
     if hops_per_round is not None and hops_per_round < 1:
         raise ValueError(f"hops_per_round must be >= 1; got {hops_per_round}")
+    spark = edges.sparkSession
+    advance = max(min_length - 1, 0)
+    hops_left = max_length if max_length is not None else -1
+    pair_schema = "src string, dst string"
+    from_frame = isinstance(sources, DataFrame)
+    if from_frame:
+        frontier = sources.select(F.col("src").alias("root"), F.col("src").alias("node"))
+        seen, seen_rows = None, 0
+    else:
+        roots = sorted(set(sources))
+        ids = {(r, r) for r in roots} if min_length == 0 else set()
+        state, seen_set, advance, hops_left, done = _probe(edges, roots, advance, hops_left)
+        if done:
+            return local_frame(spark, sorted(seen_set | ids), pair_schema)
+        frontier = local_frame(spark, sorted(state), "root string, node string")
+        seen = local_frame(spark, sorted(seen_set), "root string, node string") if seen_set else None
+        seen_rows = len(seen_set)
+    pairs = _fused_rounds(
+        edges, frontier, seen, seen_rows, advance, hops_left, hops_per_round,
+        _normalized, dedup_frontier=from_frame, _sources_from_edges=_sources_from_edges,
+    )
+    if min_length == 0:
+        identity = (
+            sources.select(F.col("src"), F.col("src").alias("dst")).distinct()
+            if from_frame
+            else local_frame(spark, sorted(ids), pair_schema)
+        )
+        pairs = pairs.union(identity).distinct()
+    return pairs
+
+
+def _fused_rounds(
+    edges: DataFrame,
+    frontier: DataFrame,
+    result: DataFrame | None,
+    result_rows: int,
+    advance: int,
+    hops_left: int,
+    hops_per_round: int | None,
+    _normalized: bool,
+    dedup_frontier: bool,
+    _sources_from_edges: bool,
+) -> DataFrame:
+    """The materialized-edge BFS of :func:`reachable_from`: ``advance``
+    exact steps from ``frontier`` (root, node), then fused rounds while
+    ``hops_left != 0`` (-1 = to convergence).  ``result`` holds pairs
+    already found (``result_rows`` of them), which later rounds exclude
+    and the answer includes.  Returns the (src, dst) pairs."""
     if not _normalized:
         edges = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
     n_edges = edges.count()  # free: the checkpoint is materialized
@@ -253,23 +383,19 @@ def reachable_from(
         else:
             hops_per_round = 4
     dedup_free = max_deg is not None and max_deg**hops_per_round <= 256
-    seeds = sources.select(F.col("src").alias("root"), F.col("src").alias("node"))
-    if not (_sources_from_edges and max_deg == 1):
+    if dedup_frontier and not (_sources_from_edges and max_deg == 1):
         # seed dedup costs an exchange in round 1's critical path; skip it
         # only when uniqueness is PROVEN: the sources are the deduped edge
         # set's own src column (transitive_closure) and max out-degree is
         # 1, so each src appears exactly once
-        seeds = seeds.distinct()
-    for _ in range(max(min_length - 1, 0)):
-        seeds = (
-            seeds.join(hop_edges, seeds.node == edges.src)
+        frontier = frontier.distinct()
+    for _ in range(advance):
+        frontier = (
+            frontier.join(hop_edges, frontier.node == edges.src)
             .select("root", F.col("dst").alias("node"))
             .distinct()
             .localCheckpoint(eager=True)
         )
-    result = None
-    result_rows = 0  # known exactly: sum of each round's fresh.count()
-    frontier = seeds
     # BFS terminates on its own: each round's anti-join keeps only pairs
     # never seen before, and the (root, node) space is finite — so the
     # default is run-to-convergence, matching the removed path-doubling's
@@ -277,14 +403,12 @@ def reachable_from(
     # budget silently truncated deep closures).  max_length is an
     # INTENTIONAL path-length cap — `p?` passes 1 — counted in hops
     # after the min_length seed advance, not a convergence budget.
-    hops_left = max_length if max_length is not None else -1
     # The round body is generated as ONE SQL statement over temp views of
     # the frontier + edge set (_round_sql_array / _round_sql_distinct):
     # the old per-hop DataFrame loop re-analyzed its deepening plan after
     # every join — ~1 s of driver time per 32-hop round, more than the
     # round's execution.  View names are invocation-unique (the session's
     # temp namespace is shared across concurrent driver threads).
-    spark_s = edges.sparkSession
     tag = uuid.uuid4().hex[:12]
     ev, fv = f"path_edges_{tag}", f"path_frontier_{tag}"
     edges.createOrReplaceTempView(ev)
@@ -302,7 +426,7 @@ def reachable_from(
             sql = build(fv, ev, this_round, broadcast_edges)
             round_sql_cache[this_round] = sql
         frontier.createOrReplaceTempView(fv)
-        acc = spark_s.sql(sql)
+        acc = spark.sql(sql)
         if result is not None:
             # the accumulated result's exact row count is known (summed
             # fresh counts), so the seen-set side of the anti-join is
@@ -341,19 +465,12 @@ def reachable_from(
     finally:
         for v in (fv, ev):
             try:
-                spark_s.catalog.dropTempView(v)
+                spark.catalog.dropTempView(v)
             except Exception:
                 pass
-    out_schema = seeds.select(F.col("root").alias("src"), F.col("node").alias("dst")).limit(0)
-    pairs = (
-        out_schema
-        if result is None
-        else result.select(F.col("root").alias("src"), F.col("node").alias("dst"))
-    )
-    if min_length == 0:
-        identity = sources.select(F.col("src"), F.col("src").alias("dst")).distinct()
-        pairs = pairs.union(identity).distinct()
-    return pairs
+    if result is None:
+        result = frontier.limit(0)
+    return result.select(F.col("root").alias("src"), F.col("node").alias("dst"))
 
 
 def zero_or_one_path(edges: DataFrame, nodes: DataFrame | None = None) -> DataFrame:

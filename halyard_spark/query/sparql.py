@@ -44,6 +44,7 @@ from halyard_spark import nt
 from halyard_spark.query import algebra as A
 from halyard_spark.query import exprs as E
 from halyard_spark.query import fulltext as FT
+from halyard_spark.session import local_frame
 
 # ---------------------------------------------------------------- tokens
 
@@ -1665,14 +1666,14 @@ class _Planner:
             # both endpoints bound (the ASK shape): BFS from the source,
             # keep at most the one matching pair; the zero-column result
             # acts as an EXISTS gate under bgp_join's cross product
-            seeds = self.spark.createDataFrame([(_Parser.term_lexical(s),)], "src string")
+            seeds = [_Parser.term_lexical(s)]
             if mod == "?":
                 pairs = PATH.reachable_from(edges, seeds, min_length=0, max_length=1)
             else:
                 pairs = PATH.reachable_from(edges, seeds, min_length=min_length)
             return pairs.where(F.col("dst") == _Parser.term_lexical(o)).limit(1).select()
         if not s_var:  # bound source
-            seeds = self.spark.createDataFrame([(_Parser.term_lexical(s),)], "src string")
+            seeds = [_Parser.term_lexical(s)]
             if mod == "?":
                 pairs = PATH.reachable_from(edges, seeds, min_length=0, max_length=1)
             else:
@@ -1680,7 +1681,7 @@ class _Planner:
             return pairs.select(F.col("dst").alias(o[1]))
         # bound object: BFS over reversed edges seeded from the object
         rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        seeds = self.spark.createDataFrame([(_Parser.term_lexical(o),)], "src string")
+        seeds = [_Parser.term_lexical(o)]
         if mod == "?":
             pairs = PATH.reachable_from(rev, seeds, min_length=0, max_length=1)
         else:
@@ -2633,7 +2634,7 @@ def sparql_query(
         spark = triples.sparkSession
         const_nodes = [_Parser.term_lexical(t) for t in q.describe_terms if t[0] != "var"]
         nodes = (
-            spark.createDataFrame([(n,) for n in const_nodes], "node string")
+            local_frame(spark, [(n,) for n in const_nodes], "node string")
             if const_nodes
             else None
         )
@@ -3020,7 +3021,7 @@ def sparql_update(triples: DataFrame, update: str, base: str | None = None) -> D
                 _Parser.term_lexical(s), _Parser.term_lexical(p), _Parser.term_lexical(o),
                 _Parser.term_lexical(ctx) if ctx is not None else None,
             ))
-        return spark.createDataFrame(rows, "subj string, pred string, obj string, ctx string")
+        return local_frame(spark, rows, "subj string, pred string, obj string, ctx string")
 
     def _ctx_cond(spec):
         if spec[0] == "default":

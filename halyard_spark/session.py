@@ -9,13 +9,33 @@ every pandas-UDF exchange.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import tempfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# Sized from the host: the CPUs this process may run on, and a share of
+# physical memory for the driver heap (local mode runs every task in it).
+# SPARK_GRAFT_CPUS / SPARK_GRAFT_DRIVER_MEM override both.
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+DRIVER_MEM_SHARE = 0.5  # of MemTotal
+DRIVER_MEM_CAP_MB = 64 * 1024
+
+
+def default_driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else half of MemTotal (/proc/meminfo)
+    with a 1 GB floor and a 64 GB cap."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    with open("/proc/meminfo") as f:
+        total_kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    mb = int(total_kb / 1024 * DRIVER_MEM_SHARE)
+    return f"{max(1024, min(DRIVER_MEM_CAP_MB, mb))}m"
 
 
 def _local_dir() -> str:
@@ -102,7 +122,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g"))
+        .config("spark.driver.memory", driver_memory or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
@@ -290,6 +310,25 @@ def rebind_to_session(df, session: SparkSession):
     jrdd = jdf.queryExecution().toRdd()
     new_jdf = session._jsparkSession.internalCreateDataFrame(jrdd, jdf.schema(), False)
     return _DF(new_jdf, session)
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (DDL ``schema``, e.g.
+    ``"src string, dst string"``; ``None`` cells are NULL) that never
+    touches a Python worker.
+
+    ``spark.createDataFrame`` of a Python list builds a Python RDD, so
+    every job that reads it starts the pyspark daemon and its workers
+    just to hand back constants.  Here the rows travel as ONE JSON string
+    literal, parsed in the JVM by ``from_json`` and expanded by ``inline``
+    over a one-row range: a single-task JVM job, and a plan whose size
+    does not grow with the row count (a literal per cell cost 1-3 ms
+    of plan building per cell).  The text never enters a SQL string."""
+    struct = DataType.fromDDL(schema)
+    payload = json.dumps([dict(zip(struct.names, row)) for row in rows])
+    return spark.range(0, 1, 1, 1).select(
+        F.inline(F.from_json(F.lit(payload), ArrayType(struct)))
+    )
 
 
 def stop_all() -> None:

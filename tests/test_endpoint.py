@@ -372,3 +372,36 @@ def test_load_stored_queries_property_file(tmp_path):
     assert qs["my_describe_query"] == "describe <{{my_parameter}}>"
     assert qs["long"] == "SELECT ?s WHERE { ?s ?p ?o }"
     assert len(qs) == 3
+
+
+def test_evaluation_failure_is_server_error(spark, tmp_path):
+    """A query that parses and plans but fails while running answers 500;
+    a planner rejection stays a 400 protocol error."""
+    import shutil
+
+    svc_dir = str(tmp_path / "svc")
+    spark.createDataFrame(
+        [("<urn:a>", "<urn:p>", "<urn:b>", None)],
+        "subj string, pred string, obj string, ctx string",
+    ).write.parquet(svc_dir)
+    svc = spark.read.parquet(svc_dir)
+    g = spark.createDataFrame(
+        [("<urn:a>", "<urn:p>", "<urn:c>", None)],
+        "subj string, pred string, obj string, ctx string",
+    )
+    endpoint = SparqlEndpoint(g, services={"urn:svc": svc}).start()
+    try:
+        def status(q: str) -> int:
+            try:
+                _get(f"http://127.0.0.1:{endpoint.port}/sparql?query=" + urllib.parse.quote(q))
+            except urllib.error.HTTPError as exc:
+                return exc.code
+            return 200
+
+        q = "SELECT ?o WHERE { SERVICE <urn:svc> { <urn:a> <urn:p> ?o } }"
+        assert status(q) == 200
+        shutil.rmtree(svc_dir)  # the federated store's files are gone
+        assert status(q) == 500
+        assert status(q.replace("urn:svc", "urn:unregistered")) == 400
+    finally:
+        endpoint.stop()

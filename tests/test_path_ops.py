@@ -14,13 +14,16 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
+from halyard_spark.query import path as path_mod
 from halyard_spark.query.path import (
     reachable_from,
     transitive_closure,
     zero_or_one_path,
 )
+from halyard_spark.session import local_frame
 
 
 def rows(df):
@@ -28,9 +31,7 @@ def rows(df):
 
 
 def edges_df(spark, pairs):
-    return spark.createDataFrame(
-        [(str(a), str(b)) for a, b in pairs], "src string, dst string"
-    )
+    return local_frame(spark, [(str(a), str(b)) for a, b in pairs], "src string, dst string")
 
 
 def brute_closure(pairs, min_length=1):
@@ -115,3 +116,139 @@ def test_zero_or_one_path_identity_domain(spark):
 def test_empty_edges(spark):
     df = edges_df(spark, []).where(F.lit(False))
     assert rows(transitive_closure(df)) == []
+
+
+# -------------------------------------------- driver-seeded bound paths
+
+P = "<urn:p>"
+
+
+def iri(n):
+    return f"<urn:n{n}>"
+
+
+def store_of(spark, pairs):
+    """A quad store of ``pairs`` under predicate P, built in the JVM."""
+    return local_frame(
+        spark,
+        [(iri(a), P, iri(b), None) for a, b in pairs],
+        "subj string, pred string, obj string, ctx string",
+    )
+
+
+def oracle(pairs, seeds, min_length, max_length=None):
+    """(seed, reached) pairs of path length in [min_length, max_length]
+    from brute_closure: length >= 2 is one edge followed by a >= 1 path;
+    the zero-length arm matches every seed, in the graph or not."""
+    edges = {(str(a), str(b)) for a, b in pairs}
+    if max_length == 1:
+        reach = edges
+    elif min_length == 2:
+        plus = brute_closure(pairs, min_length=1)
+        reach = {(a, c) for a, b in edges for b2, c in plus if b == b2}
+    else:
+        reach = set(brute_closure(pairs, min_length=1))
+    out = {(a, b) for a, b in reach if a in seeds}
+    if min_length == 0:
+        out |= {(s, s) for s in seeds}
+    return sorted(out)
+
+
+def _graphs():
+    rng = random.Random(20261017)
+    digraph = sorted({(rng.randrange(24), rng.randrange(24)) for _ in range(50)})
+    ring = [(i, (i + 1) % 10) for i in range(10)]
+    star = [(0, leaf) for leaf in range(1, 13)] + [(5, 40), (40, 41)]
+    return {"digraph": digraph, "ring": ring, "star": star}
+
+
+def test_sparql_bound_paths_match_oracle(spark):
+    """Bound-source and bound-object ``*`` / ``+`` / ``?`` through
+    sparql_query, and the both-bound ASK, against brute_closure."""
+    from halyard_spark.query.sparql import sparql_query
+
+    mods = {"*": (0, None), "+": (1, None), "?": (0, 1)}
+    for name, pairs in _graphs().items():
+        store = store_of(spark, pairs)
+        rev = [(b, a) for a, b in pairs]
+        for seed in (pairs[0][0], 99):
+            for mod, (lo, hi) in mods.items():
+                fwd = sparql_query(store, f"SELECT ?o WHERE {{ {iri(seed)} {P}{mod} ?o }}")
+                want = [b for _, b in oracle(pairs, {str(seed)}, lo, hi)]
+                assert sorted(r.o for r in fwd.collect()) == sorted(map(iri, want)), (name, seed, mod)
+                back = sparql_query(store, f"SELECT ?s WHERE {{ ?s {P}{mod} {iri(seed)} }}")
+                want = [b for _, b in oracle(rev, {str(seed)}, lo, hi)]
+                assert sorted(r.s for r in back.collect()) == sorted(map(iri, want)), (name, seed, mod)
+        a, b = pairs[0]
+        for o, hit in ((b, True), (99, False)):
+            ask = sparql_query(store, f"ASK {{ {iri(a)} {P}+ {iri(o)} }}")
+            assert ask.collect()[0]["ask"] is hit, (name, o)
+
+
+@pytest.mark.parametrize("hops,rows_cap", [(8, 4096), (1, 4096), (8, 2)])
+def test_driver_seeds_match_oracle_across_handoff(spark, monkeypatch, hops, rows_cap):
+    """reachable_from with driver-side seeds for min_length 0/1/2, with the
+    default probe bounds and with bounds small enough that the traversal
+    hands its frontier and seen pairs to the fused rounds mid-way."""
+    monkeypatch.setattr(path_mod, "_PROBE_HOPS", hops)
+    monkeypatch.setattr(path_mod, "_PROBE_ROWS", rows_cap)
+    for name, pairs in _graphs().items():
+        df = edges_df(spark, pairs)
+        seeds = [str(pairs[0][0]), str(pairs[-1][0]), "99"]
+        for min_length in (0, 1, 2):
+            got = rows(reachable_from(df, seeds, min_length=min_length))
+            assert got == oracle(pairs, set(seeds), min_length), (name, min_length)
+        got = rows(reachable_from(df, seeds, min_length=0, max_length=1))
+        assert got == oracle(pairs, set(seeds), 0, 1), name
+
+
+def test_bound_paths_values_describe_insert_start_no_python_worker(spark, monkeypatch):
+    """No query or update path builds its constants with createDataFrame
+    (a Python RDD, so every job reading it would start Python workers)."""
+    from pyspark.sql import SparkSession
+
+    from halyard_spark.query.sparql import sparql_query, sparql_update
+
+    pairs = [(0, 1), (1, 2), (2, 0), (3, 1)]
+    store = store_of(spark, pairs)
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("createDataFrame called on a query path")
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", refuse)
+    monkeypatch.setattr(path_mod, "_PROBE_HOPS", 1)  # the fused rounds too
+    for q in (
+        f"SELECT ?o WHERE {{ {iri(0)} {P}* ?o }}",
+        f"SELECT ?s WHERE {{ ?s {P}+ {iri(1)} }}",
+        f"SELECT ?o WHERE {{ {iri(3)} {P}? ?o }}",
+        f"SELECT ?s ?o WHERE {{ VALUES ?s {{ {iri(0)} {iri(3)} UNDEF }} ?s {P} ?o }}",
+    ):
+        assert sparql_query(store, q).collect(), q
+    empty = sparql_query(store, f"SELECT ?s ?o WHERE {{ VALUES ?s {{ }} ?s {P} ?o }}")
+    assert empty.collect() == [] and dict(empty.dtypes)["s"] == "string"
+    assert sparql_query(store, f"ASK {{ {iri(3)} {P}+ {iri(0)} }}").collect()[0]["ask"]
+    described = sparql_query(store, f"DESCRIBE {iri(3)}").collect()
+    assert (iri(3), P, iri(1)) in [tuple(r) for r in described]
+    updated = sparql_update(store, f"INSERT DATA {{ {iri(7)} {P} {iri(8)} }}")
+    assert updated.count() == len(pairs) + 1
+
+
+def test_bound_star_closure_job_gate(spark):
+    """``?x p* <hub>`` on a star forest: two probe hops and the result
+    frame, never the edge checkpoint, count and degree probe."""
+    from halyard_spark.endpoint import results_json
+    from halyard_spark.query.sparql import sparql_query
+
+    pairs = [(100 * h + leaf, 100 * h) for h in range(1, 6) for leaf in range(1, 7)]
+    store = store_of(spark, pairs)
+    sc = spark.sparkContext
+    group = "bound-star-closure-gate"
+    sc.setJobGroup(group, group)
+    try:
+        body = results_json(sparql_query(store, f"SELECT ?x WHERE {{ ?x {P}* {iri(300)} }}"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    got = sorted(b["x"]["value"] for b in body["results"]["bindings"])
+    assert got == sorted(f"urn:n{n}" for n in [300] + [300 + leaf for leaf in range(1, 7)])
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= 9, jobs
