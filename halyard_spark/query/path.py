@@ -6,11 +6,12 @@ re-entering the strategy per step
 nested loop whose work grows with the reachable subgraph.  Two
 distributed forms, chosen by what the seeds are and how far they reach:
 
-- Seeds known on the driver (the constant of ``<s> p* ?o``): per-hop
-  probes.  Each hop is one job that reads the edges leaving the
-  frontier from the lazy edge scan; the frontier and the seen pairs stay
-  on the driver, where they are exactly counted.  Nothing is
-  checkpointed, and the probe starts no Python worker.
+- Seeds known on the driver (the constant of ``<s> p* ?o``): up to two
+  per-hop probes.  Each hop reads the edges leaving the frontier from
+  the lazy edge scan with an IN-list filter and a bounded collect; the
+  frontier and the seen pairs stay on the driver, where they are
+  exactly counted.  Nothing is checkpointed, and the probe starts no
+  Python worker.
 - Seeds in a DataFrame, or a probe that outgrew its bounds: the edge set
   is deduped and checkpointed once, then BFS rounds of up to 32 fused
   hash-join hops each, with dedup against the seen set and a
@@ -150,22 +151,30 @@ def transitive_closure(
 # seeds stays on the driver while each hop reads at most _PROBE_ROWS edges,
 # the pairs found stay within _PROBE_ROWS and it needs at most _PROBE_HOPS
 # edge scans.  Past any bound it hands its state to the fused rounds.
-_PROBE_HOPS = 8
+# Measured on 4 cores over a 611k-quad store: a probe hop is a scan of the
+# store, ~100 ms wall on 1-4 partitions and ~210 ms on 32, while the
+# fused rounds cost ~750-830 ms once.  Two hops cover a constant's
+# neighbourhood plus the hop that proves it closed (the star shape of
+# `?x p* <c>`).  A deeper traversal pays its probe hops on top of the
+# rounds, so the bound stays low: on 32 partitions a 12-node chain took
+# 1.23 s with 2 hops, 1.43 s with 3 and 2.58 s with 8.  At the row bound
+# the wasted 4097-row collect costs about one hop.
+_PROBE_HOPS = 2
 _PROBE_ROWS = 4096
 
 
 def _probe(edges: DataFrame, roots: list[str], advance: int, hops_left: int):
-    """Driver-side BFS from ``roots``: per hop, one bounded ``collect``
-    reads the edges leaving the not-yet-expanded frontier nodes from the
-    lazy ``edges`` scan (the exactly counted frontier rides in the
-    filter, a broadcast that parquet can push down), and the join with
-    the frontier, the dedup against the seen pairs and the count happen
-    on the driver.  That is one job on a one-partition scan; on a wider
-    one Spark's incremental ``limit`` adds a job per 4x more partitions.
-    Adjacency read once is reused, so cycles back into expanded nodes
-    cost no scan.  ``advance`` exact steps come first (the min_length
-    seed advance of :func:`reachable_from`), then BFS hops while
-    ``hops_left != 0`` (-1 = to convergence).
+    """Driver-side BFS from ``roots``: per hop, the lazy ``edges`` scan
+    is filtered by ``src IN (...)`` over the not-yet-expanded frontier
+    nodes (an IN-list built from the exactly counted frontier) and read
+    with ``limit(_PROBE_ROWS + 1).collect()``; the join with the
+    frontier, the dedup against the seen pairs and the count happen on
+    the driver.  A hop is one job on a one-partition scan; on a wider one
+    Spark's incremental ``limit`` runs more (measured 2 jobs on 4
+    partitions, 4 on 32).  Adjacency read once is reused, so cycles back
+    into expanded nodes cost no scan.  ``advance`` exact steps come first
+    (the min_length seed advance of :func:`reachable_from`), then BFS
+    hops while ``hops_left != 0`` (-1 = to convergence).
 
     Returns ``(frontier, seen, advance, hops_left, done)``: with ``done``
     the pairs in ``seen`` are the whole answer; otherwise a bound was hit
@@ -234,10 +243,10 @@ def reachable_from(
     seeded from the bound side, carrying (root, node) pairs, so work is
     proportional to the reachable subgraph, not the whole graph.
 
-    Driver-side seeds start with :func:`_probe`: one job per hop, each a
-    filter on the LAZY edge scan, with the frontier and the seen pairs
-    kept on the driver.  A traversal that converges within its bounds
-    (a constant's neighbourhood, a star, a short chain) never
+    Driver-side seeds start with :func:`_probe`: per hop one bounded
+    collect of an IN-list filter on the LAZY edge scan, with the frontier
+    and the seen pairs kept on the driver.  A traversal that converges
+    within its bounds (a constant's one-hop neighbourhood, a star) never
     materializes the edge set and returns a JVM-local frame.  Once the
     traversal outgrows those hops, or when ``sources`` is a DataFrame,
     the fused rounds below run, resuming from the probe's frontier and

@@ -320,14 +320,22 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFram
     ``spark.createDataFrame`` of a Python list builds a Python RDD, so
     every job that reads it starts the pyspark daemon and its workers
     just to hand back constants.  Here the rows travel as ONE JSON string
-    literal, parsed in the JVM by ``from_json`` and expanded by ``inline``
-    over a one-row range: a single-task JVM job, and a plan whose size
-    does not grow with the row count (a literal per cell cost 1-3 ms
-    of plan building per cell).  The text never enters a SQL string."""
+    in a one-row JVM ``LocalRelation``, parsed by ``from_json`` and
+    expanded by ``inline``.  The plan, and its string form in the SQL
+    listener and the event log, stay the same size at any row count: the
+    relation's data is not part of the plan text, where a string literal
+    would be (10k pairs made a 300 KB plan string), and a literal per
+    cell cost 1-3 ms of plan building per cell.  The text never enters a
+    SQL string."""
     struct = DataType.fromDDL(schema)
     payload = json.dumps([dict(zip(struct.names, row)) for row in rows])
-    return spark.range(0, 1, 1, 1).select(
-        F.inline(F.from_json(F.lit(payload), ArrayType(struct)))
+    jvm = spark._jvm
+    text = spark._jsparkSession.createDataset(
+        jvm.java.util.Collections.singletonList(payload),
+        jvm.org.apache.spark.sql.Encoders.STRING(),
+    )
+    return DataFrame(text.toDF(), spark).select(
+        F.inline(F.from_json("value", ArrayType(struct)))
     )
 
 

@@ -185,11 +185,12 @@ def test_sparql_bound_paths_match_oracle(spark):
             assert ask.collect()[0]["ask"] is hit, (name, o)
 
 
-@pytest.mark.parametrize("hops,rows_cap", [(8, 4096), (1, 4096), (8, 2)])
+@pytest.mark.parametrize("hops,rows_cap", [(2, 4096), (8, 4096), (1, 4096), (2, 2)])
 def test_driver_seeds_match_oracle_across_handoff(spark, monkeypatch, hops, rows_cap):
     """reachable_from with driver-side seeds for min_length 0/1/2, with the
-    default probe bounds and with bounds small enough that the traversal
-    hands its frontier and seen pairs to the fused rounds mid-way."""
+    default probe bounds, a deeper probe, and bounds small enough that the
+    traversal hands its frontier and seen pairs to the fused rounds
+    mid-way."""
     monkeypatch.setattr(path_mod, "_PROBE_HOPS", hops)
     monkeypatch.setattr(path_mod, "_PROBE_ROWS", rows_cap)
     for name, pairs in _graphs().items():
