@@ -262,7 +262,7 @@ def write_baseline_md(result: dict) -> None:
                 "numbers are informational only.",
                 "",
                 "Codec investigation (round 5): zstd for shuffle+parquet",
-                "(SPARK_GRAFT_CODEC knob) was A/B-tested as a",
+                "(a session knob, since removed) was A/B-tested as a",
                 "bandwidth-for-CPU trade.  At the pinned 8-core leg in",
                 "bandwidth-starved windows it won consistently (+11%/+32%,",
                 "both orders); at 2 cores it lost ~11% (CPU-bound); at the",

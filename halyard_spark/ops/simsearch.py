@@ -13,6 +13,8 @@
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -80,9 +82,6 @@ def cosine_topk(
     )
 
 
-_BUCKETS_EXPR_CACHE: dict = {}
-
-
 def _planes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     rng = np.random.default_rng(seed)
     return rng.standard_normal((n_planes, dim)).round(6).tolist()
@@ -141,24 +140,23 @@ def lsh_buckets(
     tables trade compute for recall without touching bucket selectivity.
     Output explodes to n_tables rows per input row; at scale both sides of
     the candidate join shuffle only (id, bucket) pairs."""
-    # ONE SQL expression for all tables (see lsh_bucket): per-element
-    # F.lit made plan BUILD dominate the query wall at tables x planes x
-    # dim, and even one F.expr per table still paid 16 parses.  The parsed
-    # Column is memoized per parameter tuple — planes are deterministic
-    # functions of (dim, n_planes, n_tables, seed), the ~50 KB expression
-    # costs ~1 s to parse, and every caller pair (query side + corpus
-    # side) uses the same parameters.  This caches a PLAN FRAGMENT, never
-    # data: each use still computes from its input frame.
-    key = (dim, n_planes, n_tables, seed, vec_col)
-    col = _BUCKETS_EXPR_CACHE.get(key)
-    if col is None:
-        tables = ", ".join(
-            f"concat('{t}:', {_bucket_bits_sql(vec_col, _planes(dim, n_planes, seed + t))})"
-            for t in range(n_tables)
-        )
-        col = F.explode(F.expr(f"array({tables})"))
-        _BUCKETS_EXPR_CACHE[key] = col
-    return emb.withColumn("bucket", col)
+    return emb.withColumn("bucket", _buckets_expr(dim, n_planes, n_tables, seed, vec_col))
+
+
+@functools.lru_cache(maxsize=8)
+def _buckets_expr(dim: int, n_planes: int, n_tables: int, seed: int, vec_col: str) -> Column:
+    """ONE SQL expression for all tables (see lsh_bucket): per-element
+    F.lit made plan BUILD dominate the query wall at tables x planes x
+    dim, and even one F.expr per table still paid 16 parses.  Memoized
+    per parameter tuple: the planes are deterministic functions of the
+    parameters, the ~50 KB expression costs ~1 s to parse, and every
+    caller pair (query side + corpus side) uses the same parameters.
+    This caches a PLAN FRAGMENT, never data."""
+    tables = ", ".join(
+        f"concat('{t}:', {_bucket_bits_sql(vec_col, _planes(dim, n_planes, seed + t))})"
+        for t in range(n_tables)
+    )
+    return F.explode(F.expr(f"array({tables})"))
 
 
 def ivf_assign(

@@ -64,72 +64,28 @@ SELECT DISTINCT src, dst FROM (
 )"""
 
 
-_LATENCY_MODE_MAX_BYTES = 64 * 1024 * 1024
-
-
-def _latency_clone(cur: DataFrame):
-    """(loop_df, loop_session) for the star-round fixed point.
-
-    The rounds iterate TINY shuffles (the edge set shrinks toward one row
-    per node), so with AQE each round's 3 exchanges materialize as
-    separate jobs and the loop pays ~4 scheduling floors per round —
-    measured 3.5-4.2 s at sf0.1 where the same rounds with AQE OFF and a
-    size-derived static width run 2.0-2.5 s (one job per round).  AQE off
-    is wrong for everything else on the session (and a session conf flip
-    would leak into concurrently-running pipeline jobs), so the loop runs
-    on a ``newSession()`` clone holding the latency conf, over the
-    already-materialized edge RDD.  Gate: only when the measured edge set
-    is small (< 64 MB); at real scale data volume, not scheduling, is the
-    budget, and the caller's AQE session (skew splitting, coalescing)
-    keeps the loop.  Width tracks the measured bytes, never a constant:
-    ~1 partition per MB, floored at 4 — sf0.1's 1.5 MB edge set gets 4,
-    a 50 MB one gets 32+."""
-    stats = cur.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.avg(F.length("src") + F.length("dst")).alias("b"),
-    ).first()
-    n_edges = stats["n"] or 0
-    est_bytes = int(n_edges * ((stats["b"] or 0.0) + 16))
-    if not (0 < est_bytes <= _LATENCY_MODE_MAX_BYTES):
-        return cur, None
-    try:
-        from halyard_spark.session import rebind_to_session
-
-        clone = cur.sparkSession.newSession()
-        clone.conf.set("spark.sql.adaptive.enabled", "false")
-        width = max(4, min(64, est_bytes // (1024 * 1024) + 1))
-        clone.conf.set("spark.sql.shuffle.partitions", str(width))
-        return rebind_to_session(cur, clone), clone
-    except Exception:
-        return cur, None  # clone API unavailable: keep the caller's AQE path
-
-
 def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     """edges(src: string, dst: string) -> (node, component).
 
     component = lexicographic min of the node's component.  Includes every
     node that appears in any edge; callers union in isolated nodes.
     """
-    caller = edges.sparkSession
+    spark = edges.sparkSession
+    # no checkpoint before the loop: round 1 reads the distinct input, and
+    # a lazy checkpoint here measured no fewer jobs and no less wall (the
+    # pipeline's 909-edge entity graph at local[4])
     cur = edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct()
-    # LAZY checkpoint: _latency_clone's sizing aggregation is the next
-    # action and materializes it — fusing the two saves a whole scheduled
-    # job on the query's critical path (an eager checkpoint here ran the
-    # distinct, then the agg re-scanned the checkpoint)
-    cur = cur.localCheckpoint(eager=False)
-    cur, clone = _latency_clone(cur)
-    loop_spark = clone if clone is not None else caller
-    # unique per invocation: concurrent pipeline threads share the caller
-    # session's temp-view namespace when no clone engages
+    # unique per invocation: concurrent pipeline threads share the
+    # session's temp-view namespace
     view = f"cc_round_{uuid.uuid4().hex[:12]}"
     prev_sig: tuple | None = None
     try:
         for _ in range(max_iter):
             cur.createOrReplaceTempView(view)
-            # lazy checkpoint + signature agg = ONE job per round (the agg
-            # action materializes the checkpoint); an eager checkpoint plus
-            # a separate agg would double the per-round scheduling latency
-            cur = loop_spark.sql(_ROUND_SQL.format(v=view)).localCheckpoint(eager=False)
+            # lazy checkpoint + signature agg = ONE action per round (the
+            # agg materializes the checkpoint); an eager checkpoint plus a
+            # separate agg would add a scan job to every round
+            cur = spark.sql(_ROUND_SQL.format(v=view)).localCheckpoint(eager=False)
             sig_row = cur.agg(
                 F.count(F.lit(1)).alias("n"),
                 F.expr("bit_xor(xxhash64(src, dst))").alias("h"),
@@ -140,16 +96,9 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
             prev_sig = sig
     finally:
         try:
-            loop_spark.catalog.dropTempView(view)
+            spark.catalog.dropTempView(view)
         except Exception:
             pass
-    if clone is not None:
-        # the loop's last round is materialized (the signature agg ran on
-        # it); re-home it so the assembly below — and everything callers
-        # compose with it — plans on the caller's AQE session
-        from halyard_spark.session import rebind_to_session
-
-        cur = rebind_to_session(cur, caller)
     # converged edge set is a forest of stars (node -> component root)
     members = cur.select(F.col("src").alias("node"), F.col("dst").alias("component"))
     roots = cur.select(F.col("dst").alias("node"), F.col("dst").alias("component"))

@@ -13,6 +13,7 @@ import json
 import os
 import shutil
 import tempfile
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -97,26 +98,21 @@ def get_spark(
     plan tuned at sf0.01 still holds at 100 TB.
     """
     cpus = cpus or DEFAULT_CPUS
+    # Core-count width.  run_pipeline re-sizes it per job from its own
+    # input (adaptive_shuffle_width); a blanket-high initialPartitionNum
+    # instead turned every small shuffle into ~1024 tiny tasks and cost
+    # 5-20x on shuffle-iterating stages (CC rounds, LSH band joins).
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
-    aqe = os.environ.get("SPARK_GRAFT_AQE", "1") == "1"
-    # Shuffle WIDTH must scale with data volume, not core count — but NOT
-    # via a blanket-high initialPartitionNum: a 1024 default (tried after
-    # the sf1.0 spill rehearsal) turned every small-scale shuffle into
-    # ~1024 tiny tasks and cost 5-20x on shuffle-iterating stages (CC
-    # rounds, LSH band joins, the triples build) — scheduling and
-    # per-task overhead, not data, dominated.  Width is instead sized
-    # per JOB from the job's own input volume: run_pipeline calls
-    # adaptive_shuffle_width(...) and sets spark.sql.shuffle.partitions
-    # (a runtime conf) before its stages, so the sf1.0 corpus gets
-    # hundreds of sort partitions (no external-sort spill wall) while
-    # bench/test scales keep the core-count width that measured fastest.
-    # The env knob remains for experiments.
-    initial_partitions = os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS")
+    conf = dict(extra_conf or {})
+    if "spark.local.dir" not in conf:
+        # shuffle/spill on tmpfs when available: local-mode shuffles are
+        # disk round-trips on the driver host
+        conf["spark.local.dir"] = _local_dir()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", str(aqe).lower())
+        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
@@ -126,28 +122,8 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
-        # shuffle/spill on tmpfs when available: local-mode shuffles are
-        # disk round-trips on the driver host; a cluster has fast local
-        # SSDs per executor.  Keeps CPU scaling measurements honest.
-        .config("spark.local.dir", _local_dir())
     )
-    if initial_partitions:
-        builder = builder.config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            initial_partitions,
-        )
-    # Compression codec knob (shuffle + parquet together): on a
-    # bandwidth-bound host, trading abundant CPU for scarce memory
-    # bandwidth (zstd) is the same lever a 100-TB cluster pulls to keep
-    # shuffle volume off the network.  Unset = Spark defaults
-    # (lz4 shuffle, snappy parquet).
-    codec = os.environ.get("SPARK_GRAFT_CODEC")
-    if codec:
-        builder = (
-            builder.config("spark.io.compression.codec", codec)
-            .config("spark.sql.parquet.compression.codec", codec)
-        )
-    for k, v in (extra_conf or {}).items():
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -156,6 +132,19 @@ def get_spark(
     except Exception:
         pass  # already shipped in this context, or running from repo root
     return spark
+
+
+def _local_bytes(uris: list[str]) -> int | None:
+    """On-disk bytes of a scan's ``inputFiles()``, or None when any of
+    them is not a local file."""
+    total = 0
+    for uri in uris:
+        p = urlparse(uri)
+        path = unquote(p.path)
+        if p.scheme not in ("file", "") or not os.path.exists(path):
+            return None
+        total += os.path.getsize(path)
+    return total
 
 
 def adaptive_shuffle_width(spark: SparkSession, df, expansion: float = 4.0,
@@ -186,15 +175,8 @@ def adaptive_shuffle_width(spark: SparkSession, df, expansion: float = 4.0,
         floor = max(int(spark.sparkContext.defaultParallelism), 8)
     except Exception:
         floor = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    total = 0
     try:
-        from urllib.parse import unquote, urlparse
-
-        for uri in df.inputFiles():
-            p = urlparse(uri)
-            path = unquote(p.path) if p.scheme in ("file", "") else None
-            if path and os.path.exists(path):
-                total += os.path.getsize(path)
+        total = _local_bytes(df.inputFiles()) or 0
     except Exception:
         total = 0
     if total <= 0:
@@ -240,20 +222,9 @@ def widen_small_input(df, target: int | None = None, max_bytes_per_core: int = 8
         return df
     if not files or len(files) >= target:
         return df
-    total = 0
-    try:
-        from urllib.parse import unquote, urlparse
-
-        for uri in files:
-            p = urlparse(uri)
-            path = unquote(p.path) if p.scheme in ("file", "") else None
-            if path is None or not os.path.exists(path):
-                return df  # remote store: let scan splits decide
-            total += os.path.getsize(path)
-    except Exception:
-        return df
-    if total > target * max_bytes_per_core:
-        return df
+    total = _local_bytes(files)
+    if total is None or total > target * max_bytes_per_core:
+        return df  # remote store (scan splits decide) or already big
     return df.repartition(target)
 
 
@@ -288,28 +259,6 @@ def checkpoint_parallel(df, target: int | None = None):
     if n >= target:
         return ck
     return ck.repartition(target).localCheckpoint(eager=True)
-
-
-def rebind_to_session(df, session: SparkSession):
-    """Re-home a MATERIALIZED (checkpointed) DataFrame onto another
-    SparkSession that shares the same SparkContext.
-
-    ``SparkSession.newSession()`` gives an isolated SQL-conf clone — the
-    supported way to run one computation under different runtime settings
-    (e.g. a latency-tuned fixed-point loop) without mutating the conf that
-    concurrently-running jobs on the caller's session are planned with.
-    DataFrames are session-bound, so the clone needs its own frame over
-    the already-materialized rows; wrapping the checkpointed InternalRow
-    RDD costs nothing (no recompute, no Python boundary).  Callers MUST
-    pass an eagerly-materialized frame (localCheckpoint) — rebinding a
-    lazy plan would silently re-plan it under the target session's conf.
-    """
-    from pyspark.sql import DataFrame as _DF
-
-    jdf = df._jdf
-    jrdd = jdf.queryExecution().toRdd()
-    new_jdf = session._jsparkSession.internalCreateDataFrame(jrdd, jdf.schema(), False)
-    return _DF(new_jdf, session)
 
 
 def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:

@@ -1,21 +1,23 @@
 """Full JSON-LD 1.0 expansion (sources/jsonld.py).
 
-Golden test: the reference's own ND-JSON-LD fixture
-(rio/src/test/resources/com/msd/gin/halyard/rio/efo_test.ndjsonld) must
-expand to exactly the triple set of its Turtle golden (efo_test.ttl) —
-the same equivalence the reference asserts via RDF4J in
+Golden test: the ND-JSON-LD fixture tests/fixtures/rio/efo_test.ndjsonld
+(one JSON-LD 1.0 document per line: term definitions with type and
+language coercion, value objects, native numbers and booleans, @vocab)
+must expand to exactly the triple set of its hand-written Turtle twin
+(efo_test.ttl) — the same equivalence the reference asserts via RDF4J in
 NDJSONLDParserTest.java:43-52, here with our own Turtle parser reading
 the golden side.
 """
 
 import json
+import os
 
 import pytest
 
 from halyard_spark import nt
 from halyard_spark.sources.jsonld import jsonld_to_rows
 
-REF_RIO = "/root/reference/rio/src/test/resources/com/msd/gin/halyard/rio"
+FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures", "rio")
 
 EX = "http://ex.org/"
 
@@ -32,14 +34,15 @@ def spo(text, scope=""):
 def test_efo_fixture_matches_turtle_golden():
     from halyard_spark.sources.turtle import parse_turtle
 
-    with open(f"{REF_RIO}/efo_test.ndjsonld") as f:
+    with open(f"{FIXTURES}/efo_test.ndjsonld") as f:
         got = set()
         for line in f:
             line = line.strip()
             if line:
                 got |= {(s, p, o) for s, p, o, _ in jsonld_to_rows(line, scope=line)}
-    with open(f"{REF_RIO}/efo_test.ttl") as f:
+    with open(f"{FIXTURES}/efo_test.ttl") as f:
         want = {(s, p, o) for s, p, o, _ in parse_turtle(f.read())}
+    assert len(want) == 43
     assert got == want  # no bnodes in the fixture: direct set equality
 
 

@@ -4,12 +4,14 @@
 - per-row content sha256 equality vs the source table,
 - determinism at two parallelism levels,
 - idempotent resume from lineage,
-- connected-components unit correctness on chains/cycles.
+- connected-components unit correctness on chains/cycles and against a
+  union-find oracle on seeded random graphs.
 """
 
 from __future__ import annotations
 
 import hashlib
+import random
 
 import pytest
 from pyspark.sql import functions as F
@@ -78,6 +80,59 @@ def test_connected_components_chain_and_cycle(spark):
         ("x", "x"), ("y", "x"), ("z", "x"),
         ("p", "p"), ("q", "p"),
     }
+
+
+def _union_find_components(edges):
+    """node -> min label of its component; roots are always the smaller
+    label, so each set's root is its minimum."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
+def _random_graph(kind, rng):
+    labels = iter(f"v{i:06d}" for i in rng.sample(range(10**6), 400))
+    edges = []
+    if kind == "path":  # 200 nodes, labels shuffled along the path
+        nodes = [next(labels) for _ in range(200)]
+        edges = list(zip(nodes, nodes[1:]))
+    elif kind == "star_forest":
+        for _ in range(12):
+            hub = next(labels)
+            edges += [(hub, next(labels)) for _ in range(rng.randint(1, 20))]
+    else:  # disjoint cycles plus isolated pairs
+        for n in range(3, 15):
+            ring = [next(labels) for _ in range(n)]
+            edges += list(zip(ring, ring[1:] + ring[:1]))
+        edges += [(next(labels), next(labels)) for _ in range(10)]
+    # random orientation, a few repeated edges
+    edges = [(a, b) if rng.random() < 0.5 else (b, a) for a, b in edges]
+    return edges + rng.sample(edges, 5)
+
+
+@pytest.mark.parametrize("kind", ["path", "star_forest", "cycles_and_pairs"])
+def test_connected_components_vs_union_find(spark, kind):
+    edges = _random_graph(kind, random.Random(7))
+    conf = {
+        k: spark.conf.get(k)
+        for k in ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    }
+    df = spark.createDataFrame(edges, "src string, dst string")
+    got = {r["node"]: r["component"] for r in cc.connected_components(df).collect()}
+    assert got == _union_find_components(edges)
+    # the rounds run on the caller's session and leave its conf alone
+    assert {k: spark.conf.get(k) for k in conf} == conf
 
 
 def test_pipeline_pr_vs_golden(spark, src, pipeline_out):
@@ -246,6 +301,24 @@ def test_resume_invalidates_downstream_on_extract_change(spark, tmp_path):
     # and the new class reached the store
     store = spark.read.parquet(f"{out}/store/spo")
     assert store.where(F.col("obj") == "<urn:entity:class:Zz>").count() > 0
+
+
+def test_get_spark_leaves_default_local_dir_alone(spark, tmp_path, monkeypatch):
+    """A caller that sets spark.local.dir gets no default scratch dir
+    created (the default is a tmpfs directory when one is writable)."""
+    from halyard_spark import session
+
+    def no_default():
+        raise AssertionError("default spark.local.dir created")
+
+    monkeypatch.setattr(session, "_local_dir", no_default)
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    again = session.get_spark(
+        shuffle_partitions=int(width), extra_conf={"spark.local.dir": str(tmp_path)}
+    )
+    assert again is spark
+    with pytest.raises(AssertionError):
+        session.get_spark(shuffle_partitions=int(width))
 
 
 def test_adaptive_shuffle_width(spark, tmp_path):

@@ -1,15 +1,16 @@
 """Turtle / TriG source (sources/turtle.py).
 
-Reference: RIO format dispatch tools/.../HalyardBulkLoad.java:251-259;
-golden fixtures rio/src/test/resources/com/msd/gin/halyard/rio/*.ttl
-(the reference JSONParser's own expected outputs, parsed here by the
-Turtle source and cross-checked against json_to_triples' emission).
+Reference: RIO format dispatch tools/.../HalyardBulkLoad.java:251-259.
+Golden fixtures: tests/fixtures/rio/*.ttl, written for this suite from
+the Turtle 1.1 grammar (a catalogue using every construct, plus JSON
+documents rendered as RDF), parsed strictly with pinned triple counts.
 """
 
 from __future__ import annotations
 
 import glob
 import gzip
+import json
 import os
 
 import pytest
@@ -23,7 +24,7 @@ from halyard_spark.sources.turtle import (
     turtle_files_to_triples,
 )
 
-REF_RIO = "/root/reference/rio/src/test/resources/com/msd/gin/halyard/rio/"
+FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures", "rio") + os.sep
 
 XSD = "http://www.w3.org/2001/XMLSchema#"
 RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
@@ -185,25 +186,25 @@ def test_comments_ignored():
     assert len(quads) == 1
 
 
-# ------------------------------------------------- reference fixture goldens
+# ----------------------------------------------------------- fixture goldens
 
 
 @pytest.mark.parametrize(
     "name,count",
     [
-        ("example.ttl", 183),
+        ("example.ttl", 108),
         ("efo_test.ttl", 43),
-        ("nestedArrays.ttl", 31),
-        ("primitives.ttl", 50),
+        ("nestedArrays.ttl", 35),
+        ("primitives.ttl", 37),
         ("rootArray.ttl", 12),
         ("empty.ttl", 1),
         ("emptyObj.ttl", 3),
     ],
 )
 def test_reference_fixture_parses_strict(name, count):
-    """Every reference .ttl golden parses with dirty tolerance OFF and
-    yields a stable triple count."""
-    text = open(REF_RIO + name).read()
+    """Every .ttl golden parses with dirty tolerance OFF and yields a
+    stable triple count."""
+    text = open(FIXTURES + name).read()
     quads = parse_turtle(text, dirty_ok=False)
     assert len(quads) == count
     for s, p, o, _ in quads:  # every term is valid N-Triples lexical form
@@ -211,15 +212,16 @@ def test_reference_fixture_parses_strict(name, count):
 
 
 def test_efo_fixture_values():
-    quads = parse_turtle(open(REF_RIO + "efo_test.ttl").read(), dirty_ok=False)
+    quads = parse_turtle(open(FIXTURES + "efo_test.ttl").read(), dirty_ok=False)
     got = {
         (s, o)
         for s, p, o, _ in quads
         if p == "<http://www.w3.org/2000/01/rdf-schema#label>"
     }
-    assert ("<http://www.ebi.ac.uk/efo/EFO_0007123>", '"So-Eum"@en') in got
+    assert ("<http://example.org/efo/F0008>", '"So-Eum"@en') in got
+    assert ("<http://example.org/efo/F0006>", '"mouse strain"@en-gb') in got
     assert (
-        "<http://www.ebi.ac.uk/efo/EFO_0004827>",
+        "<http://example.org/efo/F0009>",
         '"economic and social preference"',
     ) in got
 
@@ -230,7 +232,7 @@ def test_efo_fixture_values():
 def test_read_turtle_and_nt_roundtrip(spark, tmp_path):
     """ttl -> quads -> N-Triples text -> NT source: identical triple set
     (the two sources agree on lexical form)."""
-    text = open(REF_RIO + "efo_test.ttl").read()
+    text = open(FIXTURES + "efo_test.ttl").read()
     f = tmp_path / "efo.ttl"
     f.write_text(text)
     df = read_turtle(spark, str(f))
@@ -247,11 +249,11 @@ def test_read_turtle_and_nt_roundtrip(spark, tmp_path):
 
 
 def test_read_turtle_gz_and_dispatch(spark, tmp_path):
-    raw = open(REF_RIO + "example.ttl", "rb").read()
+    raw = open(FIXTURES + "example.ttl", "rb").read()
     f = tmp_path / "example.ttl.gz"
     f.write_bytes(gzip.compress(raw))
     df = read_rdf(spark, str(f))  # extension dispatch strips the codec
-    assert df.count() == 183
+    assert df.count() == 108
 
 
 def test_bnode_scope_distinct_across_files(spark, tmp_path):
@@ -283,15 +285,24 @@ def test_sparql_load_turtle(spark, tmp_path):
 
 
 def test_cross_parser_golden_json_vs_ttl(spark):
-    """The reference ships each .json fixture with the .ttl its JSONParser
-    emits.  Our two independent sources (ND-JSON-LD-ish json_to_triples
-    is schema-driven, the Turtle parser is text-driven) won't produce the
-    reference's digest-named subjects, but the Turtle side must cover the
-    same literal VALUES the JSON holds — a cross-format content check."""
-    quads = parse_turtle(open(REF_RIO + "nestedArrays.ttl").read(), dirty_ok=False)
+    """nestedArrays.ttl is nestedArrays.json rendered as RDF.  The
+    schema-driven json_to_triples would name its nodes differently, but
+    the Turtle side must cover every leaf VALUE the JSON holds: a
+    cross-format content check."""
+    quads = parse_turtle(open(FIXTURES + "nestedArrays.ttl").read(), dirty_ok=False)
     lits = {o for _, _, o, _ in quads if o.startswith('"')}
-    for v in ("b", "c", "d", "g", "i"):  # every leaf value in nestedArrays.json
-        assert f'"{v}"' in lits or any(o.startswith(f'"{v}"') for o in lits)
+
+    def leaves(v):
+        if isinstance(v, dict):
+            v = list(v.values())
+        if isinstance(v, list):
+            return [x for e in v for x in leaves(e)]
+        return [v]
+
+    values = leaves(json.load(open(FIXTURES + "nestedArrays.json")))
+    assert len(values) == 10
+    for v in values:
+        assert nt.lit(v) in lits
 
 
 # ------------------------------------------------------------ fuzz gates
