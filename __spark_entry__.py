@@ -431,7 +431,7 @@ def q_turtle_load(spark, sf_dir):
     import os
     import tempfile
 
-    from halyard_spark.sources.turtle import read_turtle
+    from halyard_spark.sources.rio import read_rdf
 
     rows = sorted(
         (r["r_regionkey"], r["r_name"])
@@ -448,7 +448,7 @@ def q_turtle_load(spark, sf_dir):
     with os.fdopen(fd, "w") as f:
         f.write("\n".join(doc))
     try:
-        out = read_turtle(spark, path).select("subj", "pred", "obj")
+        out = read_rdf(spark, path, fmt="turtle").select("subj", "pred", "obj")
         out = spark.createDataFrame(out.collect(), out.schema)  # pin before unlink
     finally:
         os.unlink(path)

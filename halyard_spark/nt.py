@@ -19,6 +19,7 @@ Three implementations of the same codec, one per execution surface:
 
 from __future__ import annotations
 
+import hashlib
 import re as _re
 
 import pandas as pd
@@ -99,6 +100,12 @@ def iri_checked(s: str) -> str:
 
 def bnode(label: str) -> str:
     return f"_:{label}"
+
+
+def file_scope(path: str) -> str:
+    """Blank-node label scope of one input file (md5 of its path, 8 hex
+    digits): ``_:x`` in two files names two nodes, per RDF semantics."""
+    return hashlib.md5(path.encode()).hexdigest()[:8]
 
 
 def lit(s: str, lang: str | None = None, dtype: str | None = None) -> str:

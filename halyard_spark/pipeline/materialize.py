@@ -41,25 +41,20 @@ INDEXES = {
 }
 
 
-def write_sorted(df: DataFrame, path: str, keys: list[str], n: int | None = None) -> None:
+def write_sorted(df: DataFrame, path: str, keys: list[str]) -> None:
     """Range-partition + sort + parquet write for one index order.
 
-    ``n=None`` (the default) leaves the partition count to AQE: an
-    un-numbered ``repartitionByRange`` is an AQE-coalescable shuffle, so
-    it starts at ``initialPartitionNum`` ranges and merges down to the
-    advisory partition size — file count tracks DATA VOLUME instead of a
-    session constant (a pinned count meant ~7M-row external-sort spills
-    at the sf1.0 rehearsal, and would mean 32 multi-TB files at 100 TB).
-    Pass an explicit ``n`` only for tests that assert a layout."""
-    part = (
-        df.repartitionByRange(n, *[F.col(k) for k in keys])
-        if n is not None
-        else df.repartitionByRange(*[F.col(k) for k in keys])
-    )
+    The partition count is left to AQE: an un-numbered
+    ``repartitionByRange`` is an AQE-coalescable shuffle, so it starts at
+    ``initialPartitionNum`` ranges and merges down to the advisory
+    partition size — file count tracks DATA VOLUME instead of a session
+    constant (a pinned count meant ~7M-row external-sort spills at the
+    sf1.0 rehearsal, and would mean 32 multi-TB files at 100 TB)."""
+    part = df.repartitionByRange(*[F.col(k) for k in keys])
     part.sortWithinPartitions(*keys).write.mode("overwrite").parquet(path)
 
 
-def write_mirrors(cached: DataFrame, out_dir: str, n: int | None = None, indexes: list[str] | None = None) -> None:
+def write_mirrors(cached: DataFrame, out_dir: str, indexes: list[str] | None = None) -> None:
     """Write sorted index mirrors as concurrent jobs.  The input MUST
     already be materialized (a parquet read, or a cache filled by a single
     job): uncoordinated cache fills racing across concurrent jobs
@@ -71,7 +66,7 @@ def write_mirrors(cached: DataFrame, out_dir: str, n: int | None = None, indexes
 
     def write_one(item):
         name, keys = item
-        write_sorted(cached, f"{out_dir}/{name}", keys, n)
+        write_sorted(cached, f"{out_dir}/{name}", keys)
 
     with ThreadPoolExecutor(max_workers=len(items)) as pool:
         list(pool.map(write_one, items))
@@ -95,7 +90,7 @@ def iceberg_available(spark: SparkSession) -> bool:
             return False
 
 
-def write_sorted_iceberg(df: DataFrame, table: str, keys: list[str], n: int | None = None) -> None:
+def write_sorted_iceberg(df: DataFrame, table: str, keys: list[str]) -> None:
     """Iceberg form of write_sorted: same repartitionByRange +
     sortWithinPartitions physical shape (the file-level sort that powers
     min/max pruning), committed through writeTo(...).createOrReplace() —
@@ -103,21 +98,15 @@ def write_sorted_iceberg(df: DataFrame, table: str, keys: list[str], n: int | No
     (HalyardBulkLoad.java:548-567).  The dataframe transformation is
     identical to the parquet path, so every plan gate that verifies the
     parquet shape verifies this one; only the committer differs."""
-    part = (
-        df.repartitionByRange(n, *[F.col(k) for k in keys])
-        if n is not None
-        else df.repartitionByRange(*[F.col(k) for k in keys])
-    )
+    part = df.repartitionByRange(*[F.col(k) for k in keys])
     part.sortWithinPartitions(*keys).writeTo(table).using("iceberg").createOrReplace()
 
 
-def write_manifest(out_dir: str, count: int, n: int | None = None, spark: SparkSession | None = None) -> dict:
+def write_manifest(out_dir: str, count: int, spark: SparkSession | None = None) -> dict:
     manifest = {
         "snapshot_ts": int(time.time()),
         "triple_count": count,
         "indexes": list(INDEXES),
-        # None = AQE-sized (partition count tracks data volume)
-        "mirror_partitions": n,
     }
     text = json.dumps(manifest, indent=2)
     if "://" in out_dir and not out_dir.startswith("file://"):
@@ -143,7 +132,7 @@ def write_manifest(out_dir: str, count: int, n: int | None = None, spark: SparkS
     return manifest
 
 
-def write_store(triples: DataFrame, out_dir: str, mirror_partitions: int | None = None) -> dict:
+def write_store(triples: DataFrame, out_dir: str) -> dict:
     """Write the 3 sorted index mirrors; returns a snapshot manifest.
 
     The input is cached once (each mirror's range-sampling pass + full
@@ -160,15 +149,13 @@ def write_store(triples: DataFrame, out_dir: str, mirror_partitions: int | None 
     collapses at 32 slots; a pre-materialized cache is stable.
     """
     spark = triples.sparkSession
-    n = mirror_partitions  # None -> AQE-sized ranges (see write_sorted)
-
     cached = triples.persist()
     try:
         count = cached.count()  # single-job cache fill, then fan out
-        write_mirrors(cached, out_dir, n)
+        write_mirrors(cached, out_dir)
     finally:
         cached.unpersist()
-    return write_manifest(out_dir, count, n, spark=spark)
+    return write_manifest(out_dir, count, spark=spark)
 
 
 def read_index(spark: SparkSession, store_dir: str, index: str = "spo") -> DataFrame:

@@ -31,7 +31,6 @@ def bulk_load_rdf(
     default_graph: str | None = None,
     override_graph: str | None = None,
     truncate: bool = False,
-    mirror_partitions: int | None = None,
 ) -> dict:
     """Load RDF files (glob ok; format by extension) into a sorted store.
 
@@ -46,9 +45,7 @@ def bulk_load_rdf(
     """
     prev_width = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        return _bulk_load_rdf(
-            spark, path, out_dir, default_graph, override_graph, truncate, mirror_partitions
-        )
+        return _bulk_load_rdf(spark, path, out_dir, default_graph, override_graph, truncate)
     finally:
         # restore: leaking a load-sized width would ratchet every later
         # job on this session up to it (code-review regression)
@@ -62,7 +59,6 @@ def _bulk_load_rdf(
     default_graph: str | None,
     override_graph: str | None,
     truncate: bool,
-    mirror_partitions: int | None,
 ) -> dict:
     from halyard_spark.session import adaptive_shuffle_width
     from halyard_spark.sources.metrics import ParseMetrics
@@ -93,7 +89,7 @@ def _bulk_load_rdf(
         # pin BEFORE overwrite: the union lazily reads the very parquet
         # the store write replaces (read-overwrite-same-path hazard)
         quads = quads.localCheckpoint(eager=True)
-    manifest = materialize.write_store(quads, store_dir, mirror_partitions)
+    manifest = materialize.write_store(quads, store_dir)
     # snapshot AFTER the write action: accumulators/observations have run
     manifest["parse_metrics"] = metrics.snapshot()
     return manifest

@@ -177,9 +177,6 @@ def _run_pipeline(
     # made cached scans 2-3x SLOWER than parquet re-reads at 23M quads.
     store_dir = f"{out_dir}/store"
     spo_path = f"{store_dir}/spo"
-    # AQE-sized mirrors: partition count tracks triple volume (see
-    # materialize.write_sorted) instead of the session's core count
-    n_mirror = None
 
     t0 = time.time()
     resumed_tail = resume and lineage.stage_done(spark, out_dir, "triples", stage_fp["fp"], spo_path)
@@ -192,7 +189,7 @@ def _run_pipeline(
         # the cache fill + GC churn cost more than the second pass) —
         # the row-cache analog of the columnar-cache rejection noted in
         # pipeline/materialize.py.
-        materialize.write_sorted(emitted, spo_path, materialize.INDEXES["spo"], n_mirror)
+        materialize.write_sorted(emitted, spo_path, materialize.INDEXES["spo"])
     quads = materialize.read_index(spark, store_dir, "spo")
     triple_count = quads.count()  # footer-only (parquet aggregate pushdown)
     wall = int((time.time() - t0) * 1000)
@@ -205,8 +202,8 @@ def _run_pipeline(
         if resume and lineage.stage_done(spark, out_dir, "materialize", stage_fp["fp"], f"{store_dir}/pos"):
             report["materialize"] = {"rows": triple_count, "wall_ms": 0, "skipped": True}
             return
-        materialize.write_mirrors(quads, store_dir, n_mirror, indexes=["pos", "osp"])
-        manifest = materialize.write_manifest(store_dir, triple_count, n_mirror, spark=spark)
+        materialize.write_mirrors(quads, store_dir, indexes=["pos", "osp"])
+        manifest = materialize.write_manifest(store_dir, triple_count, spark=spark)
         w = int((time.time() - t1) * 1000)
         lineage.record_stage(spark, out_dir, "materialize", stage_fp["fp"], triple_count, w, manifest)
         report["materialize"] = {"rows": triple_count, "wall_ms": w, "skipped": False}

@@ -117,7 +117,7 @@ def transitive_closure(
     the input, dominated by shuffle-write + GC of rows the distinct
     then discarded.  BFS discovers each closure pair exactly ONCE
     (anti-join against the accumulated result), so total join volume is
-    O(|closure|); ceil(diameter / hops_per_round) driver actions buy
+    O(|closure|); ceil(diameter / hops per round) driver actions buy
     that linearity — the right trade at any scale where the closure
     itself is materializable.
     """
@@ -226,7 +226,6 @@ def reachable_from(
     sources: DataFrame | list[str],
     min_length: int = 1,
     max_length: int | None = None,
-    hops_per_round: int | None = None,
     _normalized: bool = False,
     _sources_from_edges: bool = False,
 ) -> DataFrame:
@@ -265,13 +264,14 @@ def reachable_from(
     pairs from a finite space.
 
     Fused rounds: the edge set is deduped and checkpointed once, and
-    ``hops_per_round`` 1-hop joins run as ONE Spark job before the
-    convergence action (``None`` = auto: 32 on degree-1 broadcast-joined
-    graphs, up to 16 on low-fanout (degree <= 4) ones, 4 otherwise).
-    Each round is still frontier-sized work (never a whole-graph
-    closure), but a diameter-D traversal costs ceil(D / hops_per_round)
-    driver actions instead of D.  Revisits across the round are dropped
-    at the round-end anti-join, so cyclic graphs stay bounded.
+    several 1-hop joins run as ONE Spark job before the convergence
+    action; the depth follows the graph's max out-degree (32 hops on
+    degree-1 graphs, up to 16 on low-fanout (degree <= 4) ones, 4
+    otherwise).  Each round is still frontier-sized work (never a
+    whole-graph closure), but a diameter-D traversal costs
+    ceil(D / depth) driver actions instead of D.  Revisits across the
+    round are dropped at the round-end anti-join, so cyclic graphs stay
+    bounded.
 
     Join strategy in the fused rounds: a checkpointed edge RDD carries
     NO size statistics, so Catalyst would default every hop to a
@@ -288,8 +288,6 @@ def reachable_from(
     """
     if min_length < 0:
         raise ValueError(f"min_length must be >= 0; got {min_length}")
-    if hops_per_round is not None and hops_per_round < 1:
-        raise ValueError(f"hops_per_round must be >= 1; got {hops_per_round}")
     spark = edges.sparkSession
     advance = max(min_length - 1, 0)
     hops_left = max_length if max_length is not None else -1
@@ -308,7 +306,7 @@ def reachable_from(
         seen = local_frame(spark, sorted(seen_set), "root string, node string") if seen_set else None
         seen_rows = len(seen_set)
     pairs = _fused_rounds(
-        edges, frontier, seen, seen_rows, advance, hops_left, hops_per_round,
+        edges, frontier, seen, seen_rows, advance, hops_left,
         _normalized, dedup_frontier=from_frame, _sources_from_edges=_sources_from_edges,
     )
     if min_length == 0:
@@ -328,7 +326,6 @@ def _fused_rounds(
     result_rows: int,
     advance: int,
     hops_left: int,
-    hops_per_round: int | None,
     _normalized: bool,
     dedup_frontier: bool,
     _sources_from_edges: bool,
@@ -340,7 +337,18 @@ def _fused_rounds(
     and the answer includes.  Returns the (src, dst) pairs."""
     if not _normalized:
         edges = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
-    n_edges = edges.count()  # free: the checkpoint is materialized
+    # ONE action sizes the edge set and probes its max out-degree, which
+    # picks the round builder and depth below.  The degree is probed
+    # whether or not the edges broadcast: on a shuffle-joined chain it
+    # buys 32-hop rounds (sf0.01 chain closure, broadcast off, 4 cores:
+    # 83 jobs / 11.2 s median against 212 jobs / 15.2 s at 4 hops per
+    # round).
+    n_edges, max_deg = (
+        edges.groupBy("src").count()
+        .agg(F.sum("count"), F.max("count"))
+        .first()
+    )
+    n_edges, max_deg = n_edges or 0, max_deg or 0
     spark = edges.sparkSession
     try:
         bcast_limit = int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
@@ -350,48 +358,37 @@ def _fused_rounds(
     # broadcasting (a too-big broadcast OOMs, a missed one just shuffles)
     broadcast_edges = 0 <= n_edges * 128 <= bcast_limit
     hop_edges = F.broadcast(edges) if broadcast_edges else edges
+    # Depth: dedup-free hops are near-free (one fused stage regardless of
+    # depth), so fuse as many per driver round as the carriage bound
+    # allows — a diameter-49 chain then converges in few rounds.  Depth
+    # limits are PLAN-COST bounds, measured at sf0.1: with union-of-arms
+    # rounds Catalyst analysis grows superlinearly past 16 hops (8:
+    # 15.1 s, 16: 12.4 s, 24: 14.8 s, 32: 44.8 s end-to-end), so fanout
+    # 2-4 graphs cap at 16; the degree-1 array-history round keeps the
+    # plan ~25 nodes at any depth, so it goes to 32.  High-fanout graphs
+    # stay at 4: each hop pays its distinct, and deeper rounds just
+    # defer the convergence check.
+    if max_deg == 1:
+        # degree-1 graphs (chains/rings) carry no duplicates at any
+        # depth — 32 fused hops measured fastest at sf0.1 (7.1 s vs
+        # 8.7 s at 16, vs 44.8 s for the old 32-deep union-of-arms plan)
+        depth = 32
+    elif 2 <= max_deg <= 4:
+        depth = 16
+        while max_deg**depth > 256:
+            depth -= 1
+        depth = max(4, depth)
+    else:
+        depth = 4
     # Dedup-free carriage is gated on FANOUT, not just edge-table size:
     # within a round a (root, node) pair is carried once per distinct
-    # path, bounded by max_out_degree^hops_per_round.  Chains/trees
-    # (degree <= 4) stay within a 256x worst-case and win by fusing the
-    # whole round into one codegen stage; a dense broadcast-sized graph
-    # (e.g. 1k near-complete nodes = 500k edges, fanout ~500) would carry
-    # 500^4 duplicate rows per frontier row — for those, keep the per-hop
-    # distinct (still broadcast-joined: the distinct costs one exchange
-    # vs sort-merge's two-exchanges-plus-sorts per hop).
-    if broadcast_edges and n_edges > 0:
-        max_deg = (
-            edges.groupBy("src").count().agg(F.max("count")).first()[0] or 0
-        )
-    else:
-        max_deg = None
-    if hops_per_round is None:
-        # Auto depth: dedup-free broadcast hops are near-free (one fused
-        # codegen stage regardless of depth), so fuse as many per driver
-        # round as the carriage bound allows — a diameter-49 chain then
-        # converges in few rounds.  Depth limits are PLAN-COST bounds,
-        # measured at sf0.1: with union-of-arms rounds Catalyst analysis
-        # grows superlinearly past 16 hops (8: 15.1 s, 16: 12.4 s, 24:
-        # 14.8 s, 32: 44.8 s end-to-end), so fanout 2-4 graphs cap at
-        # 16; the degree-1 array-history round keeps the plan ~25 nodes
-        # at any depth, so it goes to 32.  Shuffle-joined or high-fanout
-        # graphs stay at 4: there each hop is a real shuffle, and deeper
-        # rounds just defer the convergence check.
-        if max_deg is not None and max_deg == 1:
-            # degree-1 graphs (chains/rings) carry no duplicates at any
-            # depth, and the array-history round (below) keeps the plan
-            # ~25 nodes regardless of depth — 32 fused hops measured
-            # fastest at sf0.1 (7.1 s vs 8.7 s at 16, vs 44.8 s for the
-            # old 32-deep union-of-arms plan)
-            hops_per_round = 32
-        elif max_deg is not None and 1 <= max_deg <= 4:
-            h = 16
-            while max_deg**h > 256:
-                h -= 1
-            hops_per_round = max(4, h)
-        else:
-            hops_per_round = 4
-    dedup_free = max_deg is not None and max_deg**hops_per_round <= 256
+    # path, bounded by max_out_degree^depth.  Chains/trees (degree <= 4)
+    # stay within a 256x worst-case and win by fusing the whole round
+    # into one codegen stage; a dense graph (e.g. 1k near-complete nodes
+    # = 500k edges, fanout ~500) would carry 500^4 duplicate rows per
+    # frontier row — for those, keep the per-hop distinct (one exchange
+    # per hop when broadcast-joined).
+    dedup_free = max_deg**depth <= 256
     if dedup_frontier and not (_sources_from_edges and max_deg == 1):
         # seed dedup costs an exchange in round 1's critical path; skip it
         # only when uniqueness is PROVEN: the sources are the deduped edge
@@ -424,9 +421,7 @@ def _fused_rounds(
     round_sql_cache: dict[int, str] = {}
     try:
       while hops_left != 0:
-        this_round = (
-            hops_per_round if hops_left < 0 else min(hops_per_round, hops_left)
-        )
+        this_round = depth if hops_left < 0 else min(depth, hops_left)
         if hops_left > 0:
             hops_left -= this_round
         sql = round_sql_cache.get(this_round)

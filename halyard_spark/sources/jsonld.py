@@ -516,3 +516,9 @@ def jsonld_to_rows(text: str, scope: str = "") -> list[tuple]:
     out: list[tuple] = []
     expand_document(doc, out, scope=scope)
     return out
+
+
+def parse_jsonld_file(text: str, path: str) -> tuple[list[tuple], int]:
+    """One whole .jsonld document -> (quads, 0); its blank-node scope is
+    the path itself (read by sources/rio.read_rdf)."""
+    return jsonld_to_rows(text, scope=path), 0

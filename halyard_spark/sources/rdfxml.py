@@ -3,8 +3,9 @@
 Completes the reference's format matrix (the bulk-load extension map,
 tools/.../HalyardBulkLoad.java:251-259, routes .rdf/.owl/.xml to Rio's
 RDF/XML parser).  Same Spark shape as the Turtle source: RDF/XML is a
-whole-document format, so one file per row (wholetext scan) parsed
-inside ``mapInPandas`` — the FILE is the parallelism unit, matching the
+whole-document format, so one file per row (wholetext scan) parsed by
+``parse_rdfxml_file`` inside the shared whole-file loop of
+``sources/rio.py`` — the FILE is the parallelism unit, matching the
 reference's per-stream Rio parsing.
 
 Syntax coverage (RDF 1.1 XML — the constructs real ontology corpora
@@ -30,20 +31,13 @@ Blank node ids are scoped per file like the Turtle source.
 
 from __future__ import annotations
 
-import hashlib
 import xml.etree.ElementTree as ET
-from collections.abc import Iterator
 from urllib.parse import urljoin
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from halyard_spark import nt
 
 RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 XML = "http://www.w3.org/XML/1998/namespace"
-
-TRIPLE_SCHEMA = "subj string, pred string, obj string, ctx string"
 
 _RDF_RDF = f"{{{RDF}}}RDF"
 _RDF_DESCRIPTION = f"{{{RDF}}}Description"
@@ -228,35 +222,7 @@ def parse_rdfxml(
     return w.out
 
 
-def rdfxml_files_to_triples(
-    files: DataFrame, path_col: str = "path", text_col: str = "text", metrics=None
-) -> DataFrame:
-    """DataFrame of (path, text) whole files -> quad DataFrame (one
-    Python parse per file, Arrow-batched; unparseable files skipped —
-    counted when a ParseMetrics is given, sources/metrics.py)."""
-    import pandas as pd
-
-    cols = ["subj", "pred", "obj", "ctx"]
-    acc_file = metrics.files_failed if metrics is not None else None
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for path, text in zip(pdf[path_col], pdf[text_col]):
-                scope = hashlib.md5(str(path).encode()).hexdigest()[:8]
-                try:
-                    rows.extend(parse_rdfxml(text or "", bnode_scope=scope))
-                except Exception:
-                    if acc_file is not None:
-                        acc_file.add(1)
-                    continue  # skip-invalid
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files.select(path_col, text_col).mapInPandas(gen, schema=TRIPLE_SCHEMA)
-
-
-def read_rdfxml(spark: SparkSession, path: str, metrics=None) -> DataFrame:
-    files = spark.read.text(path, wholetext=True).select(
-        F.input_file_name().alias("path"), F.col("value").alias("text")
-    )
-    return rdfxml_files_to_triples(files, metrics=metrics)
+def parse_rdfxml_file(text: str, path: str) -> tuple[list[tuple], int]:
+    """One whole .rdf/.owl/.xml file -> (quads, 0), blank nodes scoped to
+    the file (read by sources/rio.read_rdf)."""
+    return parse_rdfxml(text, bnode_scope=nt.file_scope(path)), 0

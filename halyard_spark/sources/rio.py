@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from halyard_spark import nt
+from halyard_spark.sources import jsonld, rdfxml, trix, turtle
 
 
 def _leaf_lit(col: Column, dtype: T.DataType) -> Column:
@@ -139,50 +140,61 @@ def json_to_triples(df: DataFrame, node_col: str, struct_col: str, ns: str = "ur
 
 
 TRIPLE_SCHEMA = "subj string, pred string, obj string, ctx string"
+_COLS = ["subj", "pred", "obj", "ctx"]
+
+# What the parsers raise on malformed input: ValueError (JSON decode
+# errors included), SyntaxError (ElementTree's ParseError) and
+# RecursionError (input nested deeper than the interpreter's stack).
+# Anything else is a parser bug and fails the job instead of being
+# counted as a bad file.
+PARSE_ERRORS = (ValueError, SyntaxError, RecursionError)
+
+# Whole-document formats: fmt -> parse(text, path) -> (quads, skips)
+_WHOLE_FILE_PARSERS = {
+    "turtle": turtle.parse_turtle_file,
+    "rdfxml": rdfxml.parse_rdfxml_file,
+    "trix": trix.parse_trix_file,
+    "jsonld": jsonld.parse_jsonld_file,
+}
 
 
-# Full JSON-LD 1.0 expansion lives in sources/jsonld.py (term maps,
-# @vocab/@base/@language, containers, @list, nested nodes, @graph,
-# @reverse); the readers below call jsonld_to_rows for per-document
-# all-or-nothing emission.
-
-
-def jsonld_files_to_triples(files: DataFrame, path_col: str = "path", text_col: str = "text", metrics=None) -> DataFrame:
-    """Whole-document JSON-LD reader (.jsonld): one file = ONE JSON-LD
-    document (pretty-printed / multi-line), vs the newline-delimited
-    ND-JSON-LD form.  Full JSON-LD 1.0 expansion (sources/jsonld.py);
-    unparseable files yield no rows — not even partial ones (the whole
-    file is rolled back, skip-invalid, counted when a ParseMetrics is
-    given)."""
+def _read_whole_files(spark, path, parse, metrics=None) -> DataFrame:
+    """The ParserPump analog (tools/.../HalyardBulkLoad.java:321-482) for
+    whole-document formats: one row per file (wholetext scan), parsed in
+    one Arrow-batched mapInPandas by ``parse(text, path) -> (quads,
+    statements_skipped)``.  The file is the parallelism unit, as with the
+    reference's per-stream Rio parser.  A file whose parse raises one of
+    PARSE_ERRORS yields no rows, not even partial ones; with a
+    ParseMetrics it counts in ``files_failed``, and statement skips inside
+    parsed files count in ``statements_skipped``."""
     from collections.abc import Iterator
 
     import pandas as pd
 
-    from halyard_spark.sources.jsonld import jsonld_to_rows
-
-    cols = ["subj", "pred", "obj", "ctx"]
+    # capture only the accumulators (the ParseMetrics object also holds
+    # JVM observation handles, which must not enter the pickled closure)
+    acc_stmt = metrics.statements_skipped if metrics is not None else None
     acc_file = metrics.files_failed if metrics is not None else None
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows: list = []
-            for path, text in zip(pdf[path_col], pdf[text_col]):
+            for file_path, text in zip(pdf["path"], pdf["text"]):
                 try:
-                    rows.extend(jsonld_to_rows(text or "", scope=str(path)))
-                except ValueError:
+                    quads, skipped = parse(text or "", str(file_path))
+                except PARSE_ERRORS:
                     if acc_file is not None:
                         acc_file.add(1)
-                    continue
-            yield pd.DataFrame(rows, columns=cols)
+                    continue  # skip-invalid: one bad file never fails the job
+                rows.extend(quads)
+                if skipped and acc_stmt is not None:
+                    acc_stmt.add(skipped)
+            yield pd.DataFrame(rows, columns=_COLS)
 
-    return files.select(path_col, text_col).mapInPandas(gen, schema=TRIPLE_SCHEMA)
-
-
-def read_jsonld(spark, path, metrics=None) -> DataFrame:
     files = spark.read.text(path, wholetext=True).select(
         F.input_file_name().alias("path"), F.col("value").alias("text")
     )
-    return jsonld_files_to_triples(files, metrics=metrics)
+    return files.mapInPandas(gen, schema=TRIPLE_SCHEMA)
 
 
 def ndjsonld_to_triples(df: DataFrame, line_col: str = "value", metrics=None) -> DataFrame:
@@ -198,7 +210,9 @@ def ndjsonld_to_triples(df: DataFrame, line_col: str = "value", metrics=None) ->
     column — JSON-LD term resolution is data-dependent, so this is a
     genuine can't-express-in-built-ins boundary (the same place the
     reference spends a ParserPump thread,
-    tools/.../HalyardBulkLoad.java:321-482).
+    tools/.../HalyardBulkLoad.java:321-482).  Its own loop, not
+    _read_whole_files: the unit is a line, and a line that raises one of
+    PARSE_ERRORS counts as a statement skip.
 
     Blank-node scope is per LINE OCCURRENCE, not per line text: the
     reference runs a fresh parser per line, so two identical anonymous
@@ -213,8 +227,6 @@ def ndjsonld_to_triples(df: DataFrame, line_col: str = "value", metrics=None) ->
 
     import pandas as pd
 
-    from halyard_spark.sources.jsonld import jsonld_to_rows
-
     acc_stmt = metrics.statements_skipped if metrics is not None else None
 
     lines = df.select(F.trim(F.col(line_col)).alias("line")).where(
@@ -226,7 +238,6 @@ def ndjsonld_to_triples(df: DataFrame, line_col: str = "value", metrics=None) ->
     )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["subj", "pred", "obj", "ctx"]
         for pdf in batches:
             rows: list = []
             for line, occ in zip(pdf["line"].fillna(""), pdf["occ"]):
@@ -234,12 +245,12 @@ def ndjsonld_to_triples(df: DataFrame, line_col: str = "value", metrics=None) ->
                     continue
                 scope = line if occ == 0 else f"{line}\x00dup{occ}"
                 try:
-                    rows.extend(jsonld_to_rows(line, scope=scope))
-                except ValueError:
+                    rows.extend(jsonld.jsonld_to_rows(line, scope=scope))
+                except PARSE_ERRORS:
                     if acc_stmt is not None:
                         acc_stmt.add(1)
                     continue  # dirty-parse tolerance (HalyardBulkLoad skipinvalid)
-            yield pd.DataFrame(rows, columns=cols)
+            yield pd.DataFrame(rows, columns=_COLS)
 
     return occs.mapInPandas(gen, schema=TRIPLE_SCHEMA)
 
@@ -410,20 +421,8 @@ def read_rdf(spark, path, fmt: str | None = None, metrics=None) -> DataFrame:
                 out = out.unionByName(other)
             return out
         fmt, path = next(iter(groups.items()))
-    if fmt == "turtle":
-        from halyard_spark.sources.turtle import read_turtle
-
-        return read_turtle(spark, path, metrics=metrics)
-    if fmt == "rdfxml":
-        from halyard_spark.sources.rdfxml import read_rdfxml
-
-        return read_rdfxml(spark, path, metrics=metrics)
-    if fmt == "trix":
-        from halyard_spark.sources.trix import read_trix
-
-        return read_trix(spark, path, metrics=metrics)
-    if fmt == "jsonld":
-        return read_jsonld(spark, path, metrics=metrics)
+    if fmt in _WHOLE_FILE_PARSERS:
+        return _read_whole_files(spark, path, _WHOLE_FILE_PARSERS[fmt], metrics)
     if fmt == "ndjsonld":
         return ndjsonld_to_triples(spark.read.text(path), metrics=metrics)
     return read_ntriples(spark, path, metrics=metrics)

@@ -3,7 +3,8 @@
 The reference's bulk load special-cases TriX among its RIO-registered
 input formats (tools/.../HalyardBulkLoad.java:130-137); this is the
 Spark-native counterpart: whole-file XML parse per file (the file is the
-parallelism unit, as with RDF/XML) inside an Arrow-batched mapInPandas.
+parallelism unit, as with RDF/XML) by ``parse_trix_file`` inside the
+shared whole-file loop of ``sources/rio.py``.
 
 TriX document shape (W3C TriX note / RDF4J TriXParser semantics):
 
@@ -29,19 +30,12 @@ statement-level dirty tolerance.
 
 from __future__ import annotations
 
-import hashlib
 import xml.etree.ElementTree as ET
-from collections.abc import Iterator
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from halyard_spark import nt
 
 TRIX_NS = "http://www.w3.org/2004/03/trix/trix-1/"
 XML_NS = "http://www.w3.org/XML/1998/namespace"
-
-TRIPLE_SCHEMA = "subj string, pred string, obj string, ctx string"
 
 
 def _local(tag: str) -> str:
@@ -113,36 +107,9 @@ def parse_trix(
     return out
 
 
-def trix_files_to_triples(
-    files: DataFrame, path_col: str = "path", text_col: str = "text", metrics=None
-) -> DataFrame:
-    import pandas as pd
-
-    cols = ["subj", "pred", "obj", "ctx"]
-    acc_stmt = metrics.statements_skipped if metrics is not None else None
-    acc_file = metrics.files_failed if metrics is not None else None
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for path, text in zip(pdf[path_col], pdf[text_col]):
-                scope = hashlib.md5(str(path).encode()).hexdigest()[:8]
-                skips: list = []
-                try:
-                    rows.extend(parse_trix(text or "", bnode_scope=scope, statement_skips=skips))
-                    if acc_stmt is not None and skips:
-                        acc_stmt.add(len(skips))
-                except Exception:
-                    if acc_file is not None:
-                        acc_file.add(1)
-                    continue  # skip-invalid
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files.select(path_col, text_col).mapInPandas(gen, schema=TRIPLE_SCHEMA)
-
-
-def read_trix(spark: SparkSession, path: str, metrics=None) -> DataFrame:
-    files = spark.read.text(path, wholetext=True).select(
-        F.input_file_name().alias("path"), F.col("value").alias("text")
-    )
-    return trix_files_to_triples(files, metrics=metrics)
+def parse_trix_file(text: str, path: str) -> tuple[list[tuple], int]:
+    """One whole .trix file -> (quads, statements skipped), blank nodes
+    scoped to the file (read by sources/rio.read_rdf)."""
+    skips: list = []
+    quads = parse_trix(text, bnode_scope=nt.file_scope(path), statement_skips=skips)
+    return quads, len(skips)

@@ -6,9 +6,10 @@ file through a Rio parser on a worker thread (ParserPump,
 HalyardBulkLoad.java:321-482); most public RDF corpora ship as Turtle.
 Turtle statements span lines, so unlike N-Triples there is no
 line-delimited JVM fast path: the Spark-native shape is one file per row
-(wholetext scan) parsed inside ``mapInPandas`` — the FILE is the
-parallelism unit, exactly the reference's model (Rio is single-threaded
-per stream too), and a directory of files fans out across executors.
+(wholetext scan) parsed by ``parse_turtle_file`` inside the shared
+whole-file loop of ``sources/rio.py`` — the FILE is the parallelism
+unit, exactly the reference's model (Rio is single-threaded per stream
+too), and a directory of files fans out across executors.
 
 Grammar coverage (the Turtle surface the reference's own .ttl fixtures
 and common corpora exercise):
@@ -49,20 +50,13 @@ hash of the file path.
 
 from __future__ import annotations
 
-import hashlib
 import re
-from collections.abc import Iterator
 from urllib.parse import urljoin
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from halyard_spark import nt
 
 RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 XSD = "http://www.w3.org/2001/XMLSchema#"
-
-TRIPLE_SCHEMA = "subj string, pred string, obj string, ctx string"
 
 # ---------------------------------------------------------------------------
 # Tokenizer
@@ -522,54 +516,8 @@ def parse_turtle(
     return p.parse_document(dirty_ok=dirty_ok)
 
 
-# ---------------------------------------------------------------------------
-# Spark source
-# ---------------------------------------------------------------------------
-
-
-def turtle_files_to_triples(
-    files: DataFrame, path_col: str = "path", text_col: str = "text", metrics=None
-) -> DataFrame:
-    """DataFrame of (path, text) whole files -> quad DataFrame.
-
-    One Python parse per FILE inside mapInPandas (Arrow-batched); blank
-    node labels are scoped by a hash of the path so `_:x` in two files
-    never collides.  A file that fails to parse wholesale yields no rows
-    (dirty tolerance at both statement and file granularity).  When a
-    ParseMetrics is given, statement resyncs and whole-file failures are
-    counted instead of vanishing (sources/metrics.py)."""
-    import pandas as pd
-
-    cols = ["subj", "pred", "obj", "ctx"]
-    # capture only the accumulators (the ParseMetrics object also holds
-    # JVM observation handles, which must not enter the pickled closure)
-    acc_stmt = metrics.statements_skipped if metrics is not None else None
-    acc_file = metrics.files_failed if metrics is not None else None
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for path, text in zip(pdf[path_col], pdf[text_col]):
-                scope = hashlib.md5(str(path).encode()).hexdigest()[:8]
-                try:
-                    p = _TurtleParser(tokenize(text or ""), bnode_scope=scope)
-                    rows.extend(p.parse_document(dirty_ok=True))
-                    if acc_stmt is not None and p.skipped:
-                        acc_stmt.add(p.skipped)
-                except Exception:
-                    if acc_file is not None:
-                        acc_file.add(1)
-                    continue  # skip-invalid: never fail the job on one file
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files.select(path_col, text_col).mapInPandas(gen, schema=TRIPLE_SCHEMA)
-
-
-def read_turtle(spark: SparkSession, path: str, metrics=None) -> DataFrame:
-    """Read .ttl / .trig files (plain or compressed) into a quad
-    DataFrame.  wholetext=true: one row per file — the file is the
-    parallelism unit, as in the reference's ParserPump."""
-    files = spark.read.text(path, wholetext=True).select(
-        F.input_file_name().alias("path"), F.col("value").alias("text")
-    )
-    return turtle_files_to_triples(files, metrics=metrics)
+def parse_turtle_file(text: str, path: str) -> tuple[list[tuple], int]:
+    """One whole .ttl/.trig file -> (quads, statements skipped), blank
+    nodes scoped to the file (read by sources/rio.read_rdf)."""
+    p = _TurtleParser(tokenize(text), bnode_scope=nt.file_scope(path))
+    return p.parse_document(dirty_ok=True), p.skipped

@@ -11,8 +11,8 @@ import pytest
 
 from halyard_spark.sources.metrics import ParseMetrics
 from halyard_spark.sources.rio import read_ntriples, read_rdf
-from halyard_spark.sources.trix import parse_trix, read_trix
-from halyard_spark.sources.turtle import parse_turtle, read_turtle
+from halyard_spark.sources.trix import parse_trix
+from halyard_spark.sources.turtle import parse_turtle
 
 
 # ---------------------------------------------------------------------------
@@ -75,7 +75,7 @@ def test_turtle_statement_skips_counted(spark, tmp_path):
             "ex:broken ex:q ??? .\n"  # 1 bad statement per file
         )
     m = ParseMetrics(spark)
-    df = read_turtle(spark, str(tmp_path), metrics=m)
+    df = read_rdf(spark, str(tmp_path), fmt="turtle", metrics=m)
     assert df.count() == 3
     snap = m.snapshot()
     assert snap["statements_skipped"] == 3
@@ -131,6 +131,74 @@ def test_bulk_load_manifest_carries_parse_metrics(spark, tmp_path):
     assert pm["files_failed"] == 0
     assert pm["files_skipped_unknown_ext"] == 1
     assert pm["skipped_paths"] == [str(src / "README.md")]
+
+
+# ---------------------------------------------------------------------------
+# One error policy: malformed input is counted, parser bugs fail the job
+# ---------------------------------------------------------------------------
+
+DEEP = 3000  # nesting far past the interpreter's recursion limit
+
+
+@pytest.mark.parametrize(
+    "name, text, rows, files_failed, statements_skipped",
+    [
+        ("deep.ttl", "<urn:s> <urn:p> " + "(" * DEEP + ")" * DEEP + " .\n", 0, 1, 0),
+        ("deep.jsonld", '{"@id": "urn:s", "urn:p": ' + "[" * DEEP + "]" * DEEP + "}", 0, 1, 0),
+        (
+            "deep.rdf",
+            '<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#" xmlns:ex="urn:ex:">'
+            + "<rdf:Description><ex:p>" * DEEP
+            + "</ex:p></rdf:Description>" * DEEP
+            + "</rdf:RDF>",
+            0, 1, 0,
+        ),
+        # TriX is parsed without recursion: the nested <triple> makes the
+        # outer one malformed (one term, not three), a statement skip
+        (
+            "deep.trix",
+            '<TriX xmlns="http://www.w3.org/2004/03/trix/trix-1/"><graph>'
+            + "<triple>" * DEEP + "</triple>" * DEEP + "</graph></TriX>",
+            0, 0, 1,
+        ),
+        # ND-JSON-LD: the deep line is one skipped statement, the good
+        # line next to it still loads
+        (
+            "deep.ndjsonld",
+            '{"@id": "urn:s", "urn:p": ' + "[" * DEEP + "]" * DEEP + "}\n"
+            '{"@id": "urn:good", "urn:p": "ok"}\n',
+            1, 0, 1,
+        ),
+    ],
+    ids=["ttl", "jsonld", "rdf", "trix", "ndjsonld"],
+)
+def test_deep_nesting_is_counted_not_fatal(
+    spark, tmp_path, name, text, rows, files_failed, statements_skipped
+):
+    (tmp_path / name).write_text(text)
+    m = ParseMetrics(spark)
+    got = read_rdf(spark, str(tmp_path / name), metrics=m).collect()
+    assert len(got) == rows
+    snap = m.snapshot()
+    assert snap["files_failed"] == files_failed
+    assert snap["statements_skipped"] == statements_skipped
+
+
+def test_whole_file_loop_counts_parse_errors_and_fails_on_bugs(spark, tmp_path):
+    from pyspark.errors import PythonException
+
+    from halyard_spark.sources.rio import _read_whole_files
+
+    (tmp_path / "a.ttl").write_text("<urn:s> <urn:p> <urn:o> .\n")
+    m = ParseMetrics(spark)
+    # a ValueError is malformed input: the file is counted and skipped
+    df = _read_whole_files(spark, str(tmp_path), lambda text, path: int("x"), m)
+    assert df.count() == 0
+    assert m.snapshot()["files_failed"] == 1
+    # any other exception is a parser bug and fails the job
+    df = _read_whole_files(spark, str(tmp_path), lambda text, path: 1 / 0, m)
+    with pytest.raises(PythonException, match="ZeroDivisionError"):
+        df.count()
 
 
 # ---------------------------------------------------------------------------
@@ -235,4 +303,4 @@ def test_read_trix_dispatch_and_bnode_scoping(spark, tmp_path):
     bn = {s for s, _, _, _ in rows if s.startswith("_:")}
     assert len(bn) == 2
     # direct reader equivalence
-    assert read_trix(spark, str(tmp_path / "a.trix")).count() == 3
+    assert read_rdf(spark, str(tmp_path / "a.trix"), fmt="trix").count() == 3

@@ -90,7 +90,7 @@ def test_reachable_from_min_length_exact(spark):
     assert ("0", "0") in got0 and ("0", "4") in got0 and len(got0) == 5
 
 
-def test_random_digraph_matches_brute_force(spark):
+def test_random_digraph_matches_brute_force(spark, monkeypatch):
     rng = random.Random(20260817)
     n = 30
     pairs = sorted({(rng.randrange(n), rng.randrange(n)) for _ in range(70)})
@@ -98,12 +98,18 @@ def test_random_digraph_matches_brute_force(spark):
     df = edges_df(spark, pairs)
     want = brute_closure(pairs)
     assert rows(transitive_closure(df, min_length=1)) == want
-    # hops_per_round=1 must agree with the default batching
+    # a 40-node chain outruns one 32-hop round: default batching takes
+    # two fused rounds and must still match the brute-force closure
+    chain = [(i, i + 1) for i in range(39)]
+    df = edges_df(spark, chain)
     srcs = df.select("src").distinct()
-    got1 = rows(
-        reachable_from(df, srcs, min_length=1, hops_per_round=1)
-    )
-    assert got1 == want
+    rounds = []
+    sql = spark.sql
+    monkeypatch.setattr(spark, "sql", lambda q: rounds.append(q) or sql(q))
+    got = rows(reachable_from(df, srcs, min_length=1))
+    monkeypatch.undo()
+    assert got == brute_closure(chain)
+    assert len(rounds) == 2
 
 
 def test_zero_or_one_path_identity_domain(spark):

@@ -252,7 +252,7 @@ def test_iceberg_writer_gated(spark):
             [("<s>", "<p>", '"o"', None)],
             "subj string, pred string, obj string, ctx string",
         )
-        materialize.write_sorted_iceberg(src, "local.db.t", materialize.INDEXES["spo"], 2)
+        materialize.write_sorted_iceberg(src, "local.db.t", materialize.INDEXES["spo"])
 
 
 def test_extract_two_commits_same_path(spark):

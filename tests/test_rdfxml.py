@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import pytest
 
-from halyard_spark.sources.rdfxml import RDF, parse_rdfxml, read_rdfxml
+from halyard_spark.sources.rdfxml import RDF, parse_rdfxml
 from halyard_spark.sources.rio import read_rdf
 
 XSD = "http://www.w3.org/2001/XMLSchema#"
@@ -117,7 +117,7 @@ def test_nested_node_element():
 def test_invalid_xml_skipped(spark, tmp_path):
     (tmp_path / "good.rdf").write_text(DOC)
     (tmp_path / "bad.rdf").write_text("<rdf:RDF this is not xml")
-    df = read_rdfxml(spark, str(tmp_path) + "/*.rdf")
+    df = read_rdf(spark, str(tmp_path) + "/*.rdf", fmt="rdfxml")
     assert df.count() == len(parse_rdfxml(DOC))  # bad file contributes 0
 
 
@@ -134,7 +134,7 @@ def test_bnode_scope_across_files(spark, tmp_path):
     </rdf:RDF>"""
     for i in (1, 2):
         (tmp_path / f"f{i}.rdf").write_text(doc)
-    df = read_rdfxml(spark, str(tmp_path) + "/*.rdf")
+    df = read_rdf(spark, str(tmp_path) + "/*.rdf", fmt="rdfxml")
     assert len({r["subj"] for r in df.collect()}) == 2
 
 

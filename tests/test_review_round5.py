@@ -199,16 +199,19 @@ def test_run_pipeline_restores_shuffle_width(spark, tmp_path):
 
 
 def test_reachable_from_converges_and_caps(spark):
+    from test_path_ops import brute_closure
+
     from halyard_spark.query.path import reachable_from
 
-    n = 12
-    edges = spark.createDataFrame(
-        [(f"n{i}", f"n{i+1}") for i in range(n)], "src string, dst string"
-    )
+    n = 40  # past one 32-hop fused round
+    chain = [(f"n{i}", f"n{i+1}") for i in range(n - 1)]
+    edges = spark.createDataFrame(chain, "src string, dst string")
     seeds = spark.createDataFrame([("n0",)], "src string")
     # default: run to convergence — the full chain, no silent truncation
-    full = reachable_from(edges, seeds, min_length=1, hops_per_round=1)
-    assert full.count() == n
+    full = reachable_from(edges, seeds, min_length=1)
+    assert sorted(tuple(r) for r in full.collect()) == [
+        p for p in brute_closure(chain) if p[0] == "n0"
+    ]
     # max_length is an intentional path-length cap (p? semantics)
     capped = reachable_from(edges, seeds, min_length=0, max_length=1)
     assert {r["dst"] for r in capped.collect()} == {"n0", "n1"}

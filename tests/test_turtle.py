@@ -17,12 +17,7 @@ import pytest
 
 from halyard_spark import nt
 from halyard_spark.sources.rio import ntriples_to_triples, read_rdf
-from halyard_spark.sources.turtle import (
-    parse_turtle,
-    read_turtle,
-    tokenize,
-    turtle_files_to_triples,
-)
+from halyard_spark.sources.turtle import parse_turtle, tokenize
 
 FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures", "rio") + os.sep
 
@@ -235,7 +230,7 @@ def test_read_turtle_and_nt_roundtrip(spark, tmp_path):
     text = open(FIXTURES + "efo_test.ttl").read()
     f = tmp_path / "efo.ttl"
     f.write_text(text)
-    df = read_turtle(spark, str(f))
+    df = read_rdf(spark, str(f), fmt="turtle")
     got = {(r["subj"], r["pred"], r["obj"]) for r in df.collect()}
     assert len(got) == 43
 
@@ -261,7 +256,7 @@ def test_bnode_scope_distinct_across_files(spark, tmp_path):
         (tmp_path / f"f{i}.ttl").write_text(
             "@prefix ex: <http://ex.org/> .\n_:x ex:p \"v\" ."
         )
-    df = read_turtle(spark, str(tmp_path) + "/*.ttl")
+    df = read_rdf(spark, str(tmp_path) + "/*.ttl", fmt="turtle")
     subs = {r["subj"] for r in df.collect()}
     assert len(subs) == 2  # _:x in two files must not collide
 
