@@ -103,12 +103,15 @@ def test_random_digraph_matches_brute_force(spark, monkeypatch):
     chain = [(i, i + 1) for i in range(39)]
     df = edges_df(spark, chain)
     srcs = df.select("src").distinct()
-    rounds = []
+    statements = []
     sql = spark.sql
-    monkeypatch.setattr(spark, "sql", lambda q: rounds.append(q) or sql(q))
+    monkeypatch.setattr(spark, "sql", lambda q: statements.append(q) or sql(q))
     got = rows(reachable_from(df, srcs, min_length=1))
     monkeypatch.undo()
     assert got == brute_closure(chain)
+    # rounds are counted by their generated SQL: each fused round is one
+    # spark.sql statement over the invocation's frontier view
+    rounds = [q for q in statements if "path_frontier_" in q]
     assert len(rounds) == 2
 
 
