@@ -360,7 +360,7 @@ def q_expr_conditional(spark, sf_dir):
 
 def q_multi_projection(spark, sf_dir):
     """MultiProjection (CONSTRUCT templates) -> explode N templates/row
-    (SURVEY §2.2)."""
+    (SURVEY §2.2), deduped into a graph as CONSTRUCT does."""
     c = _t(spark, sf_dir, "customer")
     subj = nt.nt_iri(F.concat(F.lit("urn:customer:"), F.col("c_custkey").cast("string")))
     return A.multi_projection(
@@ -369,7 +369,7 @@ def q_multi_projection(spark, sf_dir):
             {"subj": subj, "pred": F.lit("<urn:p:name>"), "obj": nt.nt_lit(F.col("c_name"))},
             {"subj": subj, "pred": F.lit("<urn:p:mktsegment>"), "obj": nt.nt_lit(F.col("c_mktsegment"))},
         ],
-    )
+    ).dropDuplicates()
 
 
 def q_exists_filter(spark, sf_dir):

@@ -10,8 +10,8 @@ entirely with Spark expressions (spark.range + column functions) so it is:
 - distributed: no driver-side loops; scales to any n_files;
 - skewed on purpose: ~30% of files live in ONE mega-repo, mirroring the
   oversize-input fan-out problem the reference solves with hash%k
-  decimation (tools/.../HalyardBulkLoad.java:227-248,444-450) and we solve
-  with salting + AQE skew-join.
+  decimation (tools/.../HalyardBulkLoad.java:227-248,444-450) and we leave
+  to AQE's skew-join splitting.
 
 Content embeds a known graph structure the extractor must recover:
 - intra-universe imports:  ``from pkg{t%13}.mod{t} import handle``

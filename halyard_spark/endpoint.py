@@ -19,8 +19,10 @@ import urllib.parse
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from halyard_spark import nt
+from halyard_spark.query.exprs import as_term
 from halyard_spark.query.sparql import sparql_select, sparql_update
 
 RESULTS_JSON = "application/sparql-results+json"
@@ -64,12 +66,23 @@ def _is_ask(df: DataFrame) -> bool:
     )
 
 
+def _term_rows(df: DataFrame, limit: int) -> list:
+    """Collect up to ``limit`` solutions as RDF terms.  Computed columns
+    (aggregates, arithmetic, comparisons) keep their native Spark type
+    until here and render through as_term, so a COUNT answers
+    "2"^^xsd:integer and a comparison "true"^^xsd:boolean; an
+    all-string result keeps its plan."""
+    if any(t != "string" for _, t in df.dtypes):
+        df = df.select(*[as_term(F.col(c), t).alias(c) for c, t in df.dtypes])
+    return df.limit(limit).collect()
+
+
 def results_json(df: DataFrame, limit: int = 10000) -> dict:
     cols = df.columns
     if _is_ask(df):  # ASK answers use the boolean result form
         return {"head": {}, "boolean": bool(df.collect()[0]["ask"])}
     bindings = []
-    for row in df.limit(limit).collect():
+    for row in _term_rows(df, limit):
         b = {}
         for c in cols:
             j = binding_json(row[c])
@@ -90,7 +103,7 @@ def results_xml(df: DataFrame, limit: int = 10000) -> str:
         return "\n".join(out)
     out.append("<head>" + "".join(f'<variable name="{x(c)}"/>' for c in cols) + "</head>")
     out.append("<results>")
-    for row in df.limit(limit).collect():
+    for row in _term_rows(df, limit):
         cells = []
         for c in cols:
             b = binding_json(row[c])
@@ -133,7 +146,7 @@ def results_csv(df: DataFrame, limit: int = 10000) -> str:
     """SPARQL 1.1 CSV results: plain values (IRIs bare, literal labels)."""
     cols = df.columns
     lines = [",".join(cols)]
-    for row in df.limit(limit).collect():
+    for row in _term_rows(df, limit):
         lines.append(",".join(_csv_cell(row[c]) for c in cols))
     return "\r\n".join(lines) + "\r\n"
 
@@ -142,7 +155,7 @@ def results_tsv(df: DataFrame, limit: int = 10000) -> str:
     """SPARQL 1.1 TSV results: full term syntax, ?-prefixed header."""
     cols = df.columns
     lines = ["\t".join("?" + c for c in cols)]
-    for row in df.limit(limit).collect():
+    for row in _term_rows(df, limit):
         lines.append("\t".join(_tsv_cell(row[c]) for c in cols))
     return "\n".join(lines) + "\n"
 

@@ -2,6 +2,6 @@
 
 Reference path: RDF files -> RioFileInputFormat -> RDFMapper -> MR
 shuffle-sort -> HFiles -> bulk adopt (tools/.../HalyardBulkLoad.java:502-573).
-Ours: src table -> extract (mapInPandas) -> link (broadcast/salted join)
+Ours: src table -> extract (mapInPandas) -> link (broadcast/shuffle join)
 -> canonicalize (iterative CC) -> triples -> sorted parquet mirrors.
 """

@@ -2,15 +2,12 @@
 
 Halyard resolves terms by SHA-1 hash key lookup against the statement
 indexes (common/.../HalyardTableUtils.java:300-373); our linking is a join
-of mention surface forms against a canonical-entity dictionary with two
-physical paths behind one API:
+of mention surface forms against a canonical-entity dictionary, with the
+dictionary's size picking the physical join:
 
 - dictionary small  -> ``F.broadcast`` map-side join (no shuffle at all);
-- dictionary large  -> salted shuffle hash join: the hot surface keys
-  coming from the mega-repo are exploded with a salt on the dictionary
-  side and salted with ``pmod(xxhash64(...))`` on the mention side — the
-  Spark analog of the reference's hash%k decimation fan-out
-  (tools/.../HalyardBulkLoad.java:444-450) — plus AQE skew-join splitting.
+- dictionary large  -> shuffle hash join, with AQE's skew-join splitting
+  spreading hot surface keys (the mega-repo's) over several reducers.
 """
 
 from __future__ import annotations
@@ -20,7 +17,7 @@ from pyspark.sql import functions as F
 
 from halyard_spark import nt
 
-BROADCAST_MAX_ROWS = 2_000_000  # ~100 MB of dictionary rows; above this, salt
+BROADCAST_MAX_ROWS = 2_000_000  # ~100 MB of dictionary rows; above this, shuffle
 
 
 def build_dictionary(mentions: DataFrame) -> DataFrame:
@@ -47,8 +44,6 @@ def build_dictionary(mentions: DataFrame) -> DataFrame:
 def link_mentions(
     mentions: DataFrame,
     dictionary: DataFrame,
-    strategy: str = "auto",
-    salt_buckets: int = 16,
     dict_rows: int | None = None,
 ) -> DataFrame:
     """Resolve reference mentions (import/xref) to canonical entities.
@@ -56,25 +51,13 @@ def link_mentions(
     Returns linked(repo, path, kind, name, canonical_id, score).
     ``dict_rows``: known dictionary cardinality (e.g. the preceding
     stage's lineage row count) — supplying it removes the driver-blocking
-    count job from the auto strategy probe.
+    count job from the broadcast-or-shuffle probe.
     """
     refs = mentions.filter(F.col("kind").isin("import", "xref"))
     # both import and xref targets are module names in this corpus; a
     # future per-kind dispatch would branch here
     ref_kind = F.lit("module")
     refs = refs.withColumn("target_kind", ref_kind)
-
-    if strategy == "auto":
-        # cheap cardinality probe on the dictionary only (small side),
-        # skipped entirely when the caller already knows the size.
-        # Large dictionaries default to a plain shuffle hash join: AQE's
-        # skew-join splitting handles moderately hot surface keys at zero
-        # cost, whereas salting replicates the whole dictionary x buckets.
-        # Explicit strategy="salted" remains the tool for pathological
-        # single-key skew (the mega-repo case) where even AQE's split of
-        # one reducer partition isn't enough.
-        n = dict_rows if dict_rows is not None else dictionary.count()
-        strategy = "broadcast" if n <= BROADCAST_MAX_ROWS else "shuffle"
 
     # rename dictionary columns: it may derive from the same mentions DF
     # (self-join) and 'kind'/'qualifier' would be ambiguous otherwise
@@ -84,34 +67,19 @@ def link_mentions(
         F.col("canonical_id"),
         F.col("prior"),
     )
-
-    if strategy == "broadcast":
-        joined = refs.join(
-            F.broadcast(d),
-            (F.col("name") == F.col("d_surface")) & (F.col("target_kind") == F.col("d_kind")),
-            "left",
-        )
-    elif strategy == "shuffle":
-        joined = refs.join(
-            d,
-            (F.col("name") == F.col("d_surface")) & (F.col("target_kind") == F.col("d_kind")),
-            "left",
-        )
-    else:
-        # Salted shuffle join: replicate each dictionary row salt_buckets
-        # times, route each mention row to one deterministic salt bucket.
-        # Spreads a hot surface key over salt_buckets reducers.
-        salted_dict = d.withColumn("d_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1))))
-        salted_refs = refs.withColumn(
-            "salt", F.pmod(F.xxhash64("repo", "path", "name"), F.lit(salt_buckets)).cast("int")
-        )
-        joined = salted_refs.join(
-            salted_dict,
-            (F.col("name") == F.col("d_surface"))
-            & (F.col("target_kind") == F.col("d_kind"))
-            & (F.col("salt") == F.col("d_salt")),
-            "left",
-        ).drop("salt", "d_salt")
+    # cheap cardinality probe on the dictionary only (small side),
+    # skipped entirely when the caller already knows the size.  A large
+    # dictionary takes a plain shuffle hash join: AQE's skew-join
+    # splitting handles hot surface keys without replicating the
+    # dictionary.
+    n = dict_rows if dict_rows is not None else dictionary.count()
+    if n <= BROADCAST_MAX_ROWS:
+        d = F.broadcast(d)
+    joined = refs.join(
+        d,
+        (F.col("name") == F.col("d_surface")) & (F.col("target_kind") == F.col("d_kind")),
+        "left",
+    )
 
     return joined.select(
         F.col("repo"),

@@ -44,7 +44,6 @@ def run_pipeline(
     src: DataFrame,
     out_dir: str,
     resume: bool = True,
-    link_strategy: str = "auto",
 ) -> dict:
     """Run all stages; returns {stage: {rows, wall_ms, skipped}} + totals.
 
@@ -53,7 +52,7 @@ def run_pipeline(
     later job on the same session up to it (code-review regression)."""
     prev_width = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        return _run_pipeline(spark, src, out_dir, resume, link_strategy)
+        return _run_pipeline(spark, src, out_dir, resume)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_width)
 
@@ -63,7 +62,6 @@ def _run_pipeline(
     src: DataFrame,
     out_dir: str,
     resume: bool,
-    link_strategy: str,
 ) -> dict:
     report: dict = {}
     t_start = time.time()
@@ -126,10 +124,9 @@ def _run_pipeline(
             "link",
             f"{out_dir}/linked",
             # the dictionary stage just counted its output — reuse it so
-            # the auto-strategy probe costs no extra driver job
+            # the broadcast-or-shuffle probe costs no extra driver job
             lambda: link.link_mentions(
-                mentions, dictionary, strategy=link_strategy,
-                dict_rows=report["dictionary"]["rows"],
+                mentions, dictionary, dict_rows=report["dictionary"]["rows"],
             ),
         )
         return dictionary, linked

@@ -14,62 +14,12 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from halyard_spark.query import exprs as E
 from halyard_spark.session import local_frame
 
 
 def _shared_vars(left: DataFrame, right: DataFrame) -> list[str]:
     return [c for c in left.columns if c in set(right.columns)]
-
-
-_XSD = "http://www.w3.org/2001/XMLSchema#"
-
-
-def _term_col(col: Column, dt: str) -> Column:
-    """Term-string view of a solution column for cross-kind comparison.
-
-    Pattern variables hold N-Triples term strings; computed variables
-    (BIND / projection expressions) keep their native Spark type.  A
-    join sharing such a variable must neither crash (ANSI casts the term
-    string to BIGINT) nor silently mismatch: the native side is rendered
-    to its canonical typed-literal term form so the comparison is
-    term-to-term — strict label equality, the same Value.equals the
-    reference's binding-set joins use (non-canonical lexical forms like
-    "01"^^xsd:integer intentionally do NOT match a computed 1).
-
-    Same rendering policy as sparql._var_as_term (CONSTRUCT templates):
-    the engine's numeric tower is double, so an integral double renders
-    as xsd:integer — SPARQL arithmetic preserves integer for integer
-    inputs, and BIND(?a + 1) must term-match a stored "2"^^xsd:integer.
-    """
-    if dt == "string":
-        return col
-    if dt == "boolean":
-        return F.when(
-            col.isNotNull(),
-            F.concat(F.lit('"'), col.cast("string"),
-                     F.lit(f'"^^<{_XSD}boolean>')),
-        )
-    if dt in ("double", "float") or dt.startswith("decimal"):
-        i = col.try_cast("long")
-        return F.when(
-            col.isNotNull(),
-            F.when(
-                i.isNotNull() & (i.cast(dt if not dt.startswith("decimal")
-                                        else "double") == col),
-                F.concat(F.lit('"'), i.cast("string"),
-                         F.lit(f'"^^<{_XSD}integer>')),
-            ).otherwise(
-                F.concat(F.lit('"'), col.cast("string"),
-                         F.lit(f'"^^<{_XSD}double>'))
-            ),
-        )
-    if dt in ("tinyint", "smallint", "int", "bigint"):
-        return F.when(
-            col.isNotNull(),
-            F.concat(F.lit('"'), col.cast("string"),
-                     F.lit(f'"^^<{_XSD}integer>')),
-        )
-    return col.cast("string")
 
 
 def _mixed_kinds(left: DataFrame, right: DataFrame, shared) -> bool:
@@ -82,7 +32,7 @@ def bgp_join(left: DataFrame, right: DataFrame) -> DataFrame:
 
     No shared variables -> cross product, per SPARQL join semantics.
     Shared variables where one side is a computed native-typed column
-    compare via their term form (see _term_col); the all-string fast
+    compare via their term form (see exprs.as_term); the all-string fast
     path keeps the plain column-name equi-join.
     """
     shared = _shared_vars(left, right)
@@ -98,7 +48,7 @@ def bgp_join(left: DataFrame, right: DataFrame) -> DataFrame:
         lambda a, b: a & b,
         [
             (left[c] == r[f"__r_{c}"]) if ldt[c] == rdt[c]
-            else _term_col(left[c], ldt[c]) == _term_col(r[f"__r_{c}"], rdt[c])
+            else E.as_term(left[c], ldt[c]) == E.as_term(r[f"__r_{c}"], rdt[c])
             for c in shared
         ],
     )
@@ -135,7 +85,7 @@ def optional_join(
                 # term view is the identity here anyway
                 lc, rc = left[c], right[c]
             else:
-                lc, rc = _term_col(left[c], ldt[c]), _term_col(right[c], rdt[c])
+                lc, rc = E.as_term(left[c], ldt[c]), E.as_term(right[c], rdt[c])
             if c in wc:
                 terms.append(left[c].isNull() | right[c].isNull() | (lc == rc))
             else:
@@ -152,8 +102,8 @@ def optional_join(
         left_cols = set(left.columns)
         sel = [
             (
-                F.coalesce(_term_col(left[c], ldt[c]),
-                           _term_col(right[c], rdt[c]))
+                F.coalesce(E.as_term(left[c], ldt[c]),
+                           E.as_term(right[c], rdt[c]))
                 if c in wc and ldt[c] != rdt[c]
                 else (F.coalesce(left[c], right[c]) if c in wc else left[c])
             ).alias(c)
@@ -195,8 +145,8 @@ def optional_join_parts(
             if ldt[c] == rdt[c]:
                 lc, rc = left[c], r[f"__r_{c}"]
             else:
-                lc = _term_col(left[c], ldt[c])
-                rc = _term_col(r[f"__r_{c}"], rdt[c])
+                lc = E.as_term(left[c], ldt[c])
+                rc = E.as_term(r[f"__r_{c}"], rdt[c])
             if c in wc:
                 terms.append(left[c].isNull() | r[f"__r_{c}"].isNull() | (lc == rc))
             else:
@@ -208,8 +158,8 @@ def optional_join_parts(
     for c in left.columns:
         if c in wc:
             v = (
-                F.coalesce(_term_col(left[c], ldt[c]),
-                           _term_col(r[f"__r_{c}"], rdt[c]))
+                F.coalesce(E.as_term(left[c], ldt[c]),
+                           E.as_term(r[f"__r_{c}"], rdt[c]))
                 if ldt[c] != rdt[c]
                 else F.coalesce(left[c], r[f"__r_{c}"])
             )
@@ -244,7 +194,7 @@ def optional_join_parts(
         for c in out_cols:
             if c in set(left.columns):
                 v = (
-                    _term_col(unmatched[c], ldt[c])
+                    E.as_term(unmatched[c], ldt[c])
                     if c in wc and ldt[c] != rdt[c]
                     else F.col(c)
                 )
@@ -283,8 +233,8 @@ def minus(
             lambda a, b: a & b,
             [
                 (left[c] == r[f"__minus_{c}"]) if ldt[c] == rdt[c]
-                else _term_col(left[c], ldt[c])
-                == _term_col(r[f"__minus_{c}"], rdt[c])
+                else E.as_term(left[c], ldt[c])
+                == E.as_term(r[f"__minus_{c}"], rdt[c])
                 for c in shared
             ],
         )
@@ -294,8 +244,8 @@ def minus(
         [
             left[c].isNull() | r[f"__minus_{c}"].isNull()
             | ((left[c] == r[f"__minus_{c}"]) if ldt[c] == rdt[c]
-               else _term_col(left[c], ldt[c])
-               == _term_col(r[f"__minus_{c}"], rdt[c]))
+               else E.as_term(left[c], ldt[c])
+               == E.as_term(r[f"__minus_{c}"], rdt[c]))
             for c in shared
         ],
     )
@@ -316,8 +266,8 @@ def intersection(left: DataFrame, right: DataFrame) -> DataFrame:
         lambda a, b: a & b,
         [
             left[c].eqNullSafe(right[c]) if ldt[c] == rdt[c]
-            else _term_col(left[c], ldt[c]).eqNullSafe(
-                _term_col(right[c], rdt[c]))
+            else E.as_term(left[c], ldt[c]).eqNullSafe(
+                E.as_term(right[c], rdt[c]))
             for c in left.columns
         ],
     )
@@ -355,8 +305,8 @@ def values_join(left: DataFrame, vals: DataFrame) -> DataFrame:
             renamed[f"__values_{c}"].isNull()
             | left[c].isNull()
             | ((renamed[f"__values_{c}"] == left[c]) if ldt[c] == vdt[c]
-               else _term_col(renamed[f"__values_{c}"], vdt[c])
-               == _term_col(left[c], ldt[c]))
+               else E.as_term(renamed[f"__values_{c}"], vdt[c])
+               == E.as_term(left[c], ldt[c]))
             for c in shared
         ],
     )
@@ -365,8 +315,8 @@ def values_join(left: DataFrame, vals: DataFrame) -> DataFrame:
         if ldt[c] != vdt[c]:
             out = out.withColumn(
                 c,
-                F.coalesce(_term_col(left[c], ldt[c]),
-                           _term_col(renamed[f"__values_{c}"], vdt[c])),
+                F.coalesce(E.as_term(left[c], ldt[c]),
+                           E.as_term(renamed[f"__values_{c}"], vdt[c])),
             )
         else:
             out = out.withColumn(
@@ -416,27 +366,15 @@ def group_agg(df: DataFrame, keys: list[str], aggs: list[Column]) -> DataFrame:
     return df.groupBy(*keys).agg(*aggs)
 
 
-def multi_projection(
-    df: DataFrame, templates: list[dict[str, Column]], drop_incomplete: bool = False
-) -> DataFrame:
-    """MultiProjection (CONSTRUCT templates): one input row -> N projected
-    rows (HTEE:293-319), with duplicate suppression.
-
-    drop_incomplete: CONSTRUCT semantics (§16.2) — a projected row with
-    any NULL component (unbound template variable) or an ill-formed
-    triple (literal subject, non-IRI predicate) is omitted."""
+def multi_projection(df: DataFrame, templates: list[dict[str, Column]]) -> DataFrame:
+    """MultiProjection (CONSTRUCT / update templates): one input row -> N
+    projected rows in ONE pass over ``df`` (HTEE:293-319).  Bag
+    semantics, like the reference's iteration: a caller that needs a
+    set dedups the result itself."""
     cols = list(templates[0].keys())
     structs = [F.struct(*[t[c].alias(c) for c in cols]) for t in templates]
     exploded = df.select(F.explode(F.array(*structs)).alias("_t"))
-    out = exploded.select(*[F.col(f"_t.{c}").alias(c) for c in cols])
-    if drop_incomplete:
-        for c in cols:
-            out = out.where(F.col(c).isNotNull())
-        if {"subj", "pred"} <= set(cols):
-            out = out.where(
-                ~F.col("subj").startswith('"') & F.col("pred").startswith("<")
-            )
-    return out.dropDuplicates()
+    return exploded.select(*[F.col(f"_t.{c}").alias(c) for c in cols])
 
 
 def exists_filter(

@@ -64,6 +64,51 @@ def bind_safe(expr: Column) -> Column:
     return expr
 
 
+def as_term(col: Column, dtype: str) -> Column:
+    """Solution column of Spark type ``dtype`` -> N-Triples term column.
+
+    Pattern variables hold term strings and pass through; computed
+    values (BIND, projections, aggregates) keep their native Spark type
+    and render to their canonical typed-literal form.  Every place a
+    native value meets a term uses this one rule: joins compare term to
+    term (strict label equality, the Value.equals the reference's
+    binding-set joins use, so "01"^^xsd:integer does NOT match a
+    computed 1), templates instantiate it, and result formats print it.
+
+    The engine's numeric tower is double, so an integral value renders
+    as xsd:integer (SPARQL arithmetic preserves integer for integer
+    inputs, and BIND(?a + 1) must term-match a stored "2"^^xsd:integer);
+    any other number renders as xsd:double."""
+    if dtype == "string":
+        return col
+    if dtype == "boolean":
+        return F.when(
+            col.isNotNull(),
+            F.concat(F.lit('"'), col.cast("string"),
+                     F.lit(f'"^^<{nt.XSD}boolean>')),
+        )
+    if dtype in ("double", "float") or dtype.startswith("decimal"):
+        i = col.try_cast("long")
+        return F.when(
+            col.isNotNull(),
+            F.when(
+                i.isNotNull() & (i.cast("double") == col.cast("double")),
+                F.concat(F.lit('"'), i.cast("string"),
+                         F.lit(f'"^^<{nt.XSD}integer>')),
+            ).otherwise(
+                F.concat(F.lit('"'), col.cast("string"),
+                         F.lit(f'"^^<{nt.XSD}double>'))
+            ),
+        )
+    if dtype in ("tinyint", "smallint", "int", "bigint"):
+        return F.when(
+            col.isNotNull(),
+            F.concat(F.lit('"'), col.cast("string"),
+                     F.lit(f'"^^<{nt.XSD}integer>')),
+        )
+    return col.cast("string")
+
+
 _DATETIME_TYPES = (nt.XSD + "dateTime", nt.XSD + "date")
 
 

@@ -1,26 +1,46 @@
-"""Statement-pattern scan — the leaf of every SPARQL query.
+"""Statement-pattern binding — the leaf of every SPARQL query.
 
 Halyard picks the index permutation whose prefix covers the bound terms
 and builds an HBase range scan (common/.../HalyardTableUtils.java:300-373,
-scan builders :496-510, 16-way dispatch).  Spark-side, the same effect is
-a filter over the sorted mirror chosen by ``materialize.pick_index``:
-partition pruning (ctx partition column) + parquet min/max row-group
-pruning on the sort-leading column do what start/stop rows do, and the
-filter itself is pushed into the scan (PushedFilters in explain()).
+scan builders :496-510, 16-way dispatch).  Here a pattern is a filter
+over the quad frame it is given: the SPARQL planner scans whatever frame
+its caller passed (the store's spo mirror, an in-memory snapshot) and
+picks no mirror per pattern — nothing calls ``materialize.pick_index``.
+Spark does the pruning: partition pruning on a ctx-partitioned store
+plus parquet min/max row-group pruning, with the equality filters pushed
+into the scan (PushedFilters in explain()).
 
-Unbound positions become projected variables (renamed columns);
-bound positions become equality filters and are dropped from the output —
-exactly the binding semantics of HBaseSail.StatementScanner
-(sail/.../HBaseSail.java:685-787) minus the hash-collision re-check,
-which is unnecessary because we store full values in columns.
+Bound positions become equality filters and are dropped from the
+output; unbound positions become variables through :func:`bind_columns`,
+the one binder every pattern shape (triple, predicate set, negated
+property set, path closure) shares — the binding semantics of
+HBaseSail.StatementScanner (sail/.../HBaseSail.java:685-787) minus the
+hash-collision re-check, which is unnecessary because we store full
+values in columns.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _POSITIONS = ["subj", "pred", "obj", "ctx"]
+
+
+def bind_columns(df: DataFrame, bindings: list[tuple[str, Column]]) -> DataFrame:
+    """Project (variable name, column) pairs as a solution frame.  A
+    REPEATED name becomes an equality constraint plus ONE output column,
+    as SPARQL requires of a variable used twice in one pattern
+    (``?x <p> ?x``, ``?x !<p> ?x``, ``GRAPH ?g { ?g p+ ?o }``)."""
+    first: dict[str, Column] = {}
+    out = []
+    for name, col in bindings:
+        if name in first:
+            df = df.where(first[name] == col)
+        else:
+            first[name] = col
+            out.append(col.alias(name))
+    return df.select(*out)
 
 
 def statement_pattern(
@@ -42,22 +62,12 @@ def statement_pattern(
         if term is not None:
             df = df.filter(F.col(pos) == term)
     vars = vars or {}
-    out_cols = []
-    seen: dict[str, str] = {}
-    for pos in _POSITIONS:
-        if bound[pos] is not None or pos not in df.columns:
-            continue
-        # ctx is only a variable in a QUAD pattern — project it solely when
-        # the caller names it; otherwise a NULL ctx would join NULL<->NULL
-        # and (correctly but surprisingly) empty every BGP join.
-        if pos == "ctx" and "ctx" not in vars:
-            continue
-        name = vars.get(pos, pos)
-        if name in seen:
-            # repeated variable in one pattern (?x <p> ?x): equality
-            # constraint + a single output column, as in SPARQL
-            df = df.filter(F.col(seen[name]) == F.col(pos))
-            continue
-        seen[name] = pos
-        out_cols.append(F.col(pos).alias(name))
-    return df.select(*out_cols)
+    # ctx is only a variable in a QUAD pattern — project it solely when
+    # the caller names it; otherwise a NULL ctx would join NULL<->NULL
+    # and (correctly but surprisingly) empty every BGP join.
+    return bind_columns(df, [
+        (vars.get(pos, pos), F.col(pos))
+        for pos in _POSITIONS
+        if bound[pos] is None and pos in df.columns
+        and (pos != "ctx" or "ctx" in vars)
+    ])

@@ -44,6 +44,7 @@ from halyard_spark import nt
 from halyard_spark.query import algebra as A
 from halyard_spark.query import exprs as E
 from halyard_spark.query import fulltext as FT
+from halyard_spark.query.pattern import bind_columns
 from halyard_spark.session import local_frame
 
 # ---------------------------------------------------------------- tokens
@@ -1414,20 +1415,20 @@ class _Planner:
             out = self.eval_path_expr(s, p[1], o)
             internal = [c for c in out.columns if c.startswith("__pathvar")]
             return out.drop(*internal) if internal else out
-        positions = {"subj": s, "pred": p, "obj": o}
+        return self._scan(self._scoped(), {"subj": s, "pred": p, "obj": o})
+
+    def _scan(self, df: DataFrame, positions: dict) -> DataFrame:
+        """Bind one pattern over ``df``: ``positions`` maps quad columns
+        to pattern terms.  Constants become equality filters, variables
+        bind through pattern.bind_columns (a repeated variable is an
+        equality), and inside GRAPH ?g the ctx column binds the graph
+        variable for every pattern."""
         if self.graph is not None and self.graph[0] == "var":
-            positions["ctx"] = self.graph  # bind the graph variable per triple
-        df = self._scoped()
-        out_cols, seen_vars = [], {}
-        eq_filters = []
+            positions = {**positions, "ctx": self.graph}
+        bindings = []
         for pos, term in positions.items():
             if term[0] == "var":
-                v = term[1]
-                if v in seen_vars:  # repeated var in one pattern: equality
-                    eq_filters.append(F.col(pos) == F.col(seen_vars[v]))
-                else:
-                    seen_vars[v] = pos
-                    out_cols.append(F.col(pos).alias(v))
+                bindings.append((term[1], F.col(pos)))
             elif pos == "obj" and term[0] == "lit" and term[3] == FT.SEARCH_DATATYPE:
                 # the reference's magic full-text literal: an object typed
                 # halyard:search triggers the search scan instead of an
@@ -1435,9 +1436,7 @@ class _Planner:
                 df = df.filter(FT.match_condition(F.col("obj"), term[1]))
             else:
                 df = df.filter(F.col(pos) == _Parser.term_lexical(term))
-        for cond in eq_filters:
-            df = df.filter(cond)
-        return df.select(*out_cols)
+        return bind_columns(df, bindings)
 
     # -- property paths
     def eval_path_expr(self, s, ast, o) -> DataFrame:
@@ -1485,41 +1484,16 @@ class _Planner:
         """One scan matching any of several predicates (pred IN set),
         binding the endpoints like a triple pattern."""
         df = self._scoped().where(F.col("pred").isin([nt.iri(i) for i in pred_iris]))
-        out_cols, seen = [], {}
-        eq = []
-        for pos, term in (("subj", s), ("obj", o)):
-            if term[0] == "var":
-                if term[1] in seen:
-                    eq.append(F.col(pos) == F.col(seen[term[1]]))
-                else:
-                    seen[term[1]] = pos
-                    out_cols.append(F.col(pos).alias(term[1]))
-            else:
-                df = df.filter(F.col(pos) == _Parser.term_lexical(term))
-        if self.graph is not None and self.graph[0] == "var":
-            out_cols.append(F.col("ctx").alias(self.graph[1]))
-        for cond in eq:
-            df = df.filter(cond)
-        return df.select(*out_cols)
+        return self._scan(df, {"subj": s, "obj": o})
 
     def eval_nps(self, s, fwd: list[str], inv: list[str], o) -> DataFrame:
         """Negated property set !(p1|..|^q1|..): forward edges whose
         predicate is outside {p..}, plus inverted edges outside {q..}."""
         def scan(subj_term, obj_term, excluded: list[str]) -> DataFrame:
-            df = self._scoped().where(
-                ~F.col("pred").isin([nt.iri(i) for i in excluded])
-                if excluded
-                else F.lit(True)
-            )
-            out_cols = []
-            for pos, term in (("subj", subj_term), ("obj", obj_term)):
-                if term[0] == "var":
-                    out_cols.append(F.col(pos).alias(term[1]))
-                else:
-                    df = df.filter(F.col(pos) == _Parser.term_lexical(term))
-            if self.graph is not None and self.graph[0] == "var":
-                out_cols.append(F.col("ctx").alias(self.graph[1]))
-            return df.select(*out_cols)
+            df = self._scoped()
+            if excluded:
+                df = df.where(~F.col("pred").isin([nt.iri(i) for i in excluded]))
+            return self._scan(df, {"subj": subj_term, "obj": obj_term})
 
         parts = []
         if fwd or not inv:  # a pure-inverse set has no forward component
@@ -1533,160 +1507,91 @@ class _Planner:
 
     _GRAPH_SEP = "\x00"  # cannot occur in N-Triples lexicals
 
-    @staticmethod
-    def _select_bindings(df: DataFrame, bindings: list[tuple[str, Column]]) -> DataFrame:
-        """Project (name, column) pairs as a solution frame.  A REPEATED
-        name becomes an equality constraint plus ONE output column — the
-        same rule eval_triple applies to a repeated variable inside one
-        pattern (`?s p+ ?s`, `GRAPH ?g { ?g p+ ?o }`)."""
-        first: dict[str, Column] = {}
-        out = []
-        for name, col in bindings:
-            if name in first:
-                df = df.where(first[name] == col)
-            else:
-                first[name] = col
-                out.append(col.alias(name))
-        return df.select(*out)
-
     def eval_path_closure(self, s, sub_path, mod: str, o) -> DataFrame:
         """Closure modifier over a sub-path (ArbitraryLengthPath /
         ZeroLengthPath, HTEE:1046-1098).  A bound endpoint routes to the
         frontier-BFS reachable_from — never the whole-graph closure;
         var-var falls back to path doubling / zero-or-one.
 
-        Inside GRAPH ?g the closure is evaluated PER GRAPH in one job by
-        prefixing every node id with its ctx ("ctx\\x00term"): both ends
-        of an edge carry the same prefix, so paths can never cross graph
-        boundaries, and the prefix splits back out as the ?g binding —
-        no per-graph loop, the same O(log d) rounds over all graphs at
-        once."""
+        Every node enters the closure under a key: the term itself, or
+        "ctx\\x00term" inside GRAPH ?g.  Both ends of an edge carry the
+        same prefix, so paths can never cross graph boundaries, and the
+        prefix splits back out as the ?g binding — no per-graph loop,
+        the same O(log d) rounds over all graphs at once."""
         from halyard_spark.query import path as PATH
 
         graph_var = self.graph[1] if (self.graph is not None and self.graph[0] == "var") else None
-        if graph_var is not None:
-            sep = F.lit(self._GRAPH_SEP)
-            base = self.triples if "ctx" in self.triples.columns else (
-                self.triples.withColumn("ctx", F.lit(None).cast("string"))
-            )
-            base = base.where(F.col("ctx").isNotNull())
-            ds_named = self.dataset[1] if (self.dataset[0] is not None or self.dataset[1] is not None) else None
-            if self.dataset[0] is not None or self.dataset[1] is not None:
-                named = ds_named or []
-                base = base.where(F.col("ctx").isin(named) if named else F.lit(False))
-            if sub_path[0] == "link":
-                scoped_edges = base.where(F.col("pred") == nt.iri(sub_path[1]))
-                edges = scoped_edges.select(
-                    F.concat(F.col("ctx"), sep, F.col("subj")).alias("src"),
-                    F.concat(F.col("ctx"), sep, F.col("obj")).alias("dst"),
-                )
-            else:
-                # COMPOSITE sub-path (seq/alt/inverse/NPS/nested closure):
-                # under GRAPH ?g every leaf scan already binds ctx to the
-                # graph var, and the composition joins on it — so one
-                # eval_path_expr call yields per-graph pair sets whose
-                # components all live in the SAME graph.  Prefixing the
-                # endpoints with that graph column drops them into the
-                # same one-job-for-all-graphs closure as plain links.
-                sv, ov = self._fresh_var(), self._fresh_var()
-                sub_pairs = self.eval_path_expr(("var", sv), sub_path, ("var", ov))
-                edges = sub_pairs.select(
-                    F.concat(F.col(graph_var), sep, F.col(sv)).alias("src"),
-                    F.concat(F.col(graph_var), sep, F.col(ov)).alias("dst"),
-                )
-            contexts = base.select("ctx").distinct()
-            s_var, o_var = s[0] == "var", o[0] == "var"
-            if s_var and o_var:
-                if mod == "+":
-                    pairs = PATH.transitive_closure(edges, min_length=1)
-                else:
-                    terms = base.select(
-                        F.concat(F.col("ctx"), sep, F.col("subj")).alias("n")
-                    ).union(base.select(F.concat(F.col("ctx"), sep, F.col("obj")).alias("n")))
-                    if mod == "?":
-                        pairs = PATH.zero_or_one_path(edges, nodes=terms)
-                    else:
-                        pairs = PATH.transitive_closure(edges, min_length=0, nodes=terms)
-            else:
-                bound = s if not s_var else o
-                e = edges if not s_var else edges.select(
-                    F.col("dst").alias("src"), F.col("src").alias("dst")
-                )
-                seeds = contexts.select(
-                    F.concat(F.col("ctx"), sep, F.lit(_Parser.term_lexical(bound))).alias("src")
-                )
-                pairs = PATH.reachable_from(
-                    e, seeds, min_length=0 if mod in ("*", "?") else 1,
-                    max_length=1 if mod == "?" else None,
-                )
-                if not s_var and not o_var:
-                    pairs = pairs.where(
-                        F.split(F.col("dst"), self._GRAPH_SEP, 2)[1] == _Parser.term_lexical(o)
-                    )
-            split_src = F.split(F.col("src"), self._GRAPH_SEP, 2)
-            split_dst = F.split(F.col("dst"), self._GRAPH_SEP, 2)
-            bindings = [(graph_var, split_src[0])]
-            if s_var and o_var:
-                bindings += [(s[1], split_src[1]), (o[1], split_dst[1])]
-            elif s_var:  # bound object: pairs' dst is the reached source
-                bindings += [(s[1], split_dst[1])]
-            elif o_var:
-                bindings += [(o[1], split_dst[1])]
-            return self._select_bindings(pairs, bindings)
+        sep = self._GRAPH_SEP
+
+        def key(ctx: Column | None, term: Column) -> Column:
+            return term if graph_var is None else F.concat(ctx, F.lit(sep), term)
+
+        def term_of(node: Column) -> Column:
+            return node if graph_var is None else F.split(node, sep, 2)[1]
+
+        scoped = self._scoped()
         if sub_path[0] == "link":  # fast path: single-predicate edge scan
-            edges = self._scoped().where(F.col("pred") == nt.iri(sub_path[1])).select(
-                F.col("subj").alias("src"), F.col("obj").alias("dst")
+            edges = scoped.where(F.col("pred") == nt.iri(sub_path[1])).select(
+                key(F.col("ctx"), F.col("subj")).alias("src"),
+                key(F.col("ctx"), F.col("obj")).alias("dst"),
             )
         else:
+            # COMPOSITE sub-path (seq/alt/inverse/NPS/nested closure):
+            # under GRAPH ?g every leaf scan already binds ctx to the
+            # graph var and the composition joins on it, so each pair's
+            # components live in the SAME graph and key like a link's
             sv, ov = self._fresh_var(), self._fresh_var()
-            pairs_df = self.eval_path_expr(("var", sv), sub_path, ("var", ov))
-            edges = pairs_df.select(F.col(sv).alias("src"), F.col(ov).alias("dst"))
-        min_length = 0 if mod == "*" else 1
+            sub_pairs = self.eval_path_expr(("var", sv), sub_path, ("var", ov))
+            ctx = F.col(graph_var) if graph_var is not None else None
+            edges = sub_pairs.select(
+                key(ctx, F.col(sv)).alias("src"), key(ctx, F.col(ov)).alias("dst")
+            )
         s_var, o_var = s[0] == "var", o[0] == "var"
         if s_var and o_var:
             if mod == "+":
                 pairs = PATH.transitive_closure(edges, min_length=1)
             else:
                 # zero-length arm: identity over EVERY term in (graph)
-                # scope, not just this predicate's endpoints (W3C
+                # scope, not just this path's endpoints (W3C
                 # ZeroLengthPath; a seq like `p1/p2?` must keep p1 pairs
                 # whose object has no p2 edge)
-                scoped = self._scoped()
-                terms = scoped.select(F.col("subj").alias("n")).union(
-                    scoped.select(F.col("obj").alias("n"))
+                terms = scoped.select(key(F.col("ctx"), F.col("subj")).alias("n")).union(
+                    scoped.select(key(F.col("ctx"), F.col("obj")).alias("n"))
                 )
                 if mod == "?":
                     pairs = PATH.zero_or_one_path(edges, nodes=terms)
                 else:
                     pairs = PATH.transitive_closure(edges, min_length=0, nodes=terms)
-            return self._select_bindings(
-                pairs, [(s[1], F.col("src")), (o[1], F.col("dst"))]
-            )
-        if not s_var and not o_var:
-            # both endpoints bound (the ASK shape): BFS from the source,
-            # keep at most the one matching pair; the zero-column result
-            # acts as an EXISTS gate under bgp_join's cross product
-            seeds = [_Parser.term_lexical(s)]
-            if mod == "?":
-                pairs = PATH.reachable_from(edges, seeds, min_length=0, max_length=1)
-            else:
-                pairs = PATH.reachable_from(edges, seeds, min_length=min_length)
-            return pairs.where(F.col("dst") == _Parser.term_lexical(o)).limit(1).select()
-        if not s_var:  # bound source
-            seeds = [_Parser.term_lexical(s)]
-            if mod == "?":
-                pairs = PATH.reachable_from(edges, seeds, min_length=0, max_length=1)
-            else:
-                pairs = PATH.reachable_from(edges, seeds, min_length=min_length)
-            return pairs.select(F.col("dst").alias(o[1]))
-        # bound object: BFS over reversed edges seeded from the object
-        rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        seeds = [_Parser.term_lexical(o)]
-        if mod == "?":
-            pairs = PATH.reachable_from(rev, seeds, min_length=0, max_length=1)
+            ends = [(s[1], "src"), (o[1], "dst")]
         else:
-            pairs = PATH.reachable_from(rev, seeds, min_length=min_length)
-        return pairs.select(F.col("dst").alias(s[1]))
+            # BFS from the bound endpoint; a bound object walks the
+            # reversed edges.  Outside a graph the constant is a driver
+            # seed (reachable_from's probe); inside GRAPH ?g it is one
+            # seed per graph in scope.
+            start, end = (o, s) if s_var else (s, o)
+            if s_var:
+                edges = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+            seed = _Parser.term_lexical(start)
+            seeds = [seed] if graph_var is None else scoped.select("ctx").distinct().select(
+                key(F.col("ctx"), F.lit(seed)).alias("src")
+            )
+            pairs = PATH.reachable_from(
+                edges, seeds, min_length=0 if mod in ("*", "?") else 1,
+                max_length=1 if mod == "?" else None,
+            )
+            if end[0] == "var":
+                ends = [(end[1], "dst")]
+            else:
+                # both endpoints bound (the ASK shape): the one matching
+                # pair per seed; with no variable left, the zero-column
+                # result acts as an EXISTS gate under bgp_join's cross
+                # product
+                pairs = pairs.where(term_of(F.col("dst")) == _Parser.term_lexical(end))
+                ends = []
+        bindings = [(name, term_of(F.col(c))) for name, c in ends]
+        if graph_var is not None:
+            bindings.insert(0, (graph_var, F.split(F.col("src"), sep, 2)[0]))
+        return bind_columns(pairs, bindings)
 
     # -- expressions
     def eval_expr(self, e, df: DataFrame) -> tuple[Column, str]:
@@ -1919,20 +1824,10 @@ class _Planner:
             if kind == _EXPR_BOOL:
                 return F.when(col.isNotNull(), F.lit(nt.XSD + "boolean")), _EXPR_STR
             if kind == _EXPR_NUM:
-                # numeric expression result — same convention as
-                # _var_as_term's serialization: integral value renders
-                # as xsd:integer, else xsd:double (code-review fix: the
-                # raw numeric column previously fell through to
-                # nt_datatype and returned NULL for every numeric expr)
-                i = col.try_cast("long")
+                # a numeric result's datatype is the one its term form
+                # carries (integral -> xsd:integer, else xsd:double)
                 return (
-                    F.when(
-                        col.isNotNull(),
-                        F.when(
-                            i.isNotNull() & (i.cast("double") == col.cast("double")),
-                            F.lit(nt.XSD + "integer"),
-                        ).otherwise(F.lit(nt.XSD + "double")),
-                    ),
+                    F.when(col.isNotNull(), nt.nt_datatype(E.as_term(col, "double"))),
                     _EXPR_STR,
                 )
             if kind == _EXPR_TERM:
@@ -2675,33 +2570,10 @@ def sparql_query(
                         keys.append(col if asc else col.desc())
                 df = df.orderBy(*keys)
             df = A.slice_rows(df, offset=q.offset, limit=q.limit)
-        def col_of(term):
-            if term[0] == "var":
-                if term[1].startswith("__bnode_") and term[1] not in df.columns:
-                    # template blank node: a FRESH bnode per solution
-                    # (§16.2.1) — deterministic content hash of the
-                    # label + the solution's bindings, so the same
-                    # solution always mints the same label (stable
-                    # across partitionings) and distinct solutions mint
-                    # distinct ones
-                    basis = F.concat_ws(
-                        "\x1f", F.lit(term[1]),
-                        *[F.coalesce(F.col(c).cast("string"), F.lit(""))
-                          for c in sorted(df.columns)],
-                    )
-                    return F.concat(F.lit("_:c"), F.sha1(basis))
-                return _var_as_term(df, term[1])
-            return F.lit(_Parser.term_lexical(term))
-
-        templates = [
-            {"subj": col_of(s), "pred": col_of(p), "obj": col_of(o)}
-            for _, s, p, o in q.template
-        ]
-        # a solution that leaves any template variable unbound produces
-        # no triple for that template row (§16.2), and ill-formed triples
-        # (literal subject, non-IRI predicate) are likewise omitted
-        out = A.multi_projection(df, templates, drop_incomplete=True)
-        return out
+        # the constructed graph is a set
+        return _instantiate(
+            df, [(s, p, o) for _, s, p, o in q.template], "_:c"
+        ).dropDuplicates()
 
     return planner.plan_select(q, df=df)
 
@@ -2897,91 +2769,62 @@ def _flagged_pattern(pat: Column, flags: str) -> Column | None:
 
 def _var_as_term(df: DataFrame, name: str) -> Column:
     """Bound-variable column -> N-Triples term column for template
-    instantiation (CONSTRUCT / update templates).  Pattern-bound
-    variables already hold lexical terms (string); BIND-computed values
-    carry native Spark types and MUST be serialized here — a raw double
-    column unioned with the string snapshot makes ANSI Spark cast every
-    stored term to double and abort the job.  The engine's numeric tower
-    is double, so an integral value renders as xsd:integer (SPARQL
-    arithmetic preserves integer for integer inputs)."""
+    instantiation (exprs.as_term).  A raw native column unioned with the
+    string snapshot would make ANSI Spark cast every stored term to
+    double and abort the job."""
     if name not in df.columns:
         # a template variable with no binding anywhere in the WHERE
         # result: always unbound -> the template row is dropped
         return F.lit(None).cast("string")
-    dtype = df.schema[name].dataType.simpleString()
-    col = F.col(name)
-    if dtype == "string":
-        return col
-    if dtype == "boolean":
-        return F.when(
-            col.isNotNull(),
-            F.concat(F.lit('"'), col.cast("string"),
-                     F.lit(f'"^^<{nt.XSD}boolean>')),
-        )
-    if dtype in ("double", "float"):
-        i = col.try_cast("long")
-        return F.when(
-            col.isNotNull(),
-            F.when(
-                i.isNotNull() & (i.cast("double") == col),
-                F.concat(F.lit('"'), i.cast("string"),
-                         F.lit(f'"^^<{nt.XSD}integer>')),
-            ).otherwise(
-                F.concat(F.lit('"'), col.cast("string"),
-                         F.lit(f'"^^<{nt.XSD}double>'))
-            ),
-        )
-    if dtype in ("tinyint", "smallint", "int", "bigint"):
-        return F.when(
-            col.isNotNull(),
-            F.concat(F.lit('"'), col.cast("string"),
-                     F.lit(f'"^^<{nt.XSD}integer>')),
-        )
-    return col.cast("string")
+    return E.as_term(F.col(name), df.schema[name].dataType.simpleString())
 
 
-def _instantiate(bound: DataFrame, quads: list) -> DataFrame:
-    """Template quads x solution bag -> candidate quad rows.
+_QUAD = ("subj", "pred", "obj", "ctx")
 
-    UPDATE §3.1.3 instantiation semantics (same rules CONSTRUCT applies
-    through multi_projection): a template blank node mints a FRESH bnode
-    per solution (deterministic content hash of label + bindings — the
-    same scheme as CONSTRUCT, stable across partitionings); a solution
-    that leaves any template variable unbound produces no quad for that
-    template row; ill-formed quads (literal subject, non-IRI predicate
-    or graph name) are skipped, never inserted."""
 
-    def c(term):
+def _instantiate(solutions: DataFrame, templates: list, bnode: str) -> DataFrame:
+    """Template triples / quads x solution bag -> candidate rows, in ONE
+    pass over the solutions (multi_projection's explode).  Bag
+    semantics: CONSTRUCT dedups the result, UPDATE's bulk_update
+    already does.
+
+    Instantiation rules shared by CONSTRUCT (§16.2) and UPDATE (§3.1.3):
+    a template blank node mints a FRESH bnode per solution — ``bnode``
+    ("_:c" / "_:u") plus the sha1 of the label and the solution's
+    bindings, so the same solution always mints the same label (stable
+    across partitionings) and distinct solutions mint distinct ones; a
+    solution that leaves any template variable unbound produces no row
+    for that template; ill-formed rows (literal subject, non-IRI
+    predicate or graph name) are skipped."""
+
+    def col_of(term) -> Column:
         if term is None:
             return F.lit(None).cast("string")
         if term[0] == "var":
-            if term[1].startswith("__bnode_") and term[1] not in bound.columns:
+            if term[1].startswith("__bnode_") and term[1] not in solutions.columns:
                 basis = F.concat_ws(
                     "\x1f", F.lit(term[1]),
-                    *[F.coalesce(F.col(x).cast("string"), F.lit(""))
-                      for x in sorted(bound.columns)],
+                    *[F.coalesce(F.col(c).cast("string"), F.lit(""))
+                      for c in sorted(solutions.columns)],
                 )
-                return F.concat(F.lit("_:u"), F.sha1(basis))
-            return _var_as_term(bound, term[1])
+                return F.concat(F.lit(bnode), F.sha1(basis))
+            return _var_as_term(solutions, term[1])
         return F.lit(_Parser.term_lexical(term))
 
-    parts = []
-    for s, p, o, ctx in quads:
-        row = bound.select(
-            c(s).alias("subj"), c(p).alias("pred"), c(o).alias("obj"), c(ctx).alias("ctx")
-        ).where(
-            F.col("subj").isNotNull()
-            & F.col("pred").isNotNull()
-            & F.col("obj").isNotNull()
-            & ~F.col("subj").startswith('"')
-            & F.col("pred").startswith("<")
-            & (F.col("ctx").isNull() | F.col("ctx").startswith("<"))
-        )
-        parts.append(row)
-    out = parts[0]
-    for p_ in parts[1:]:
-        out = out.unionByName(p_)
-    return out
+    cols = _QUAD[: len(templates[0])]
+    out = A.multi_projection(
+        solutions, [{c: col_of(t) for c, t in zip(cols, tpl)} for tpl in templates]
+    )
+    ok = (
+        F.col("subj").isNotNull()
+        & F.col("pred").isNotNull()
+        & F.col("obj").isNotNull()
+        & ~F.col("subj").startswith('"')
+        & F.col("pred").startswith("<")
+    )
+    if "ctx" in cols:
+        ok = ok & (F.col("ctx").isNull() | F.col("ctx").startswith("<"))
+    return out.where(ok)
 
 
 def _reject_delete_bnodes(quads: list, where_what: str) -> None:
@@ -3082,15 +2925,15 @@ def sparql_update(triples: DataFrame, update: str, base: str | None = None) -> D
                     ingraph = [q for q in delete_q if q[3] is not None]
                     parts = []
                     if anygraph:
-                        tpl = _instantiate(bound, anygraph).select("subj", "pred", "obj").distinct()
+                        tpl = _instantiate(bound, anygraph, "_:u").select("subj", "pred", "obj").distinct()
                         parts.append(snapshot.join(tpl, ["subj", "pred", "obj"], "left_semi"))
                     if ingraph:
-                        tpl = _instantiate(bound, ingraph).select("subj", "pred", "obj", "ctx").distinct()
+                        tpl = _instantiate(bound, ingraph, "_:u").select("subj", "pred", "obj", "ctx").distinct()
                         parts.append(snapshot.join(tpl, ["subj", "pred", "obj", "ctx"], "left_semi"))
                     dels = parts[0]
                     for p_ in parts[1:]:
                         dels = dels.unionByName(p_)
-                ins = _instantiate(bound, insert_q) if insert_q else None
+                ins = _instantiate(bound, insert_q, "_:u") if insert_q else None
                 return dels, ins
 
             return stage

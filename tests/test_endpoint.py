@@ -405,3 +405,45 @@ def test_evaluation_failure_is_server_error(spark, tmp_path):
         assert status(q.replace("urn:svc", "urn:unregistered")) == 400
     finally:
         endpoint.stop()
+
+
+def test_endpoint_computed_values_are_typed_terms(spark):
+    """Aggregates and comparisons keep native Spark types in the plan;
+    every result format renders them as typed literals (an integral
+    COUNT is xsd:integer, AVG xsd:double, a comparison the xsd:boolean
+    lexical "true", not Python's "True")."""
+    xsd = nt.XSD
+    g = spark.createDataFrame(
+        [("<urn:a>", "<urn:p>", nt.lit("1", dtype=xsd + "integer"), None),
+         ("<urn:b>", "<urn:p>", nt.lit("4", dtype=xsd + "integer"), None)],
+        "subj string, pred string, obj string, ctx string",
+    )
+    ep = SparqlEndpoint(g).start()
+    try:
+        q = urllib.parse.quote(
+            "SELECT (COUNT(?s) AS ?n) (AVG(?o) AS ?avg) (SUM(?o) > 3 AS ?big) "
+            "WHERE { ?s <urn:p> ?o }"
+        )
+        url = f"http://127.0.0.1:{ep.port}/sparql?query={q}"
+
+        def get(accept):
+            req = urllib.request.Request(url, headers={"Accept": accept})
+            with urllib.request.urlopen(req, timeout=60) as resp:
+                return resp.read().decode()
+
+        (b,) = json.loads(get("application/sparql-results+json"))["results"]["bindings"]
+        assert b == {
+            "n": {"type": "literal", "value": "2", "datatype": xsd + "integer"},
+            "avg": {"type": "literal", "value": "2.5", "datatype": xsd + "double"},
+            "big": {"type": "literal", "value": "true", "datatype": xsd + "boolean"},
+        }
+        body = get("application/sparql-results+xml")
+        assert f'<literal datatype="{xsd}integer">2</literal>' in body
+        assert f'<literal datatype="{xsd}double">2.5</literal>' in body
+        assert f'<literal datatype="{xsd}boolean">true</literal>' in body
+        assert get("text/csv").splitlines()[1] == "2,2.5,true"
+        assert get("text/tab-separated-values").splitlines()[1] == "\t".join([
+            f'"2"^^<{xsd}integer>', f'"2.5"^^<{xsd}double>', f'"true"^^<{xsd}boolean>',
+        ])
+    finally:
+        ep.stop()

@@ -168,11 +168,17 @@ def test_resume_skips_stages(spark, src, pipeline_out):
         assert report2[stage]["skipped"], stage
 
 
-def test_link_salted_equals_broadcast(spark, src):
+def test_link_shuffle_equals_broadcast(spark, src):
+    """The dictionary size picks the join; both joins link the same rows."""
     m = extract.extract_mentions(src).cache()
     d = link.build_dictionary(m).cache()
-    a = link.link_mentions(m, d, strategy="broadcast")
-    b = link.link_mentions(m, d, strategy="salted", salt_buckets=4)
+    a = link.link_mentions(m, d, dict_rows=0)
+    b = link.link_mentions(m, d, dict_rows=link.BROADCAST_MAX_ROWS + 1)
+
+    def hinted(df):
+        return "strategy=broadcast" in df._jdf.queryExecution().analyzed().toString()
+
+    assert hinted(a) and not hinted(b)
     cols = ["repo", "path", "kind", "name", "canonical_id"]
     assert a.select(cols).exceptAll(b.select(cols)).count() == 0
     assert b.select(cols).exceptAll(a.select(cols)).count() == 0
@@ -183,7 +189,7 @@ def test_link_auto_with_size_hint_runs_no_count_job(spark, src):
     m = extract.extract_mentions(src).cache()
     d = link.build_dictionary(m)
     d.count = lambda: (_ for _ in ()).throw(AssertionError("count job ran despite hint"))
-    out = link.link_mentions(m, d, strategy="auto", dict_rows=100)
+    out = link.link_mentions(m, d, dict_rows=100)
     assert out.columns == ["repo", "path", "kind", "name", "canonical_id", "score"]
     assert out.count() > 0  # the join itself still executes
 

@@ -196,6 +196,29 @@ def test_path_negated_property_set(spark, tree):
     assert rows(out2) == [(nt.lit("Ann"),)]  # only ex:name remains forward
 
 
+def test_negated_property_set_repeated_variable(spark):
+    # a variable used at both ends of a negated set is ONE variable: an
+    # equality plus one column, as in a triple pattern (also for the
+    # inverse arm, and for the graph variable inside GRAPH ?g)
+    def t(s, p, o, g=None):
+        return (nt.iri(EX + s), nt.iri(EX + p), nt.iri(EX + o), nt.iri(EX + g) if g else None)
+
+    g = spark.createDataFrame(
+        [t("a", "p", "a"), t("a", "q", "b"), t("b", "r", "b", "g"), t("c", "q", "c", "g")],
+        "subj string, pred string, obj string, ctx string",
+    )
+    x = lambda n: (nt.iri(EX + n),)
+    out = sparql_query(g, PREFIXES + "SELECT * { ?x !ex:p ?x }")
+    assert out.columns == ["x"]
+    assert rows(out) == [x("b"), x("c")]
+    out2 = sparql_query(g, PREFIXES + "SELECT * { ?x !(ex:p|^ex:r) ?x }")
+    assert out2.columns == ["x"]
+    assert rows(out2) == [x("a"), x("b"), x("c"), x("c")]
+    out3 = sparql_query(g, PREFIXES + "SELECT * { GRAPH ?g { ?g !ex:p ?o } }")
+    assert sorted(out3.columns) == ["g", "o"]
+    assert rows(out3) == []
+
+
 def test_path_closure_over_sequence(spark, tree):
     # (childOf/childOf)+ from a: exactly the grandparent chain -> c
     out = sparql_query(tree, PREFIXES + """
@@ -647,6 +670,41 @@ def test_update_insert_into_variable_graph(spark):
     assert (nt.iri(EX + "a"), nt.lit("seen"), nt.iri(EX + "g1")) in got
     assert (nt.iri(EX + "b"), nt.lit("seen"), nt.iri(EX + "g2")) in got
     assert (nt.iri(EX + "a"), nt.lit("seen"), nt.iri(EX + "g2")) not in got
+
+
+def test_update_template_instantiates_in_one_pass(spark, monkeypatch):
+    # every template quad comes out of ONE pass over the WHERE solutions
+    # (no Union arm per quad), and a template bnode mints "_:u" + sha1
+    # hex, the same label each time the same solution is instantiated
+    import re
+
+    from halyard_spark.query import sparql as S
+
+    made = []
+
+    def spy(*args):
+        made.append(real(*args))
+        return made[-1]
+
+    real = S._instantiate
+    monkeypatch.setattr(S, "_instantiate", spy)
+    g = spark.createDataFrame(
+        [(nt.iri(EX + "a"), nt.iri(EX + "p"), nt.lit("1"), None),
+         (nt.iri(EX + "b"), nt.iri(EX + "p"), nt.lit("2"), None)],
+        "subj string, pred string, obj string, ctx string",
+    )
+    update = PREFIXES + """
+        INSERT { ?s ex:q ?o . ?s ex:r ?o . _:n ex:of ?s }
+        WHERE { ?s ex:p ?o }"""
+    minted = []
+    for _ in range(2):
+        out = sparql_update(g, update)
+        minted.append(sorted(r["subj"] for r in out.where(out.pred == nt.iri(EX + "of")).collect()))
+    (ins, _) = made
+    assert "Union" not in ins._jdf.queryExecution().optimizedPlan().toString()
+    assert ins.count() == 6
+    assert len(minted[0]) == 2 and minted[0] == minted[1]
+    assert all(re.fullmatch("_:u[0-9a-f]{40}", b) for b in minted[0])
 
 
 def test_order_by_bare_aggregate(spark, tree):

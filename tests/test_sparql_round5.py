@@ -10,6 +10,8 @@ set joins, which treat missing bindings as wildcards.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from halyard_spark import nt
@@ -153,6 +155,7 @@ def test_construct_repeatable_bnode_labels(store):
     a = sorted(tuple(r) for r in sparql_query(store, q).collect())
     b = sorted(tuple(r) for r in sparql_query(store, q).collect())
     assert a == b and len(a) > 0
+    assert all(re.fullmatch("_:c[0-9a-f]{40}", s) for s, _, _ in a)
 
 
 # -- mixed-kind joins: computed (native-typed) vars meeting pattern
