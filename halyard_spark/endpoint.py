@@ -257,10 +257,16 @@ class SparqlEndpoint:
             def log_message(self, *args):  # quiet
                 pass
 
+            def _fail(self, exc: Exception) -> None:
+                """The one status rule for query and update: a parse error
+                or planner rejection is the client's (400), any other
+                failure the server's (500).  The reference endpoint answers
+                errors, never drops the connection."""
+                client = isinstance(exc, (SyntaxError, ValueError))
+                self.send_error(400 if client else 500, str(exc)[:500])
+
             def _apply_update(self, update_text: str) -> None:
-                """Run a SPARQL UPDATE under the endpoint lock; maps parse
-                errors to 400 and evaluation errors to 500 (the reference
-                endpoint answers errors, never drops the connection)."""
+                """Run a SPARQL UPDATE under the endpoint lock."""
                 try:
                     with ep._update_lock:
                         # localCheckpoint RETURNS the pinned frame — assign
@@ -269,11 +275,8 @@ class SparqlEndpoint:
                         ep.triples = sparql_update(ep.triples, update_text).localCheckpoint(
                             eager=True
                         )
-                except SyntaxError as exc:
-                    self.send_error(400, str(exc)[:500])
-                    return
-                except Exception as exc:  # planner / Spark evaluation error
-                    self.send_error(500, str(exc)[:500])
+                except Exception as exc:
+                    self._fail(exc)
                     return
                 self.send_response(204)
                 self.end_headers()
@@ -309,11 +312,8 @@ class SparqlEndpoint:
                         ep.triples, query, services=ep.services, dataset=dataset
                     )
                     payload = serialize(df).encode()
-                except (SyntaxError, ValueError) as exc:  # parse error / planner rejection
-                    self.send_error(400, str(exc)[:500])
-                    return
-                except Exception as exc:  # evaluation failure: the server's fault
-                    self.send_error(500, str(exc)[:500])
+                except Exception as exc:
+                    self._fail(exc)
                     return
                 self.send_response(200)
                 self.send_header("Content-Type", mtype)

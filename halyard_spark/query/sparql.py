@@ -35,7 +35,8 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
-from functools import reduce
+from functools import partial, reduce
+from typing import Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -959,6 +960,8 @@ class _Parser:
             if not args:
                 raise SyntaxError(f"SPARQL: {name.upper()}() needs an expression or *")
             return ("agg", name, distinct, args, sep)
+        if ":" not in name:  # a keyword builtin: the grammar fixes its arity
+            _builtin(name, len(args), SyntaxError)
         return ("call", name, args)
 
 
@@ -994,6 +997,9 @@ class _Planner:
         # RDF dataset from FROM / FROM NAMED (lists of ctx lexicals, or
         # None each when no clause of that kind was given)
         self.dataset: tuple[list | None, list | None] = (None, None)
+        # the pre-projection columns BNODE() seeds from while a SELECT
+        # projects (None: every column of the frame being evaluated)
+        self._solution_cols: frozenset | None = None
         self._fresh_n = 0
 
     def _fresh_var(self) -> str:
@@ -1733,414 +1739,14 @@ class _Planner:
 
     # -- builtin functions
     def eval_call(self, name: str, args: list, df: DataFrame) -> tuple[Column, str]:
-        ev = [self.eval_expr(a, df) for a in args]
-
-        def term(i):  # raw term column
-            return ev[i][0]
-
-        def s(i):
-            return self.to_str(*ev[i])
-
-        def n(i):
-            return self.to_num(*ev[i])
-
-        def sl(i):
-            """String value of arg i with the §17.4.3 'string literal'
-            requirement: a term that is an IRI, bnode, or literal with a
-            non-string datatype is a TYPE ERROR (NULL), so e.g.
-            STRSTARTS(?age, "2") on "30"^^xsd:integer is an error->false,
-            matching RDF4J's QueryEvaluationException behavior."""
-            col, kind = ev[i]
-            if kind != _EXPR_TERM:
-                return self.to_str(col, kind)
-            ok = nt.nt_is_literal(col) & nt.nt_datatype(col).isin(
-                nt.XSD + "string", nt.RDF + "langString"
-            )
-            # a term-kind column can hold a BARE value when the variable
-            # was BIND-bound from a string expression (the engine stores
-            # BIND results in their natural form, not N-Triples form) —
-            # such a value IS a simple string literal, not a type error
-            bare = ~(
-                col.startswith("<") | col.startswith("_:") | col.startswith('"')
-            )
-            return F.when(ok, nt.nt_str(col)).when(bare, col.cast("string"))
-
-        def slang(i):
-            col, kind = ev[i]
-            if kind != _EXPR_TERM:
-                return F.lit("")
-            return nt.nt_lang(col)
-
-        def spair(i, j):
-            """Argument-compatible string pair (§17.4.1.5): second arg
-            must be language-less or share the first's tag, else error."""
-            compat = (slang(j) == "") | (slang(i) == slang(j))
-            return F.when(compat, sl(i)), F.when(compat, sl(j))
-
-        def wrap_lang(res: Column, lg: Column) -> Column:
-            """§17.4.3 substring-based functions return a literal carrying
-            arg1's language tag: tagged rows get the N-Triples langString
-            form, untagged rows stay bare simple strings (the engine's
-            natural representation for derived string values)."""
-            return F.when(
-                res.isNotNull() & (lg != ""),
-                F.concat(F.lit('"'), nt.nt_escape(res), F.lit('"@'), lg),
-            ).otherwise(res)
-
-        def simple(i):
-            """Simple-literal argument (§17.4.2.5/6 STRLANG/STRDT): only a
-            literal with no language tag and datatype xsd:string (or a
-            bare derived string) is accepted; anything else is a type
-            error -> NULL, matching RDF4J's ValueExprEvaluationException."""
-            col, kind = ev[i]
-            if kind != _EXPR_TERM:
-                return self.to_str(col, kind)
-            ok = (
-                nt.nt_is_literal(col)
-                & (nt.nt_lang(col) == "")
-                & (nt.nt_datatype(col) == nt.XSD + "string")
-            )
-            bare = ~(
-                col.startswith("<") | col.startswith("_:") | col.startswith('"')
-            )
-            return F.when(ok, nt.nt_str(col)).when(bare, col.cast("string"))
-
-        if name == "str":
-            # §17.4.2.5: STR accepts a literal or IRI; a blank node is a
-            # type error (RDF4J Str throws ValueExprEvaluationException)
-            col, kind = ev[0]
-            res = self.to_str(col, kind)
-            if kind == _EXPR_TERM:
-                res = F.when(~nt.nt_is_bnode(col), res)
-            return res, _EXPR_STR
-        if name == "lang":
-            return nt.nt_lang(term(0)), _EXPR_STR
-        if name == "langmatches":
-            return E.langmatches(s(0), s(1)), _EXPR_BOOL
-        if name == "datatype":
-            col, kind = ev[0]
-            if kind == _EXPR_STR:  # a derived string IS a simple literal
-                return F.when(col.isNotNull(), F.lit(nt.XSD + "string")), _EXPR_STR
-            if kind == _EXPR_BOOL:
-                return F.when(col.isNotNull(), F.lit(nt.XSD + "boolean")), _EXPR_STR
-            if kind == _EXPR_NUM:
-                # a numeric result's datatype is the one its term form
-                # carries (integral -> xsd:integer, else xsd:double)
-                return (
-                    F.when(col.isNotNull(), nt.nt_datatype(E.as_term(col, "double"))),
-                    _EXPR_STR,
-                )
-            if kind == _EXPR_TERM:
-                bare = ~(
-                    col.startswith("<") | col.startswith("_:") | col.startswith('"')
-                )
-                return (
-                    F.when(bare, F.lit(nt.XSD + "string")).otherwise(
-                        nt.nt_datatype(col)
-                    ),
-                    _EXPR_STR,
-                )
-            return nt.nt_datatype(term(0)), _EXPR_STR
-        if name == "bound":
-            return term(0).isNotNull(), _EXPR_BOOL
-        if name in ("isiri", "isuri"):
-            return nt.nt_is_iri(term(0)), _EXPR_BOOL
-        if name == "isblank":
-            return nt.nt_is_bnode(term(0)), _EXPR_BOOL
-        if name == "isliteral":
-            return nt.nt_is_literal(term(0)), _EXPR_BOOL
-        if name == "isnumeric":
-            return E.is_numeric_term(term(0)), _EXPR_BOOL
-        if name in ("iri", "uri"):
-            return E.iri_resolve(term(0), self.parser.base), _EXPR_TERM
-        if name == "bnode":
-            # seed from the argument AND the whole in-scope solution
-            # mapping: same label -> same bnode WITHIN a solution, but
-            # distinct solutions -> distinct bnodes (SPARQL 17.4.2.9;
-            # HalyardValueExprEvaluation.java:234-246 likewise seeds the
-            # generated node from the bindings)
-            # (seed columns are snapshotted BEFORE the projection loop so
-            # two BNODE('k') projections in one SELECT agree — later
-            # aliases must not perturb the seed)
-            seed_cols = getattr(self, "_solution_cols", None)
-            names = (
-                sorted(c for c in seed_cols if c in df.columns)
-                if seed_cols is not None
-                else sorted(df.columns)
-            )
-            row_parts = [F.col(c) for c in names]
-            return (
-                E.bnode_seeded(*[s(i) for i in range(len(ev))], *row_parts),
-                _EXPR_TERM,
-            )
-        if name == "sameterm":
-            return term(0) == term(1), _EXPR_BOOL
-        if name == "regex":
-            # REGEX has FIND semantics with inline-able flags
-            # (HalyardValueExprEvaluation.java:503-551)
-            pat = s(1)
-            if len(ev) > 2 and args[2][0] == "lit":
-                pat = _flagged_pattern(pat, args[2][1])
-                if pat is None:  # invalid flag string -> evaluation error
-                    return F.lit(None).cast("boolean"), _EXPR_BOOL
-            return F.regexp_like(sl(0), pat), _EXPR_BOOL
-        if name == "strlen":
-            return F.length(sl(0)), _EXPR_NUM
-        if name == "substr":
-            # fn:substring semantics: characters at positions p with
-            # round(start) <= p < round(start) + round(length), 1-based —
-            # a zero/negative start clips from position 1 with the length
-            # budget consumed (substring("abcde", 0, 3) = "ab"), unlike
-            # SQL SUBSTR's treat-0-as-1 / count-from-the-end behaviors
-            start = F.floor(n(1) + F.lit(0.5)).cast("int")  # fn:round
-            lo = F.greatest(start, F.lit(1))
-            if len(ev) > 2:
-                ln = F.floor(n(2) + F.lit(0.5)).cast("int")
-                eff = start + ln - lo  # end-exclusive minus clipped start
-                res = F.when(eff > 0, F.substr(sl(0), lo, eff)).otherwise(
-                    F.when(sl(0).isNotNull() & eff.isNotNull(), F.lit(""))
-                )
-            else:
-                res = F.substr(sl(0), lo)
-            return wrap_lang(res, slang(0)), _EXPR_TERM
-        if name == "ucase":
-            return wrap_lang(F.upper(sl(0)), slang(0)), _EXPR_TERM
-        if name == "lcase":
-            return wrap_lang(F.lower(sl(0)), slang(0)), _EXPR_TERM
-        if name == "strstarts":
-            a, b = spair(0, 1)
-            return a.startswith(b), _EXPR_BOOL
-        if name == "strends":
-            a, b = spair(0, 1)
-            return a.endswith(b), _EXPR_BOOL
-        if name == "contains":
-            a, b = spair(0, 1)
-            return a.contains(b), _EXPR_BOOL
-        if name == "strbefore":
-            # a match carries arg1's language tag; NO match returns the
-            # empty SIMPLE literal (strBefore("abc"@en,"z") = "", not
-            # ""@en) — §17.4.3.4, mirrored by RDF4J StrBefore
-            a, b = spair(0, 1)
-            pos = F.position(b, a)
-            return F.when(
-                pos > 0, wrap_lang(F.substr(a, F.lit(1), pos - 1), slang(0))
-            ).otherwise(
-                F.when(a.isNotNull() & b.isNotNull(), F.lit(""))), _EXPR_TERM
-        if name == "strafter":
-            a, b = spair(0, 1)
-            pos = F.position(b, a)
-            return F.when(
-                pos > 0, wrap_lang(F.substr(a, pos + F.length(b)), slang(0))
-            ).otherwise(
-                F.when(a.isNotNull() & b.isNotNull(), F.lit(""))), _EXPR_TERM
-        if name == "encode_for_uri":
-            # fn:encode-for-uri percent-encodes (RFC 3986 unreserved kept);
-            # url_encode is form-encoding, so fix up its three deviations
-            e = F.url_encode(sl(0))
-            e = F.replace(e, F.lit("+"), F.lit("%20"))
-            e = F.replace(e, F.lit("*"), F.lit("%2A"))
-            e = F.replace(e, F.lit("%7E"), F.lit("~"))
-            return e, _EXPR_STR
-        if name == "concat":
-            # the result carries a language tag only when EVERY argument
-            # is a literal with that same tag (§17.4.3.1.2); any plain or
-            # differently-tagged argument makes the result simple.  Each
-            # argument must be a STRING LITERAL (sl, same §17.4.3 policy
-            # as STRLEN/STRSTARTS/SUBSTR): an IRI/bnode/typed-literal arg
-            # is a type error -> NULL result, not a silent stringification
-            if not ev:
-                return F.lit(""), _EXPR_STR
-            res = F.concat(*[sl(i) for i in range(len(ev))])
-            langs = [
-                slang(i) if ev[i][1] == _EXPR_TERM else F.lit("")
-                for i in range(len(ev))
-            ]
-            same = langs[0] != ""
-            for lg in langs[1:]:
-                same = same & (lg == langs[0])
-            return F.when(same, wrap_lang(res, langs[0])).otherwise(res), _EXPR_TERM
-        if name == "replace":
-            # REPLACE(str, pattern, replacement[, flags]) — regex
-            # replacement with inline-able flags, like REGEX; the result
-            # carries arg1's language tag (fn:replace over xs:string
-            # under the §17.4.3 string-literal rules)
-            pat = s(1)
-            if len(ev) > 3 and args[3][0] == "lit":
-                pat = _flagged_pattern(pat, args[3][1])
-                if pat is None:
-                    return F.lit(None).cast("string"), _EXPR_TERM
-            return (
-                wrap_lang(F.regexp_replace(sl(0), pat, s(2)), slang(0)),
-                _EXPR_TERM,
-            )
-        if name == "abs":
-            return F.abs(n(0)), _EXPR_NUM
-        if name == "round":
-            # fn:round: the half case rounds toward POSITIVE infinity
-            # (round(-2.5) = -2), unlike half-away-from-zero F.round
-            return F.floor(n(0) + F.lit(0.5)).cast("double"), _EXPR_NUM
-        if name == "ceil":
-            return F.ceil(n(0)).cast("double"), _EXPR_NUM
-        if name == "floor":
-            return F.floor(n(0)).cast("double"), _EXPR_NUM
-        if name == "rand":
-            return F.rand(), _EXPR_NUM
-        if name == "now":
-            return F.current_timestamp().cast("string"), _EXPR_STR
-        if name in ("year", "month", "day", "hours", "minutes", "seconds"):
-            # §17.4.5: component accessors read the LEXICAL form — no
-            # timezone normalization (HOURS("...T14:45:13-05:00") is 14,
-            # not the session-zone hour a timestamp cast would give) and
-            # SECONDS keeps the fractional part (xsd:decimal)
-            lex = s(0)
-            # [T ]: a space separator isn't valid XSD but Spark's cast
-            # accepted it historically — keep reading it leniently
-            pat = r"^(-?\d+)-(\d\d)-(\d\d)(?:[T ](\d\d):(\d\d):(\d\d(?:\.\d+)?))?"
-            grp = {"year": 1, "month": 2, "day": 3,
-                   "hours": 4, "minutes": 5, "seconds": 6}[name]
-            comp = F.nullif(F.regexp_extract(lex, pat, grp), F.lit(""))
-            if name == "seconds":
-                return comp.try_cast("double"), _EXPR_NUM
-            return comp.try_cast("int"), _EXPR_NUM
-        if name == "tz":
-            return F.regexp_extract(s(0), r"(Z|[+-]\d\d:\d\d)$", 1), _EXPR_STR
-        if name == "timezone":
-            # §17.4.5.7 / fn:timezone-from-dateTime: the offset as an
-            # xsd:dayTimeDuration literal — Z and +00:00 give "PT0S",
-            # -05:30 gives "-PT5H30M"; a dateTime WITHOUT a timezone is
-            # a type error (NULL here, error=>unbound/false downstream)
-            tzs = F.regexp_extract(s(0), r"(Z|[+-]\d\d:\d\d)$", 1)
-            hh = F.substring(tzs, 2, 2).cast("int")
-            mm = F.substring(tzs, 5, 2).cast("int")
-            body = F.when((hh == 0) & (mm == 0), F.lit("PT0S")).otherwise(
-                F.concat(
-                    F.lit("PT"),
-                    F.when(hh > 0, F.concat(hh.cast("string"), F.lit("H")))
-                    .otherwise(F.lit("")),
-                    F.when(mm > 0, F.concat(mm.cast("string"), F.lit("M")))
-                    .otherwise(F.lit("")),
-                )
-            )
-            sign = F.when(
-                tzs.startswith("-") & ((hh > 0) | (mm > 0)), F.lit("-")
-            ).otherwise(F.lit(""))
-            dur = F.when(tzs == "Z", F.lit("PT0S")).when(
-                tzs != "", F.concat(sign, body)
-            )
-            return (
-                F.concat(F.lit('"'), dur,
-                         F.lit('"^^<' + nt.XSD + 'dayTimeDuration>')),
-                _EXPR_TERM,
-            )
-        if name == "md5":
-            return F.md5(s(0).cast("binary")), _EXPR_STR
-        if name == "sha1":
-            return F.sha1(s(0).cast("binary")), _EXPR_STR
-        if name in ("sha256", "sha384", "sha512"):
-            return F.sha2(s(0).cast("binary"), int(name[3:])), _EXPR_STR
-        if name == "uuid":
-            return F.concat(F.lit("<urn:uuid:"), F.expr("uuid()"), F.lit(">")), _EXPR_TERM
-        if name == "struuid":
-            return F.expr("uuid()"), _EXPR_STR
-        if name == "strlang":
-            # arg1 must be a SIMPLE literal: STRLANG("x"@en, "fr") and
-            # STRLANG(1, "en") are type errors (§17.4.2.6) -> NULL
-            return F.concat(F.lit('"'), nt.nt_escape(simple(0)), F.lit('"@'), s(1)), _EXPR_TERM
-        if name == "strdt":
-            return F.concat(F.lit('"'), nt.nt_escape(simple(0)), F.lit('"^^'), term(1)), _EXPR_TERM
-        if name == "if":
-            # an ERROR condition makes the whole IF an error (§17.4.1.2):
-            # two one-sided whens leave NULL for the NULL condition, where
-            # when/otherwise would silently take the else branch
-            c = self.to_bool(*ev[0])
-            return F.when(c, term(1)).when(~c, term(2)), ev[1][1]
-        if name == "coalesce":
-            if not ev:
-                # COALESCE() with no expressions: every (vacuous) branch
-                # errored -> evaluation error (unbound), not a plan crash
-                return F.lit(None).cast("string"), _EXPR_TERM
-            # mixed-kind arguments must be harmonized to the lexical
-            # representation first: F.coalesce(double, string) makes ANSI
-            # Spark cast the string arm to DOUBLE (a plan-time crash on
-            # COALESCE(1/0, "ok")), where SPARQL just returns the first
-            # non-error value whatever its type
-            kinds = {k for _, k in ev}
-            if len(kinds) == 1:
-                return F.coalesce(*[term(i) for i in range(len(ev))]), ev[0][1]
-            return (
-                F.coalesce(*[self.to_str(*ev[i]) for i in range(len(ev))]),
-                _EXPR_TERM,
-            )
-        # XSD constructor casts, e.g. xsd:double(?x) / xsd:integer(?x)
-        if name.startswith(nt.XSD) or name.startswith("xsd:"):
-            local = name.rsplit("#", 1)[-1].rsplit(":", 1)[-1]
-            if local in ("double", "float", "decimal"):
-                return n(0), _EXPR_NUM
-            if local in ("integer", "int", "long"):
-                return n(0).cast("long"), _EXPR_NUM
-            if local == "string":
-                return s(0), _EXPR_STR
-            if local == "boolean":
-                # §17.5 XPath constructor semantics, NOT the EBV: from a
-                # string only the xsd:boolean lexical space casts
-                # ("true"/"1" -> true, "false"/"0" -> false, else error);
-                # from a numeric, value != 0; IRI/bnode -> type error
-                col0, k0 = ev[0]
-                if k0 == _EXPR_BOOL:
-                    return col0, _EXPR_BOOL
-                if k0 == _EXPR_NUM:
-                    return col0 != 0, _EXPR_BOOL
-                if k0 == _EXPR_STR:
-                    return (
-                        F.when(col0.isin("true", "1"), F.lit(True)).when(
-                            col0.isin("false", "0"), F.lit(False)
-                        ),
-                        _EXPR_BOOL,
-                    )
-                lab = nt.nt_str(col0)
-                bad = col0.startswith("<") | col0.startswith("_:")
-                return (
-                    F.when(~bad & E.is_numeric_term(col0), E.try_numeric(col0) != 0)
-                    .when(~bad & lab.isin("true", "1"), F.lit(True))
-                    .when(~bad & lab.isin("false", "0"), F.lit(False)),
-                    _EXPR_BOOL,
-                )
-            if local in ("datetime", "date"):
-                # §17.5 constructor cast: validate the target lexical
-                # space, emit a TYPED literal term — comparisons then take
-                # sparql_compare's dateTime INSTANT rule.  (`local` was
-                # case-folded by the function-name normalization, hence
-                # "datetime".)
-                dtname = "dateTime" if local == "datetime" else "date"
-                lex = s(0)
-                pat = (
-                    r"^-?\d{4,}-\d\d-\d\dT\d\d:\d\d:\d\d(\.\d+)?(Z|[+-]\d\d:\d\d)?$"
-                    if local == "datetime"
-                    else r"^-?\d{4,}-\d\d-\d\d(Z|[+-]\d\d:\d\d)?$"
-                )
-                # the shape regex can't check FIELD ranges (month<=12,
-                # day valid for the month, hour<=23...) — "2010-13-40"
-                # must be a cast error, not a typed literal.  Validate
-                # by try_cast on a normalized lexical: timezone suffix
-                # stripped (XSD allows "2010-01-15Z", Spark's cast does
-                # not) and the XSD-legal T24:00:00 end-of-day folded to
-                # a castable instant.
-                norm = F.regexp_replace(lex, r"(Z|[+-]\d\d:\d\d)$", "")
-                if local == "datetime":
-                    norm = F.regexp_replace(
-                        norm, r"T24:00:00(\.0+)?$", "T00:00:00")
-                    in_range = norm.try_cast("timestamp").isNotNull()
-                else:
-                    in_range = norm.try_cast("date").isNotNull()
-                return (
-                    F.when(
-                        lex.rlike(pat) & in_range,
-                        F.concat(F.lit('"'), lex,
-                                 F.lit(f'"^^<{nt.XSD}{dtname}>')),
-                    ),
-                    _EXPR_TERM,
-                )
-        raise ValueError(f"SPARQL: unknown function {name!r}")
+        fn = _builtin(name, len(args), ValueError)
+        vals = [_Val(*self.eval_expr(a, df)) for a in args]
+        coerced: list = []
+        for i, v in enumerate(vals):
+            how = fn.coerce[min(i, len(fn.coerce) - 1)]
+            coerced.append(_coerce(how, v, coerced[0] if coerced else None))
+        kind = fn.kind([v.kind for v in vals]) if callable(fn.kind) else fn.kind
+        return fn.build(_Site(self, df, args), *coerced), kind
 
     # -- aggregates
     def agg_column(self, node, df: DataFrame) -> Column:
@@ -2383,6 +1989,370 @@ class _Planner:
             inner_unbound.update(a for a, e in q.projections if e is not None)
             report_unbound.update(inner_unbound & set(df.columns))
         return df
+
+
+# ------------------------------------------------------------ builtins
+# One _BUILTINS row per builtin and XSD constructor, the way RDF4J
+# resolves every FunctionCall through one registry lookup
+# (HalyardValueExprEvaluation.java:662-678).
+
+# argument coercions (§17.4): what one argument position accepts
+_RAW = "raw"          # the evaluated _Val, any kind
+_STRING = "string"    # the string value of any term
+_NUMERIC = "numeric"  # the numeric value, NULL when not numeric
+_STRLIT = "strlit"    # §17.4.3 string literal, as a _Str
+_SIMPLE = "simple"    # §17.4.2.5/6 simple literal, as its lexical form
+_COMPAT = "compat"    # a _STRLIT argument-compatible with argument 1 (§17.4.1.5)
+
+
+class _Val(NamedTuple):
+    col: Column
+    kind: str
+
+
+class _Str(NamedTuple):
+    lex: Column  # NULL on a type error
+    lang: Column  # '' when untagged
+
+
+class _Site(NamedTuple):
+    """What a few builders need besides their arguments."""
+
+    planner: _Planner
+    df: DataFrame
+    args: list  # the argument ASTs
+
+
+class _Builtin(NamedTuple):
+    lo: int  # fewest arguments
+    hi: float  # most arguments (inf: variadic)
+    coerce: tuple  # one coercion per position; the last one repeats
+    build: Callable  # (_Site, *coerced arguments) -> Column
+    kind: str | Callable  # result kind, or a rule over the argument kinds
+
+
+def _builtin(name: str, nargs: int, error: type[Exception]) -> _Builtin:
+    fn = _BUILTINS.get(name)
+    if fn is None:
+        raise error(f"SPARQL: unknown function {name!r}")
+    if not fn.lo <= nargs <= fn.hi:
+        raise error(f"SPARQL: {name}() takes {fn.lo}..{fn.hi} arguments, not {nargs}")
+    return fn
+
+
+def _bare(col: Column) -> Column:
+    """A term-kind column can hold a BARE value when the variable was
+    BIND-bound from a string expression (the engine stores BIND results
+    in their natural form, not N-Triples form); such a value IS a simple
+    string literal."""
+    return ~(col.startswith("<") | col.startswith("_:") | col.startswith('"'))
+
+
+def _coerce(how: str, v: _Val, first: _Str | None):
+    """One argument coercion.  An argument its position does not accept
+    is a TYPE ERROR (NULL), as RDF4J throws ValueExprEvaluationException:
+    STRSTARTS(?age, "2") on "30"^^xsd:integer is an error -> false.
+    ``first`` is argument 1, already coerced."""
+    if how == _RAW:
+        return v
+    if how == _STRING:
+        return _Planner.to_str(*v)
+    if how == _NUMERIC:
+        return _Planner.to_num(*v)
+    if v.kind != _EXPR_TERM:
+        lex, lang = _Planner.to_str(*v), F.lit("")
+    else:
+        ok = [nt.XSD + "string"] + ([] if how == _SIMPLE else [nt.RDF + "langString"])
+        lex = F.when(nt.nt_datatype(v.col).isin(*ok), nt.nt_str(v.col)).when(
+            _bare(v.col), v.col.cast("string"))
+        lang = nt.nt_lang(v.col)
+    if how == _SIMPLE:
+        return lex
+    if how == _COMPAT:  # language-less, or argument 1's tag
+        lex = F.when((lang == "") | (lang == first.lang), lex)
+    return _Str(lex, lang)
+
+
+def _tagged(res: Column, lang: Column) -> Column:
+    """§17.4.3 string functions return a literal carrying argument 1's
+    language tag: tagged rows get the N-Triples langString form,
+    untagged rows stay bare simple strings (the engine's natural
+    representation for derived string values)."""
+    return F.when(
+        res.isNotNull() & (lang != ""),
+        F.concat(F.lit('"'), nt.nt_escape(res), F.lit('"@'), lang),
+    ).otherwise(res)
+
+
+def _str(_, v: _Val) -> Column:
+    # §17.4.2.5: STR accepts a literal or IRI; a blank node is a type
+    # error (RDF4J Str throws ValueExprEvaluationException)
+    res = _Planner.to_str(*v)
+    return F.when(~nt.nt_is_bnode(v.col), res) if v.kind == _EXPR_TERM else res
+
+
+def _datatype(_, v: _Val) -> Column:
+    if v.kind == _EXPR_TERM:
+        return F.when(_bare(v.col), F.lit(nt.XSD + "string")).otherwise(nt.nt_datatype(v.col))
+    if v.kind == _EXPR_NUM:
+        # a numeric result's datatype is the one its term form carries
+        # (integral -> xsd:integer, else xsd:double)
+        return F.when(v.col.isNotNull(), nt.nt_datatype(E.as_term(v.col, "double")))
+    # a derived string IS a simple literal
+    dtype = "boolean" if v.kind == _EXPR_BOOL else "string"
+    return F.when(v.col.isNotNull(), F.lit(nt.XSD + dtype))
+
+
+def _bnode(site: _Site, *labels: Column) -> Column:
+    # seed from the argument AND the whole in-scope solution mapping:
+    # same label -> same bnode WITHIN a solution, but distinct solutions
+    # -> distinct bnodes (SPARQL 17.4.2.9; HalyardValueExprEvaluation.java
+    # :234-246 likewise seeds the generated node from the bindings)
+    seed = site.planner._solution_cols
+    names = sorted(c for c in site.df.columns if seed is None or c in seed)
+    return E.bnode_seeded(*labels, *[F.col(c) for c in names])
+
+
+def _flagged_pattern(pat: Column, args: list, i: int) -> Column:
+    """Apply the XPath regex flags of literal argument ``i``, if given.
+    s/m/i/x map to Java inline flags; q wraps the pattern in \\Q..\\E
+    (literal match — Java has no inline form; a pattern containing a
+    literal ``\\E`` is the one documented blind spot).  An unknown flag
+    letter is an evaluation error (XPath err:FORX0001): a NULL pattern,
+    so the call is unbound / filter-false instead of Spark aborting the
+    job on an invalid ``(?...)`` group."""
+    if len(args) <= i or args[i][0] != "lit":
+        return pat
+    flags = args[i][1]
+    if not set(flags) <= set("smixq"):
+        return F.lit(None).cast("string")
+    if "q" in flags:
+        pat = F.concat(F.lit("\\Q"), pat, F.lit("\\E"))
+        flags = flags.replace("q", "")
+    if flags:
+        pat = F.concat(F.lit(f"(?{flags})"), pat)
+    return pat
+
+
+def _substr(_, text: _Str, start: Column, length: Column | None = None) -> Column:
+    # fn:substring semantics: characters at positions p with
+    # round(start) <= p < round(start) + round(length), 1-based — a
+    # zero/negative start clips from position 1 with the length budget
+    # consumed (substring("abcde", 0, 3) = "ab"), unlike SQL SUBSTR's
+    # treat-0-as-1 / count-from-the-end behaviors
+    first = F.floor(start + F.lit(0.5)).cast("int")  # fn:round
+    lo = F.greatest(first, F.lit(1))
+    if length is None:
+        return _tagged(F.substr(text.lex, lo), text.lang)
+    eff = first + F.floor(length + F.lit(0.5)).cast("int") - lo  # end-exclusive minus clipped start
+    res = F.when(eff > 0, F.substr(text.lex, lo, eff)).otherwise(
+        F.when(text.lex.isNotNull() & eff.isNotNull(), F.lit("")))
+    return _tagged(res, text.lang)
+
+
+def _around(a: _Str, b: _Str, before: bool) -> Column:
+    # a match carries arg1's language tag; NO match returns the empty
+    # SIMPLE literal (strBefore("abc"@en,"z") = "", not ""@en) —
+    # §17.4.3.4, mirrored by RDF4J StrBefore
+    pos = F.position(b.lex, a.lex)
+    part = F.substr(a.lex, F.lit(1), pos - 1) if before else F.substr(a.lex, pos + F.length(b.lex))
+    return F.when(pos > 0, _tagged(part, a.lang)).otherwise(
+        F.when(a.lex.isNotNull() & b.lex.isNotNull(), F.lit("")))
+
+
+def _encode_for_uri(_, text: _Str) -> Column:
+    # fn:encode-for-uri percent-encodes (RFC 3986 unreserved kept);
+    # url_encode is form-encoding, so fix up its three deviations
+    e = F.url_encode(text.lex)
+    for form, pct in (("+", "%20"), ("*", "%2A"), ("%7E", "~")):
+        e = F.replace(e, F.lit(form), F.lit(pct))
+    return e
+
+
+def _concat(_, *args: _Str) -> Column:
+    # the result carries a language tag only when EVERY argument is a
+    # literal with that same tag (§17.4.3.1.2); any plain or
+    # differently-tagged argument makes the result simple
+    res = F.concat(*[a.lex for a in args])
+    if not args:
+        return res
+    tag = args[0].lang
+    same = reduce(lambda c, a: c & (a.lang == tag), args[1:], tag != "")
+    return _tagged(res, F.when(same, tag).otherwise(""))
+
+
+def _datetime_part(group: int, _, lex: Column) -> Column:
+    # §17.4.5: component accessors read the LEXICAL form — no timezone
+    # normalization (HOURS("...T14:45:13-05:00") is 14, not the
+    # session-zone hour a timestamp cast would give) and SECONDS keeps
+    # the fractional part (xsd:decimal).  [T ]: a space separator isn't
+    # valid XSD but Spark's cast accepted it historically — keep reading
+    # it leniently
+    pat = r"^(-?\d+)-(\d\d)-(\d\d)(?:[T ](\d\d):(\d\d):(\d\d(?:\.\d+)?))?"
+    comp = F.nullif(F.regexp_extract(lex, pat, group), F.lit(""))
+    return comp.try_cast("double" if group == 6 else "int")
+
+
+def _timezone(_, lex: Column) -> Column:
+    # §17.4.5.7 / fn:timezone-from-dateTime: the offset as an
+    # xsd:dayTimeDuration literal — Z and +00:00 give "PT0S", -05:30
+    # gives "-PT5H30M"; a dateTime WITHOUT a timezone is a type error
+    # (NULL here, error=>unbound/false downstream)
+    tzs = F.regexp_extract(lex, r"(Z|[+-]\d\d:\d\d)$", 1)
+    hh = F.substring(tzs, 2, 2).cast("int")
+    mm = F.substring(tzs, 5, 2).cast("int")
+    body = F.when((hh == 0) & (mm == 0), F.lit("PT0S")).otherwise(F.concat(
+        F.lit("PT"),
+        F.when(hh > 0, F.concat(hh.cast("string"), F.lit("H"))).otherwise(F.lit("")),
+        F.when(mm > 0, F.concat(mm.cast("string"), F.lit("M"))).otherwise(F.lit("")),
+    ))
+    sign = F.when(tzs.startswith("-") & ((hh > 0) | (mm > 0)), F.lit("-")).otherwise(F.lit(""))
+    dur = F.when(tzs == "Z", F.lit("PT0S")).when(tzs != "", F.concat(sign, body))
+    return F.concat(F.lit('"'), dur, F.lit('"^^<' + nt.XSD + 'dayTimeDuration>'))
+
+
+def _if(_, cond: _Val, yes: _Val, no: _Val) -> Column:
+    # an ERROR condition makes the whole IF an error (§17.4.1.2): two
+    # one-sided whens leave NULL for the NULL condition, where
+    # when/otherwise would silently take the else branch
+    c = _Planner.to_bool(*cond)
+    return F.when(c, yes.col).when(~c, no.col)
+
+
+def _coalesce(_, *vals: _Val) -> Column:
+    if not vals:
+        # COALESCE() with no expressions: every (vacuous) branch errored
+        # -> evaluation error (unbound), not a plan crash
+        return F.lit(None).cast("string")
+    # mixed-kind arguments must be harmonized to the lexical
+    # representation first: F.coalesce(double, string) makes ANSI Spark
+    # cast the string arm to DOUBLE (a plan-time crash on
+    # COALESCE(1/0, "ok")), where SPARQL just returns the first
+    # non-error value whatever its type
+    if len({v.kind for v in vals}) == 1:
+        return F.coalesce(*[v.col for v in vals])
+    return F.coalesce(*[_Planner.to_str(*v) for v in vals])
+
+
+def _xsd_boolean(_, v: _Val) -> Column:
+    # §17.5 XPath constructor semantics, NOT the EBV: from a string only
+    # the xsd:boolean lexical space casts ("true"/"1" -> true,
+    # "false"/"0" -> false, else error); from a numeric, value != 0;
+    # IRI/bnode -> type error
+    if v.kind == _EXPR_BOOL:
+        return v.col
+    if v.kind == _EXPR_NUM:
+        return v.col != 0
+    if v.kind == _EXPR_STR:
+        return F.when(v.col.isin("true", "1"), F.lit(True)).when(v.col.isin("false", "0"), F.lit(False))
+    lab = nt.nt_str(v.col)
+    ok = ~(nt.nt_is_iri(v.col) | nt.nt_is_bnode(v.col))
+    return (
+        F.when(ok & E.is_numeric_term(v.col), E.try_numeric(v.col) != 0)
+        .when(ok & lab.isin("true", "1"), F.lit(True))
+        .when(ok & lab.isin("false", "0"), F.lit(False))
+    )
+
+
+def _xsd_datetime(dtype: str, _, lex: Column) -> Column:
+    # §17.5 constructor cast: validate the target lexical space, emit a
+    # TYPED literal term — comparisons then take sparql_compare's
+    # dateTime INSTANT rule
+    time = dtype == "dateTime"
+    pat = r"^-?\d{4,}-\d\d-\d\d" + (r"T\d\d:\d\d:\d\d(\.\d+)?" if time else "") + r"(Z|[+-]\d\d:\d\d)?$"
+    # the shape regex can't check FIELD ranges (month<=12, day valid for
+    # the month, hour<=23...) — "2010-13-40" must be a cast error, not a
+    # typed literal.  Validate by try_cast on a normalized lexical:
+    # timezone suffix stripped (XSD allows "2010-01-15Z", Spark's cast
+    # does not) and the XSD-legal T24:00:00 end-of-day folded to a
+    # castable instant.
+    norm = F.regexp_replace(lex, r"(Z|[+-]\d\d:\d\d)$", "")
+    if time:
+        norm = F.regexp_replace(norm, r"T24:00:00(\.0+)?$", "T00:00:00")
+    in_range = norm.try_cast("timestamp" if time else "date").isNotNull()
+    return F.when(lex.rlike(pat) & in_range, F.concat(F.lit('"'), lex, F.lit(f'"^^<{nt.XSD}{dtype}>')))
+
+
+
+_INF = float("inf")
+_BUILTINS: dict[str, _Builtin] = {
+    "str": _Builtin(1, 1, (_RAW,), _str, _EXPR_STR),
+    "lang": _Builtin(1, 1, (_RAW,), lambda _, v: nt.nt_lang(v.col), _EXPR_STR),
+    "langmatches": _Builtin(2, 2, (_STRING,), lambda _, tag, rng: E.langmatches(tag, rng), _EXPR_BOOL),
+    "datatype": _Builtin(1, 1, (_RAW,), _datatype, _EXPR_STR),
+    "bound": _Builtin(1, 1, (_RAW,), lambda _, v: v.col.isNotNull(), _EXPR_BOOL),
+    "isiri": _Builtin(1, 1, (_RAW,), lambda _, v: nt.nt_is_iri(v.col), _EXPR_BOOL),
+    "isblank": _Builtin(1, 1, (_RAW,), lambda _, v: nt.nt_is_bnode(v.col), _EXPR_BOOL),
+    "isliteral": _Builtin(1, 1, (_RAW,), lambda _, v: nt.nt_is_literal(v.col), _EXPR_BOOL),
+    "isnumeric": _Builtin(1, 1, (_RAW,), lambda _, v: E.is_numeric_term(v.col), _EXPR_BOOL),
+    "iri": _Builtin(1, 1, (_RAW,), lambda site, v: E.iri_resolve(
+        v.col, site.planner.parser.base), _EXPR_TERM),
+    "bnode": _Builtin(0, 1, (_STRING,), _bnode, _EXPR_TERM),
+    "sameterm": _Builtin(2, 2, (_RAW,), lambda _, a, b: a.col == b.col, _EXPR_BOOL),
+    # REGEX has FIND semantics with inline-able flags
+    # (HalyardValueExprEvaluation.java:503-551)
+    "regex": _Builtin(2, 3, (_STRLIT, _STRING), lambda site, t, pat, *_: F.regexp_like(
+        t.lex, _flagged_pattern(pat, site.args, 2)), _EXPR_BOOL),
+    "strlen": _Builtin(1, 1, (_STRLIT,), lambda _, t: F.length(t.lex), _EXPR_NUM),
+    "substr": _Builtin(2, 3, (_STRLIT, _NUMERIC), _substr, _EXPR_TERM),
+    "ucase": _Builtin(1, 1, (_STRLIT,), lambda _, t: _tagged(F.upper(t.lex), t.lang), _EXPR_TERM),
+    "lcase": _Builtin(1, 1, (_STRLIT,), lambda _, t: _tagged(F.lower(t.lex), t.lang), _EXPR_TERM),
+    "strstarts": _Builtin(2, 2, (_STRLIT, _COMPAT), lambda _, a, b: a.lex.startswith(b.lex), _EXPR_BOOL),
+    "strends": _Builtin(2, 2, (_STRLIT, _COMPAT), lambda _, a, b: a.lex.endswith(b.lex), _EXPR_BOOL),
+    "contains": _Builtin(2, 2, (_STRLIT, _COMPAT), lambda _, a, b: a.lex.contains(b.lex), _EXPR_BOOL),
+    "strbefore": _Builtin(2, 2, (_STRLIT, _COMPAT), lambda _, a, b: _around(a, b, True), _EXPR_TERM),
+    "strafter": _Builtin(2, 2, (_STRLIT, _COMPAT), lambda _, a, b: _around(a, b, False), _EXPR_TERM),
+    "encode_for_uri": _Builtin(1, 1, (_STRLIT,), _encode_for_uri, _EXPR_STR),
+    "concat": _Builtin(0, _INF, (_STRLIT,), _concat, _EXPR_TERM),
+    # the result carries arg1's language tag (fn:replace over xs:string
+    # under the §17.4.3 string-literal rules)
+    "replace": _Builtin(3, 4, (_STRLIT, _STRING), lambda site, t, pat, rep, *_: _tagged(
+        F.regexp_replace(t.lex, _flagged_pattern(pat, site.args, 3), rep), t.lang), _EXPR_TERM),
+    "abs": _Builtin(1, 1, (_NUMERIC,), lambda _, x: F.abs(x), _EXPR_NUM),
+    # fn:round: the half case rounds toward POSITIVE infinity
+    # (round(-2.5) = -2), unlike half-away-from-zero F.round
+    "round": _Builtin(1, 1, (_NUMERIC,), lambda _, x: F.floor(x + F.lit(0.5)).cast("double"), _EXPR_NUM),
+    "ceil": _Builtin(1, 1, (_NUMERIC,), lambda _, x: F.ceil(x).cast("double"), _EXPR_NUM),
+    "floor": _Builtin(1, 1, (_NUMERIC,), lambda _, x: F.floor(x).cast("double"), _EXPR_NUM),
+    "rand": _Builtin(0, 0, (), lambda _: F.rand(), _EXPR_NUM),
+    "now": _Builtin(0, 0, (), lambda _: F.current_timestamp().cast("string"), _EXPR_STR),
+    **{name: _Builtin(1, 1, (_STRING,), partial(_datetime_part, group), _EXPR_NUM)
+       for group, name in enumerate(("year", "month", "day", "hours", "minutes", "seconds"), 1)},
+    "tz": _Builtin(1, 1, (_STRING,), lambda _, s: F.regexp_extract(
+        s, r"(Z|[+-]\d\d:\d\d)$", 1), _EXPR_STR),
+    "timezone": _Builtin(1, 1, (_STRING,), _timezone, _EXPR_TERM),
+    "md5": _Builtin(1, 1, (_STRING,), lambda _, s: F.md5(s.cast("binary")), _EXPR_STR),
+    "sha1": _Builtin(1, 1, (_STRING,), lambda _, s: F.sha1(s.cast("binary")), _EXPR_STR),
+    **{f"sha{bits}": _Builtin(1, 1, (_STRING,), partial(
+        lambda bits, _, s: F.sha2(s.cast("binary"), bits), bits), _EXPR_STR)
+       for bits in (256, 384, 512)},
+    "uuid": _Builtin(0, 0, (), lambda _: F.concat(
+        F.lit("<urn:uuid:"), F.expr("uuid()"), F.lit(">")), _EXPR_TERM),
+    "struuid": _Builtin(0, 0, (), lambda _: F.expr("uuid()"), _EXPR_STR),
+    # arg1 must be a SIMPLE literal: STRLANG("x"@en, "fr") and
+    # STRLANG(1, "en") are type errors (§17.4.2.6) -> NULL
+    "strlang": _Builtin(2, 2, (_SIMPLE, _STRING), lambda _, lex, tag: F.concat(
+        F.lit('"'), nt.nt_escape(lex), F.lit('"@'), tag), _EXPR_TERM),
+    "strdt": _Builtin(2, 2, (_SIMPLE, _RAW), lambda _, lex, dt: F.concat(
+        F.lit('"'), nt.nt_escape(lex), F.lit('"^^'), dt.col), _EXPR_TERM),
+    "if": _Builtin(3, 3, (_RAW,), _if, lambda kinds: kinds[1]),
+    "coalesce": _Builtin(0, _INF, (_RAW,), _coalesce, lambda kinds: (
+        kinds[0] if len(set(kinds)) == 1 else _EXPR_TERM)),
+}
+_BUILTINS.update(isuri=_BUILTINS["isiri"], uri=_BUILTINS["iri"])
+# XSD constructor casts such as xsd:double(?x), under any prefix bound to
+# the XSD namespace or an undeclared xsd: (names arrive lower-cased)
+_XSD_CASTS = {
+    **dict.fromkeys(("double", "float", "decimal"),
+                    _Builtin(1, 1, (_NUMERIC,), lambda _, x: x, _EXPR_NUM)),
+    **dict.fromkeys(("integer", "int", "long"),
+                    _Builtin(1, 1, (_NUMERIC,), lambda _, x: x.cast("long"), _EXPR_NUM)),
+    "string": _Builtin(1, 1, (_STRING,), lambda _, s: s, _EXPR_STR),
+    "boolean": _Builtin(1, 1, (_RAW,), _xsd_boolean, _EXPR_BOOL),
+    "datetime": _Builtin(1, 1, (_STRING,), partial(_xsd_datetime, "dateTime"), _EXPR_TERM),
+    "date": _Builtin(1, 1, (_STRING,), partial(_xsd_datetime, "date"), _EXPR_TERM),
+}
+_BUILTINS.update({pre + local: fn for local, fn in _XSD_CASTS.items() for pre in (nt.XSD, "xsd:")})
 
 
 def _vars_outside_aggs(e) -> set:
@@ -2747,24 +2717,6 @@ def _template_quads(elems: list, default_ctx=None) -> list:
                 "SPARQL UPDATE: templates must contain only triples or GRAPH blocks"
             )
     return quads
-
-
-def _flagged_pattern(pat: Column, flags: str) -> Column | None:
-    """Apply XPath regex flags to a pattern column.  s/m/i/x map to Java
-    inline flags; q wraps the pattern in \\Q..\\E (literal match — Java
-    has no inline form; a pattern containing a literal ``\\E`` is the one
-    documented blind spot).  An unknown flag letter is an evaluation
-    error (XPath err:FORX0001) — the caller turns the None into NULL
-    (unbound / filter-false) instead of letting Spark abort the job on
-    an invalid ``(?...)`` group."""
-    if not set(flags) <= set("smixq"):
-        return None
-    if "q" in flags:
-        pat = F.concat(F.lit("\\Q"), pat, F.lit("\\E"))
-        flags = flags.replace("q", "")
-    if flags:
-        pat = F.concat(F.lit(f"(?{flags})"), pat)
-    return pat
 
 
 def _var_as_term(df: DataFrame, name: str) -> Column:

@@ -145,8 +145,10 @@ def test_endpoint_sparql_update(spark):
 
 
 def test_endpoint_update_errors_are_http_errors(spark):
-    """Planner/evaluation errors during UPDATE must answer HTTP 500 (and
-    parse errors 400) — never a dropped connection (ADVICE regression)."""
+    """UPDATE errors take the query status rule — never a dropped
+    connection (ADVICE regression): a parse error or planner rejection
+    (SyntaxError / ValueError) answers 400, a failure while running
+    answers 500."""
     import urllib.error
     import urllib.request
 
@@ -173,9 +175,16 @@ def test_endpoint_update_errors_are_http_errors(spark):
                 return exc.code
 
         assert post(b"THIS IS NOT SPARQL {") == 400
-        # parses but cannot plan: LOAD from a nonexistent document
+        # parses, but the planner rejects the unknown extension function
+        # (ValueError), as it does for the same WHERE in a SELECT
+        assert post(
+            b"PREFIX ex: <urn:ex:> INSERT { ?s <urn:q> ?o } "
+            b"WHERE { ?s ?p ?o FILTER(ex:nofn(?o)) }"
+        ) == 400
+        # Spark cannot read the nonexistent document: an
+        # AnalysisException, not a planner rejection, so the server's 500
         assert post(b"LOAD <file:///nonexistent/x.nt>") == 500
-        # the store is untouched after both failures
+        # the store is untouched after all three failures
         assert ep.triples.count() == 1
     finally:
         ep.stop()
@@ -376,7 +385,8 @@ def test_load_stored_queries_property_file(tmp_path):
 
 def test_evaluation_failure_is_server_error(spark, tmp_path):
     """A query that parses and plans but fails while running answers 500;
-    a planner rejection stays a 400 protocol error."""
+    a planner rejection or a builtin called with the wrong arity stays a
+    400 protocol error."""
     import shutil
 
     svc_dir = str(tmp_path / "svc")
@@ -403,6 +413,8 @@ def test_evaluation_failure_is_server_error(spark, tmp_path):
         shutil.rmtree(svc_dir)  # the federated store's files are gone
         assert status(q) == 500
         assert status(q.replace("urn:svc", "urn:unregistered")) == 400
+        assert status("SELECT (STRLEN(?o) AS ?x) WHERE { ?s ?p ?o }") == 200
+        assert status("SELECT (STRLEN() AS ?x) WHERE { ?s ?p ?o }") == 400
     finally:
         endpoint.stop()
 

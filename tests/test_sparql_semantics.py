@@ -5,11 +5,13 @@ line-mapped to the reference implementations.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from halyard_spark import nt
 from halyard_spark.query import algebra as A
 from halyard_spark.query import exprs as E
+from halyard_spark.query.sparql import _BUILTINS, _Parser, _Planner, tokenize
 
 
 def test_minus_disjoint_domain_row_kept(spark):
@@ -267,3 +269,40 @@ def test_bnode_distinct_per_solution_stable_within(spark):
     assert r["<urn:a>"][0] != r["<urn:b>"][0]  # distinct solutions differ
     assert r["<urn:a>"][2] != r["<urn:b>"][2]  # zero-arg differs too
     assert {x.s: (x.b1, x.b2, x.b3) for x in sparql_query(df, q).collect()} == r
+
+
+# one row holding each term shape a builtin argument can take; a
+# variable with no column ("unbound") is the seventh shape
+_SHAPES = {
+    "iri": "<urn:a>",
+    "bnode": "_:b1",
+    "simple": '"abc"',
+    "tagged": '"chat"@fr',
+    "integer": nt.lit("7", dtype=nt.XSD + "integer"),
+    "datetime": nt.lit("2011-01-10T14:45:13-05:00", dtype=nt.XSD + "dateTime"),
+}
+_KIND_TYPES = {"term": {"string"}, "str": {"string"}, "bool": {"boolean"},
+               "num": {"int", "bigint", "double"}}
+
+
+@pytest.mark.parametrize("name", sorted(_BUILTINS))
+def test_builtin_table_is_total(spark, name):
+    """Every builtin table key, at its fewest and its most arguments
+    (three past the fewest for a variadic one), evaluates over every
+    term shape without raising, and its column has the Spark type of
+    the row's declared result kind."""
+    fn = _BUILTINS[name]
+    frame = spark.createDataFrame([tuple(_SHAPES.values())], ", ".join(f"{k} string" for k in _SHAPES))
+    planner = _Planner(frame, _Parser(tokenize("SELECT * {}"), base="http://example.org/"))
+    cols, kinds = [], []
+    for n in sorted({fn.lo, min(fn.hi, fn.lo + 3)}):
+        for shape in [*_SHAPES, "unbound"] if n else [None]:
+            col, kind = planner.eval_call(name, [("var", shape)] * n, frame)
+            declared = fn.kind(["term"] * n) if callable(fn.kind) else fn.kind
+            assert kind == declared
+            cols.append(col.alias(f"c{len(cols)}"))
+            kinds.append(kind)
+    out = frame.select(*cols)
+    for field, kind in zip(out.schema.fields, kinds):
+        assert field.dataType.simpleString() in _KIND_TYPES[kind], (field, kind)
+    assert len(out.collect()) == 1
