@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from halyard_spark import nt
 from halyard_spark.pipeline import cc, extract, lineage, link, materialize, stats, triples
+from halyard_spark.session import adaptive_shuffle_width, jvm_counters
 
 
 def _entity_edges(mentions: DataFrame) -> DataFrame:
@@ -45,14 +46,20 @@ def run_pipeline(
     out_dir: str,
     resume: bool = True,
 ) -> dict:
-    """Run all stages; returns {stage: {rows, wall_ms, skipped}} + totals.
+    """Run all stages; returns {stage: {rows, wall_ms, skipped}} + totals,
+    plus ``_jvm``: the driver JVM's JIT and Janino compile counters over
+    the run (``session.jvm_counters`` deltas; process-wide, so work on
+    other threads during the run is in them too).
 
     Restores ``spark.sql.shuffle.partitions`` on exit: the run widens it
     to its own input volume, and leaking that width would ratchet every
     later job on the same session up to it (code-review regression)."""
     prev_width = spark.conf.get("spark.sql.shuffle.partitions")
+    jvm0 = jvm_counters(spark)
     try:
-        return _run_pipeline(spark, src, out_dir, resume)
+        report = _run_pipeline(spark, src, out_dir, resume)
+        report["_jvm"] = {k: round(v - jvm0[k], 1) for k, v in jvm_counters(spark).items()}
+        return report
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_width)
 
@@ -69,8 +76,6 @@ def _run_pipeline(
     # core-count width spills every sort at 20x data; a blanket-wide
     # initialPartitionNum costs 5-20x in task overhead at bench scale) —
     # size once from the source bytes, before any stage plans a shuffle
-    from halyard_spark.session import adaptive_shuffle_width
-
     width = adaptive_shuffle_width(spark, src)
     spark.conf.set("spark.sql.shuffle.partitions", str(width))
     report["_conf"] = {"shuffle_partitions": width}

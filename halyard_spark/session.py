@@ -5,6 +5,25 @@ Local-mode defaults mirror what we'd set on a real cluster: AQE on
 forkAndFilterBy parallel split, tools/.../ParallelSplitFunction.java:52-70),
 shuffle partitions sized to cores (not the 200 default), Arrow enabled for
 every pandas-UDF exchange.
+
+The driver JVM runs every stage in ``local[N]``, so HotSpot's compiler
+threads share the task threads' cores.  Split by JVM thread, one cold
+``run_pipeline`` over the kgbench corpus (4 cores, JDK 17) spent ~31
+CPU-s in the C2 compiler threads against ~15 s in the executor task
+threads: C2 was the largest consumer, and most of what it compiled was
+lukewarm framework code (Spark SQL planning, Java serialization, the
+closure cleaner's ASM, Janino, ANTLR), not generated per-row code.
+``C2_THRESHOLDS`` raises the Tier-4 (C2) thresholds 10x over the JDK 17
+defaults so that only code that stays hot reaches C2.  Tiers 1-3 (C1
+and its profiling) are untouched, so per-row loops still reach C2 within
+milliseconds at scale.  A sweep of 5x / 10x / 20x on the kgbench corpus
+and on a 20x corpus picked 10x: C2 CPU drops by ~45% at both sizes and
+executor CPU stays within the default's run-to-run range.  20x cut C2
+further but raised executor CPU on the 20x corpus above that range
+(cold ~99 s against 78-93 s).  C1 only (``TieredStopAtLevel=1``) is
+rejected: it cuts the small corpus's CPU the most but makes the 20x
+corpus's executor threads and wall much slower (README, "Scale design
+notes").
 """
 
 from __future__ import annotations
@@ -25,6 +44,29 @@ from pyspark.sql.types import ArrayType, DataType
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 DRIVER_MEM_SHARE = 0.5  # of MemTotal
 DRIVER_MEM_CAP_MB = 64 * 1024
+
+# JDK 17 Tier-4 defaults x10 (see the module docstring).
+C2_THRESHOLDS = {
+    "Tier4InvocationThreshold": 50000,
+    "Tier4MinInvocationThreshold": 6000,
+    "Tier4CompileThreshold": 150000,
+    "Tier4BackEdgeThreshold": 400000,
+}
+# Generated classes kept by Spark's codegen cache (default 100).  One
+# cold run_pipeline compiles 187 classes in Janino, so with the default a
+# second run in the same session compiled most of them again.  The whole
+# Tier-1 suite, in one session, generates 3,416 distinct classes; this
+# bound holds all of them.
+CODEGEN_CACHE_ENTRIES = 4096
+
+
+def driver_java_options(caller: str | None = None) -> str:
+    """The driver JVM's options: the engine's C2 thresholds, then the
+    caller's own ``spark.driver.extraJavaOptions``.  HotSpot keeps the
+    last value of a repeated flag, so the caller's options go last and
+    win."""
+    ours = " ".join(f"-XX:{k}={v}" for k, v in C2_THRESHOLDS.items())
+    return f"{ours} {caller}" if caller else ours
 
 
 def default_driver_memory() -> str:
@@ -108,6 +150,9 @@ def get_spark(
         # shuffle/spill on tmpfs when available: local-mode shuffles are
         # disk round-trips on the driver host
         conf["spark.local.dir"] = _local_dir()
+    conf["spark.driver.extraJavaOptions"] = driver_java_options(
+        conf.get("spark.driver.extraJavaOptions")
+    )
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -122,16 +167,32 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    try:
-        _ship_package(spark)
-    except Exception:
-        pass  # already shipped in this context, or running from repo root
+    # re-adding the same zip to a running context only logs a warning
+    _ship_package(spark)
     return spark
+
+
+def jvm_counters(spark: SparkSession) -> dict:
+    """The driver JVM's compile counters so far: HotSpot JIT time (all
+    compiler threads, ms) and Spark's Janino compiles (count and ms of
+    generated-class compiles, i.e. codegen cache misses).  They are
+    process-wide: a caller that wants one job's share takes a delta."""
+    jvm = spark.sparkContext._jvm
+    jit = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+    codegen = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return {
+        "jit_ms": int(jit.getTotalCompilationTime()),
+        "codegen_compiles": int(codegen.METRIC_COMPILATION_TIME().getCount()),
+        "codegen_ms": round(
+            jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime() / 1e6, 1
+        ),
+    }
 
 
 def _local_bytes(uris: list[str]) -> int | None:

@@ -327,6 +327,53 @@ def test_get_spark_leaves_default_local_dir_alone(spark, tmp_path, monkeypatch):
         session.get_spark(shuffle_partitions=int(width))
 
 
+def test_get_spark_raises_when_the_package_zip_fails(spark, tmp_path, monkeypatch):
+    """A failed package zip build surfaces from get_spark, not later as
+    an ImportError on the workers."""
+    from halyard_spark import session
+
+    def broken(*args, **kwargs):
+        raise OSError("zip build failed")
+
+    monkeypatch.setattr(session.tempfile, "gettempdir", lambda: str(tmp_path))
+    monkeypatch.setattr(session.shutil, "make_archive", broken)
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    with pytest.raises(OSError, match="zip build failed"):
+        session.get_spark(shuffle_partitions=int(width), extra_conf={"spark.local.dir": str(tmp_path)})
+
+
+def test_driver_java_options_keep_the_callers_last():
+    from halyard_spark.session import C2_THRESHOLDS, driver_java_options
+
+    ours = driver_java_options().split()
+    assert ours == [f"-XX:{k}={v}" for k, v in C2_THRESHOLDS.items()]
+    caller = "-Djava.io.tmpdir=/tmp/x -XX:Tier4InvocationThreshold=7"
+    merged = driver_java_options(caller)
+    assert merged.split()[: len(ours)] == ours
+    assert merged.endswith(" " + caller)
+
+
+def test_jit_options_reach_the_driver_jvm(spark):
+    """Spark's driver options include -XX:+IgnoreUnrecognizedVMOptions,
+    so a misspelled flag would be dropped without a word: read every
+    threshold back from the running JVM."""
+    from halyard_spark.session import C2_THRESHOLDS, CODEGEN_CACHE_ENTRIES
+
+    jvm = spark.sparkContext._jvm
+    hotspot = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    for flag, value in C2_THRESHOLDS.items():
+        assert hotspot.getVMOption(flag).getValue() == str(value), flag
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(CODEGEN_CACHE_ENTRIES)
+
+
+def test_run_report_counts_jvm_compiles(pipeline_out):
+    jvm = pipeline_out[1]["_jvm"]
+    assert set(jvm) == {"jit_ms", "codegen_compiles", "codegen_ms"}
+    assert all(v >= 0 for v in jvm.values()), jvm
+
+
 def test_adaptive_shuffle_width(spark, tmp_path):
     """Width tracks input bytes: a small parquet keeps the session floor;
     the same helper scales linearly once the volume crosses the 128MB
