@@ -33,12 +33,21 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 INDEXES = {
     "spo": ["ctx", "subj", "pred", "obj"],  # ctx leads: per-graph pruning
     "pos": ["pred", "obj", "subj"],
     "osp": ["obj", "subj", "pred"],
 }
+
+# Parquet data-page size of every mirror write.  A scan skips whole pages
+# by the page index's per-page min/max, so the page is the unit of a
+# point lookup's read; parquet's 1 MB default stops at its 20,000-row
+# page cap on these narrow sorted columns.  PAGE_BYTES comes from a sweep
+# on the kgbench store (README "Scale design notes"): smaller pages read
+# fewer rows per lookup and write more bytes.
+PAGE_BYTES = 8 * 1024
 
 
 def write_sorted(df: DataFrame, path: str, keys: list[str]) -> None:
@@ -51,7 +60,8 @@ def write_sorted(df: DataFrame, path: str, keys: list[str]) -> None:
     constant (a pinned count meant ~7M-row external-sort spills at the
     sf1.0 rehearsal, and would mean 32 multi-TB files at 100 TB)."""
     part = df.repartitionByRange(*[F.col(k) for k in keys])
-    part.sortWithinPartitions(*keys).write.mode("overwrite").parquet(path)
+    (part.sortWithinPartitions(*keys).write.mode("overwrite")
+     .option("parquet.page.size", PAGE_BYTES).parquet(path))
 
 
 def write_mirrors(cached: DataFrame, out_dir: str, indexes: list[str] | None = None) -> None:
@@ -162,18 +172,48 @@ def read_index(spark: SparkSession, store_dir: str, index: str = "spo") -> DataF
     return spark.read.parquet(f"{store_dir}/{index}")
 
 
+class StoreFrame(ClassicDataFrame):
+    """A written store: a DataFrame over its SPO mirror that also reads
+    the POS and OSP mirrors, each on first use.  Every DataFrame method
+    works on it and returns a plain frame of the SPO rows, so a caller
+    that filters, joins or updates it sees one quad table; the SPARQL
+    planner asks ``mirror`` for the sort order ``pick_index`` names."""
+
+    @classmethod
+    def read(cls, spark: SparkSession, store_dir: str) -> "StoreFrame":
+        store = cls(read_index(spark, store_dir, "spo")._jdf, spark)
+        store.store_dir = store_dir
+        store._mirrors = {}
+        return store
+
+    def mirror(self, index: str) -> DataFrame:
+        """The ``index`` mirror, read once and kept: its file listing and
+        footers are not re-read per query.  Two threads asking at once
+        may both read it; either frame serves."""
+        if index == "spo":
+            return self
+        df = self._mirrors.get(index)
+        if df is None:
+            df = self._mirrors[index] = read_index(self.sparkSession, self.store_dir, index)
+        return df
+
+
 def pick_index(s_bound: bool, p_bound: bool, o_bound: bool) -> str:
     """Index selection for a statement pattern — the 16-way dispatch of
-    HalyardTableUtils.java:300-373 reduced to 3 sort orders.
+    HalyardTableUtils.java:300-373 reduced to 3 sort orders: the mirror
+    whose leading keys cover the bound terms.
 
-    Trade-off note: the SPO mirror is CTX-LED (per-graph scans prune by
-    file min/max — the north rule's named-graph workloads), so a
-    subject-bound lookup with ctx UNBOUND prunes only within each
-    graph's row-group run, not globally.  The reference pays 6 sorted
-    permutations for both; we pay 3 and give named-graph pruning the
-    leading key.  All patterns still push their filters down
-    (PushedFilters plan gates); this choice affects file-skip
-    efficiency, not correctness."""
+    Trade-off note: the SPO mirror is CTX-LED, so a subject-bound lookup
+    with ctx unbound skips pages only within each graph's run of the
+    sort.  On the kgbench store (60,860 quads, 8 KB pages; rows read per
+    query from the event log, SKILL.md "Rows read per query class")
+    ``<s> ?p ?o`` reads 431 rows ctx-led, where a subject-led SPO read
+    200 in a prototype; ``GRAPH <g> { ?s <p> ?o }`` reads 300 rows
+    ctx-led, where POS read 25,100.  Named-graph scans keep the leading
+    key; the reference pays six permutations for both, this store
+    three.  Every pattern pushes its filters down whichever mirror it
+    scans (PushedFilters plan gates), so the choice moves rows read,
+    never results."""
     if s_bound:
         return "spo"
     if p_bound:

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from halyard_spark.pipeline import materialize
@@ -95,7 +95,8 @@ def _bulk_load_rdf(
     return manifest
 
 
-def load_dataset(spark: SparkSession, store_dir: str) -> DataFrame:
-    """The loaded store as a quad DataFrame (SPO mirror), query-ready for
-    query/sparql.sparql_query."""
-    return materialize.read_index(spark, store_dir, "spo")
+def load_dataset(spark: SparkSession, store_dir: str) -> materialize.StoreFrame:
+    """The loaded store as a quad DataFrame over its SPO mirror that also
+    holds the POS and OSP mirrors, read on first use: query/sparql's
+    planner scans the mirror that covers each pattern's bound terms."""
+    return materialize.StoreFrame.read(spark, store_dir)

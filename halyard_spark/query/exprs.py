@@ -27,8 +27,11 @@ def try_numeric(col: str | Column) -> Column:
     generated inside sort expressions (Spark INTERNAL_ERROR), and the
     guarded cast never trips ANSI because only validated lexicals reach
     the cast branch."""
-    c = nt.nt_str(col)
-    return F.when(c.rlike(_NUMERIC_LEXICAL), c.cast("double"))
+    return _numeric_label(nt.nt_str(col))
+
+
+def _numeric_label(label: Column) -> Column:
+    return F.when(label.rlike(_NUMERIC_LEXICAL), label.cast("double"))
 
 
 def ebv(col: str | Column) -> Column:
@@ -287,15 +290,14 @@ def order_key(col: str | Column, ascending: bool = True) -> list[Column]:
         .when(nt.nt_is_iri(c), 1)
         .otherwise(2)
     )
-    num = try_numeric(c)
+    label = nt.nt_str(c)  # built once: each copy is dozens of expression nodes
+    num = _numeric_label(label)
     # dateTime-typed literals order by INSTANT (op:dateTime-less-than),
     # so "...T14:45-05:00" sorts after "...T15:00Z"; other terms carry a
     # NULL here and fall through to the lexical tiebreaker
     ts = F.when(
-        nt.nt_datatype(c).isin(*_DATETIME_TYPES), nt.nt_str(c)
+        nt.nt_datatype(c).isin(*_DATETIME_TYPES), label
     ).try_cast("timestamp")
     if ascending:
-        return [rank.asc(), F.asc_nulls_last(num), F.asc_nulls_last(ts),
-                nt.nt_str(c).asc()]
-    return [rank.desc(), F.desc_nulls_last(num), F.desc_nulls_last(ts),
-            nt.nt_str(c).desc()]
+        return [rank.asc(), F.asc_nulls_last(num), F.asc_nulls_last(ts), label.asc()]
+    return [rank.desc(), F.desc_nulls_last(num), F.desc_nulls_last(ts), label.desc()]

@@ -3,12 +3,15 @@
 Halyard picks the index permutation whose prefix covers the bound terms
 and builds an HBase range scan (common/.../HalyardTableUtils.java:300-373,
 scan builders :496-510, 16-way dispatch).  Here a pattern is a filter
-over the quad frame it is given: the SPARQL planner scans whatever frame
-its caller passed (the store's spo mirror, an in-memory snapshot) and
-picks no mirror per pattern — nothing calls ``materialize.pick_index``.
-Spark does the pruning: partition pruning on a ctx-partitioned store
-plus parquet min/max row-group pruning, with the equality filters pushed
-into the scan (PushedFilters in explain()).
+over a quad frame.  Over a written store (``rdfload.load_dataset``, a
+``materialize.StoreFrame``) the SPARQL planner scans, per pattern, the
+SPO, POS or OSP mirror that ``materialize.pick_index`` names for its
+bound positions (``sparql._Planner._mirror``); any other frame (an
+in-memory snapshot, an updated endpoint store) is scanned as given.
+Spark does the pruning: the equality filters are pushed into the parquet
+scan (PushedFilters in explain()), which skips row groups and pages by
+their min/max; on the mirror sorted by the bound terms that leaves the
+pages holding the matches.
 
 Bound positions become equality filters and are dropped from the
 output; unbound positions become variables through :func:`bind_columns`,

@@ -40,8 +40,10 @@ from typing import Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, DataType, NumericType
 
 from halyard_spark import nt
+from halyard_spark.pipeline.materialize import StoreFrame, pick_index
 from halyard_spark.query import algebra as A
 from halyard_spark.query import exprs as E
 from halyard_spark.query import fulltext as FT
@@ -979,6 +981,23 @@ _EXPR_STR = "str"
 _EXPR_BOOL = "bool"
 
 
+def _var_kind(dtype: DataType) -> str:
+    """The kind of a solution column: a pattern variable holds N-Triples
+    strings, while BIND and aggregate columns keep their Spark type
+    (exprs.as_term renders them where they meet terms)."""
+    if isinstance(dtype, NumericType):
+        return _EXPR_NUM
+    if isinstance(dtype, BooleanType):
+        return _EXPR_BOOL
+    return _EXPR_TERM
+
+
+def _bound(term) -> bool:
+    """Whether a pattern term narrows its scan to one value: a constant,
+    but not the halyard:search literal, which matches many objects."""
+    return term[0] != "var" and not (term[0] == "lit" and term[3] == FT.SEARCH_DATATYPE)
+
+
 class _Planner:
     def __init__(
         self,
@@ -1384,17 +1403,30 @@ class _Planner:
         schema = ", ".join(f"{v} string" for v in vars_)
         return A.values_table(self.spark, rows, schema)
 
-    def _scoped(self) -> DataFrame:
-        """The store narrowed to the current GRAPH scope and the query's
-        RDF dataset.  No scope + no dataset = all contexts (the
-        reference's unbound-context scan); GRAPH <g> prunes to one ctx
-        (partition pruning when the store is ctx-partitioned); GRAPH ?g
-        keeps named graphs only (ctx NOT NULL).  With FROM / FROM NAMED
-        the W3C dataset applies strictly: FROM merges the listed graphs
-        into the default graph, FROM NAMED bounds the GRAPH space, and a
-        kind with no clause listed is EMPTY when the other kind is
+    def _mirror(self, s_bound: bool, p_bound: bool, o_bound: bool) -> DataFrame:
+        """The frame a pattern with these bound positions scans: on a
+        StoreFrame, the mirror ``pick_index`` names (Halyard's per-pattern
+        index dispatch, HalyardTableUtils.java:300-373); inside GRAPH <g>
+        the ctx-led SPO unless pred and obj are both bound, since POS
+        cannot prune on ctx.  Any other frame is scanned as given."""
+        store = self.triples
+        if not isinstance(store, StoreFrame):
+            return store
+        if self.graph is not None and self.graph[0] != "var" and not (p_bound and o_bound):
+            return store
+        return store.mirror(pick_index(s_bound, p_bound, o_bound))
+
+    def _scoped(self, df: DataFrame | None = None) -> DataFrame:
+        """``df`` (default: the store) narrowed to the current GRAPH
+        scope and the query's RDF dataset.  No scope + no dataset = all
+        contexts (the reference's unbound-context scan); GRAPH <g> prunes
+        to one ctx (partition pruning when the store is ctx-partitioned);
+        GRAPH ?g keeps named graphs only (ctx NOT NULL).  With FROM / FROM
+        NAMED the W3C dataset applies strictly: FROM merges the listed
+        graphs into the default graph, FROM NAMED bounds the GRAPH space,
+        and a kind with no clause listed is EMPTY when the other kind is
         present (SPARQL 1.1 §13.2)."""
-        df = self.triples
+        df = self.triples if df is None else df
         ds_defaults, ds_named = self.dataset
         has_ds = ds_defaults is not None or ds_named is not None
         if "ctx" not in df.columns and (has_ds or self.graph is not None):
@@ -1421,7 +1453,8 @@ class _Planner:
             out = self.eval_path_expr(s, p[1], o)
             internal = [c for c in out.columns if c.startswith("__pathvar")]
             return out.drop(*internal) if internal else out
-        return self._scan(self._scoped(), {"subj": s, "pred": p, "obj": o})
+        df = self._scoped(self._mirror(_bound(s), _bound(p), _bound(o)))
+        return self._scan(df, {"subj": s, "pred": p, "obj": o})
 
     def _scan(self, df: DataFrame, positions: dict) -> DataFrame:
         """Bind one pattern over ``df``: ``positions`` maps quad columns
@@ -1489,14 +1522,15 @@ class _Planner:
     def eval_multi_pred(self, s, pred_iris: list[str], o) -> DataFrame:
         """One scan matching any of several predicates (pred IN set),
         binding the endpoints like a triple pattern."""
-        df = self._scoped().where(F.col("pred").isin([nt.iri(i) for i in pred_iris]))
+        df = self._scoped(self._mirror(_bound(s), True, _bound(o)))
+        df = df.where(F.col("pred").isin([nt.iri(i) for i in pred_iris]))
         return self._scan(df, {"subj": s, "obj": o})
 
     def eval_nps(self, s, fwd: list[str], inv: list[str], o) -> DataFrame:
         """Negated property set !(p1|..|^q1|..): forward edges whose
         predicate is outside {p..}, plus inverted edges outside {q..}."""
         def scan(subj_term, obj_term, excluded: list[str]) -> DataFrame:
-            df = self._scoped()
+            df = self._scoped(self._mirror(_bound(subj_term), False, _bound(obj_term)))
             if excluded:
                 df = df.where(~F.col("pred").isin([nt.iri(i) for i in excluded]))
             return self._scan(df, {"subj": subj_term, "obj": obj_term})
@@ -1536,8 +1570,13 @@ class _Planner:
             return node if graph_var is None else F.split(node, sep, 2)[1]
 
         scoped = self._scoped()
+        s_var, o_var = s[0] == "var", o[0] == "var"
         if sub_path[0] == "link":  # fast path: single-predicate edge scan
-            edges = scoped.where(F.col("pred") == nt.iri(sub_path[1])).select(
+            # the walk filters the edge scan on the bound end's column
+            # (``subj`` IN frontier, or ``obj`` IN frontier over reversed
+            # edges), so that end counts as bound for the mirror choice
+            walked = self._scoped(self._mirror(not s_var, True, s_var and not o_var))
+            edges = walked.where(F.col("pred") == nt.iri(sub_path[1])).select(
                 key(F.col("ctx"), F.col("subj")).alias("src"),
                 key(F.col("ctx"), F.col("obj")).alias("dst"),
             )
@@ -1552,7 +1591,6 @@ class _Planner:
             edges = sub_pairs.select(
                 key(ctx, F.col(sv)).alias("src"), key(ctx, F.col(ov)).alias("dst")
             )
-        s_var, o_var = s[0] == "var", o[0] == "var"
         if s_var and o_var:
             if mod == "+":
                 pairs = PATH.transitive_closure(edges, min_length=1)
@@ -1607,7 +1645,7 @@ class _Planner:
                 # a variable with no binding in scope evaluates as UNBOUND
                 # (an expression error -> NULL), never an analysis crash
                 return F.lit(None).cast("string"), _EXPR_TERM
-            return F.col(e[1]), _EXPR_TERM
+            return F.col(e[1]), _var_kind(df.schema[e[1]].dataType)
         if kind == "havingref":  # pre-computed aggregate column (HAVING rewrite)
             return F.col(e[1]), e[2]
         if kind == "num":
@@ -1814,8 +1852,9 @@ class _Planner:
             coll = F.collect_set(val) if distinct else F.collect_list(val)
             return F.array_join(F.array_sort(coll), sep)
         if name == "sample":
-            # deterministic SAMPLE that stays a term (not the bare label)
-            return F.min(col) if k == _EXPR_TERM else F.min(self.to_str(col, k))
+            # deterministic SAMPLE that keeps the value as it is: a term
+            # stays a term, a number or boolean keeps its type
+            return F.min(col)
         raise ValueError(f"SPARQL: unknown aggregate {name}")
 
     # -- SELECT planning (top level and subqueries share this)
@@ -2091,6 +2130,15 @@ def _str(_, v: _Val) -> Column:
     return F.when(~nt.nt_is_bnode(v.col), res) if v.kind == _EXPR_TERM else res
 
 
+def _term_test(test, true_kinds: tuple, _, v: _Val) -> Column:
+    """isIRI / isBlank / isLiteral / isNumeric: ``test`` on a term.  A
+    computed number, boolean or string (an aggregate or BIND column, a
+    STRLEN result) is a literal: true when its kind is in ``true_kinds``."""
+    if v.kind == _EXPR_TERM:
+        return test(v.col)
+    return F.when(v.col.isNotNull(), F.lit(v.kind in true_kinds))
+
+
 def _datatype(_, v: _Val) -> Column:
     if v.kind == _EXPR_TERM:
         return F.when(_bare(v.col), F.lit(nt.XSD + "string")).otherwise(nt.nt_datatype(v.col))
@@ -2281,10 +2329,11 @@ _BUILTINS: dict[str, _Builtin] = {
     "langmatches": _Builtin(2, 2, (_STRING,), lambda _, tag, rng: E.langmatches(tag, rng), _EXPR_BOOL),
     "datatype": _Builtin(1, 1, (_RAW,), _datatype, _EXPR_STR),
     "bound": _Builtin(1, 1, (_RAW,), lambda _, v: v.col.isNotNull(), _EXPR_BOOL),
-    "isiri": _Builtin(1, 1, (_RAW,), lambda _, v: nt.nt_is_iri(v.col), _EXPR_BOOL),
-    "isblank": _Builtin(1, 1, (_RAW,), lambda _, v: nt.nt_is_bnode(v.col), _EXPR_BOOL),
-    "isliteral": _Builtin(1, 1, (_RAW,), lambda _, v: nt.nt_is_literal(v.col), _EXPR_BOOL),
-    "isnumeric": _Builtin(1, 1, (_RAW,), lambda _, v: E.is_numeric_term(v.col), _EXPR_BOOL),
+    "isiri": _Builtin(1, 1, (_RAW,), partial(_term_test, nt.nt_is_iri, ()), _EXPR_BOOL),
+    "isblank": _Builtin(1, 1, (_RAW,), partial(_term_test, nt.nt_is_bnode, ()), _EXPR_BOOL),
+    "isliteral": _Builtin(1, 1, (_RAW,), partial(
+        _term_test, nt.nt_is_literal, (_EXPR_NUM, _EXPR_STR, _EXPR_BOOL)), _EXPR_BOOL),
+    "isnumeric": _Builtin(1, 1, (_RAW,), partial(_term_test, E.is_numeric_term, (_EXPR_NUM,)), _EXPR_BOOL),
     "iri": _Builtin(1, 1, (_RAW,), lambda site, v: E.iri_resolve(
         v.col, site.planner.parser.base), _EXPR_TERM),
     "bnode": _Builtin(0, 1, (_STRING,), _bnode, _EXPR_TERM),

@@ -232,21 +232,12 @@ def adaptive_shuffle_width(spark: SparkSession, df, expansion: float = 4.0,
     overhead cliff this function exists to avoid.  Callers restore the
     conf after their run for the same reason.
     """
-    try:
-        floor = max(int(spark.sparkContext.defaultParallelism), 8)
-    except Exception:
-        floor = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    try:
-        total = _local_bytes(df.inputFiles()) or 0
-    except Exception:
-        total = 0
-    if total <= 0:
-        try:  # in-memory / non-file source: Catalyst's own size estimate
-            est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-            if 0 < est < (1 << 50):  # ignore the unknown-size sentinel
-                total = est // 4  # plan stats are uncompressed-row sizes
-        except Exception:
-            total = 0
+    floor = max(int(spark.sparkContext.defaultParallelism), 8)
+    total = _local_bytes(df.inputFiles()) or 0
+    if total <= 0:  # in-memory / non-file source: Catalyst's own size estimate
+        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        if 0 < est < (1 << 50):  # ignore the unknown-size sentinel
+            total = est // 4  # plan stats are uncompressed-row sizes
     if total <= 0:
         return floor
     width = int(total * expansion // (target_mb * 1024 * 1024)) + 1
@@ -272,15 +263,8 @@ def widen_small_input(df, target: int | None = None, max_bytes_per_core: int = 8
     Safe for results: round-robin repartition only changes row placement,
     and every caller aggregates with order-insensitive functions.
     """
-    spark = df.sparkSession
-    try:
-        target = target or spark.sparkContext.defaultParallelism
-    except Exception:
-        return df
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return df
+    target = target or df.sparkSession.sparkContext.defaultParallelism
+    files = df.inputFiles()
     if not files or len(files) >= target:
         return df
     total = _local_bytes(files)
@@ -311,13 +295,8 @@ def checkpoint_parallel(df, target: int | None = None):
     serial consumer stages were the dominant cost (~6 s), and 8-way
     spreading removes that tail for ~0.1 s in healthy windows."""
     ck = df.localCheckpoint(eager=True)
-    spark = df.sparkSession
-    try:
-        target = target or max(8, spark.sparkContext.defaultParallelism // 4)
-        n = ck.rdd.getNumPartitions()
-    except Exception:
-        return ck
-    if n >= target:
+    target = target or max(8, df.sparkSession.sparkContext.defaultParallelism // 4)
+    if ck.rdd.getNumPartitions() >= target:
         return ck
     return ck.repartition(target).localCheckpoint(eager=True)
 

@@ -144,6 +144,45 @@ def test_endpoint_sparql_update(spark):
         ep.stop()
 
 
+def test_endpoint_update_over_store_handle_reads_its_write(spark, tmp_path):
+    """An endpoint serving a load_dataset store handle applies an UPDATE
+    and answers the next query from the updated snapshot, which is a
+    plain frame: the point lookup that scanned POS before the update
+    sees the inserted and deleted quads after it."""
+    import json as _json
+    import urllib.parse
+    import urllib.request
+
+    from halyard_spark.endpoint import SparqlEndpoint
+    from halyard_spark.pipeline import materialize
+    from halyard_spark.pipeline.rdfload import load_dataset
+
+    rows = [(f"<urn:s{i}>", "<urn:p>", f"<urn:o{i % 3}>", None) for i in range(9)]
+    materialize.write_store(
+        spark.createDataFrame(rows, "subj string, pred string, obj string, ctx string"), str(tmp_path)
+    )
+    ep = SparqlEndpoint(load_dataset(spark, str(tmp_path))).start()
+
+    def subjects() -> set[str]:
+        q = urllib.parse.quote("SELECT ?s WHERE { ?s <urn:p> <urn:o0> }")
+        with urllib.request.urlopen(f"http://127.0.0.1:{ep.port}/sparql?query={q}") as resp:
+            return {b["s"]["value"] for b in _json.loads(resp.read())["results"]["bindings"]}
+
+    try:
+        assert subjects() == {"urn:s0", "urn:s3", "urn:s6"}
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{ep.port}/sparql",
+            data=b"DELETE DATA { <urn:s3> <urn:p> <urn:o0> } ; INSERT DATA { <urn:s9> <urn:p> <urn:o0> }",
+            headers={"Content-Type": "application/sparql-update"},
+            method="POST",
+        )
+        with urllib.request.urlopen(req) as resp:
+            assert resp.status == 204
+        assert subjects() == {"urn:s0", "urn:s6", "urn:s9"}
+    finally:
+        ep.stop()
+
+
 def test_endpoint_update_errors_are_http_errors(spark):
     """UPDATE errors take the query status rule — never a dropped
     connection (ADVICE regression): a parse error or planner rejection

@@ -6,6 +6,8 @@ join selection, and top-K fusion (Sorter.java eviction analog).
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -140,6 +142,76 @@ def test_path_alternative_of_links_is_single_scan(spark, store):
     plan = _plan(out)
     assert plan.count("Scan parquet") == 1
     assert "In(pred" in plan or "pred#" in plan.split("PushedFilters", 1)[1][:300]
+
+
+def _scanned(plan: str) -> list[str]:
+    """The store mirrors a physical plan scans, in plan order."""
+    return re.findall(r"/store/(spo|pos|osp)\]", plan)
+
+
+def test_store_pred_obj_pattern_scans_pos(spark, store):
+    """On a load_dataset store a pred+obj pattern reads the POS mirror,
+    with both constants pushed into its scan (Halyard's POS range scan,
+    HalyardTableUtils.java:300-373)."""
+    from halyard_spark.pipeline.rdfload import load_dataset
+    from halyard_spark.query.sparql import sparql_query
+
+    handle = load_dataset(spark, f"{store}/store")
+    m = handle.where(F.col("pred") == "<urn:p:imports>").first()["obj"]
+    plan = _plan(sparql_query(handle, f"SELECT ?s WHERE {{ ?s <urn:p:imports> {m} }}"))
+    assert _scanned(plan) == ["pos"], plan
+    pushed = plan.split("PushedFilters:", 1)[1][:400]
+    assert "EqualTo(pred," in pushed and "EqualTo(obj," in pushed, plan
+
+
+def test_store_closure_edge_scan_picks_by_bound_end(spark, store, monkeypatch):
+    """A closure walks ``obj IN (frontier)`` over reversed edges from a
+    bound object, which POS covers; from a bound subject it walks
+    ``subj IN (frontier)`` on the SPO mirror."""
+    from halyard_spark.pipeline.rdfload import load_dataset
+    from halyard_spark.query import path as path_mod
+    from halyard_spark.query.sparql import sparql_query
+
+    handle = load_dataset(spark, f"{store}/store")
+    row = handle.where(F.col("pred") == "<urn:p:imports>").first()
+    walked = []
+    reachable_from = path_mod.reachable_from
+
+    def spy(edges, *args, **kwargs):
+        walked.extend(_scanned(_plan(edges)))
+        return reachable_from(edges, *args, **kwargs)
+
+    monkeypatch.setattr(path_mod, "reachable_from", spy)
+    sparql_query(handle, f"SELECT ?x WHERE {{ ?x <urn:p:imports>* {row['obj']} }}").collect()
+    sparql_query(handle, f"SELECT ?x WHERE {{ {row['subj']} <urn:p:imports>+ ?x }}").collect()
+    assert walked == ["pos", "spo"], walked
+
+
+def test_store_subject_and_graph_patterns_scan_spo(spark, store):
+    """A subject-bound pattern and a GRAPH <g> pattern with a free
+    object keep the ctx-led SPO mirror."""
+    from halyard_spark.pipeline.rdfload import load_dataset
+    from halyard_spark.query.sparql import sparql_query
+
+    handle = load_dataset(spark, f"{store}/store")
+    row = handle.where(F.col("ctx").isNotNull() & (F.col("pred") == "<urn:p:imports>")).first()
+    plan = _plan(sparql_query(handle, f"SELECT ?p ?o WHERE {{ {row['subj']} ?p ?o }}"))
+    assert _scanned(plan) == ["spo"] and "EqualTo(subj," in plan.split("PushedFilters:", 1)[1][:300], plan
+    plan = _plan(sparql_query(handle, f"SELECT ?s ?o WHERE {{ GRAPH {row['ctx']} {{ ?s <urn:p:imports> ?o }} }}"))
+    assert _scanned(plan) == ["spo"] and "EqualTo(ctx," in plan.split("PushedFilters:", 1)[1][:300], plan
+    plan = _plan(sparql_query(handle, f"SELECT ?s WHERE {{ GRAPH {row['ctx']} {{ ?s <urn:p:imports> {row['obj']} }} }}"))
+    assert _scanned(plan) == ["pos"], plan
+
+
+def test_bare_frame_scans_what_it_was_given(spark, store):
+    """sparql_query over a plain DataFrame picks no mirror: a
+    subject-bound pattern over a POS read still scans POS."""
+    from halyard_spark.query.sparql import sparql_query
+
+    pos = materialize.read_index(spark, f"{store}/store", "pos")
+    s = pos.where(F.col("pred") == "<urn:p:imports>").first()["subj"]
+    plan = _plan(sparql_query(pos, f"SELECT ?p ?o WHERE {{ {s} ?p ?o }}"))
+    assert _scanned(plan) == ["pos"], plan
 
 
 def test_summary_decimation_single_factor(spark):

@@ -306,3 +306,33 @@ def test_builtin_table_is_total(spark, name):
     for field, kind in zip(out.schema.fields, kinds):
         assert field.dataType.simpleString() in _KIND_TYPES[kind], (field, kind)
     assert len(out.collect()) == 1
+
+
+def test_native_columns_take_their_spark_type_as_kind(spark):
+    """An aggregate or BIND column keeps its Spark type, and an
+    expression over it takes its kind from that type: ORDER BY sorts the
+    number natively, isLiteral / isNumeric / DATATYPE see a typed
+    literal, SAMPLE keeps the number, and FILTER reads a boolean BIND as
+    its value (before, a bigint ?n was read as a term string: isLiteral
+    was false, DATATYPE was xsd:string and FILTER(?b) dropped every
+    row)."""
+    from halyard_spark.endpoint import results_json
+    from halyard_spark.query.sparql import sparql_query
+
+    rows = [(f"<urn:s{i}>", "<urn:p>", f"<urn:o{k}>", None)
+            for k, n in enumerate((10, 9, 2)) for i in range(n)]
+    store = spark.createDataFrame(rows, "subj string, pred string, obj string, ctx string")
+    counts = "{ SELECT ?o (COUNT(?s) AS ?n) WHERE { ?s <urn:p> ?o } GROUP BY ?o }"
+    q = (f"SELECT ?n ?lit ?num ?iri ?dt WHERE {{ {counts} "
+         "BIND(isLiteral(?n) AS ?lit) BIND(isNumeric(?n) AS ?num) BIND(isIRI(?n) AS ?iri) "
+         "BIND(DATATYPE(?n) AS ?dt) } ORDER BY DESC(?n)")
+    got = [tuple(r) for r in sparql_query(store, q).collect()]
+    xsd_integer = "http://www.w3.org/2001/XMLSchema#integer"
+    assert got == [(n, True, True, False, xsd_integer) for n in (10, 9, 2)]
+    q = f"SELECT (SAMPLE(?n) AS ?m) WHERE {{ {counts} FILTER(?n = 9) }}"
+    (binding,) = results_json(sparql_query(store, q))["results"]["bindings"]
+    assert binding["m"] == {"type": "literal", "value": "9", "datatype": xsd_integer}
+    q = f"SELECT ?o WHERE {{ {counts} BIND(?n > 5 AS ?big) FILTER(?big) }}"
+    assert sorted(r.o for r in sparql_query(store, q).collect()) == ["<urn:o0>", "<urn:o1>"]
+    q = 'SELECT ?l ?k WHERE { BIND(isLiteral(STRLEN("ab")) AS ?l) BIND(isNumeric(STRLEN("ab")) AS ?k) }'
+    assert [tuple(r) for r in sparql_query(store, q).collect()] == [(True, True)]
