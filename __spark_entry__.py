@@ -896,8 +896,8 @@ def q_summary_domain_range(spark, sf_dir):
     """HalyardSummary analog: class/predicate/domain/range/domain+range
     summaries with log2 bucketing (HalyardSummary.java:163-174,210).
 
-    The typed-triples union is materialized ONCE per invocation
-    (checkpoint_parallel): summary()'s five stat branches otherwise each
+    The typed-triples union is materialized ONCE per invocation (eager
+    localCheckpoint): summary()'s five stat branches otherwise each
     re-evaluate the 10-arm IRI-concat union (types + data + two
     domain/range joins + the double join = ~8 re-scans, measured ~40% of
     the query wall).  In-query intermediate only — recomputed from the
@@ -906,10 +906,9 @@ def q_summary_domain_range(spark, sf_dir):
     vectorized re-read is the cheaper side of the same trade (the
     columnar/row-cache rejections in pipeline/materialize.py)."""
     from halyard_spark.pipeline import stats as ST2
-    from halyard_spark.session import checkpoint_parallel
 
     return ST2.summary(
-        checkpoint_parallel(_tpch_triples_typed(spark, sf_dir)), decimation=1
+        _tpch_triples_typed(spark, sf_dir).localCheckpoint(eager=True), decimation=1
     )
 
 

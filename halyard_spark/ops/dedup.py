@@ -70,16 +70,14 @@ def _pair_candidates(sh: DataFrame, id_col: str, key: str, max_df: int) -> DataF
     """Self-join docs sharing a key, a < b; keys with doc-freq > max_df are
     dropped (no-signal keys would create quadratic pair blowup).
 
-    ``sh`` is materialized once (checkpoint_parallel): its plan is consumed
+    ``sh`` is materialized once (eager localCheckpoint): its plan is consumed
     THREE times below (doc-freq cap + both self-join sides), and column
     pruning gives each consumer a different projection, which defeats
     Spark's ReuseExchange — measured as the whole signature aggregation
     executing twice, each time as a one-task stage (guide §2.4: remove
     duplicated subtree work before tuning anything else).
     """
-    from halyard_spark.session import checkpoint_parallel
-
-    sh = checkpoint_parallel(sh)
+    sh = sh.localCheckpoint(eager=True)
     df_ok = sh.groupBy(key).agg(F.count(F.lit(1)).alias("df")).where(F.col("df") <= max_df)
     pruned = sh.join(df_ok.select(key), key)
     a = pruned.select(F.col(key), F.col(id_col).alias("a"))
@@ -109,13 +107,11 @@ def ngram_jaccard_pairs(
     # feeds the df cap AND the pruned join; pruned feeds sizes + both
     # self-join sides (projection differences defeat ReuseExchange —
     # without this the shingle explode re-runs up to 5x, guide §2.4)
-    from halyard_spark.session import checkpoint_parallel
-
-    sh = checkpoint_parallel(shingles(docs, id_col, text_col, n))
+    sh = shingles(docs, id_col, text_col, n).localCheckpoint(eager=True)
     df_ok = (
         sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df")).where(F.col("df") <= max_df)
     )
-    pruned = checkpoint_parallel(sh.join(df_ok.select("shingle"), "shingle"))
+    pruned = sh.join(df_ok.select("shingle"), "shingle").localCheckpoint(eager=True)
     sizes = pruned.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
     a = pruned.select("shingle", F.col(id_col).alias("a"))
     b = pruned.select("shingle", F.col(id_col).alias("b"))
@@ -262,11 +258,9 @@ def simhash_pairs(
         for i, (start, ln) in enumerate(spans)
     ]
     # chunks is consumed 3x (df cap + both join sides) — materialize once
-    from halyard_spark.session import checkpoint_parallel
-
-    chunks = checkpoint_parallel(sig.select(
+    chunks = sig.select(
         F.col(id_col), F.col("simhash"), F.explode(F.array(*chunk_cols)).alias("bucket")
-    ))
+    ).localCheckpoint(eager=True)
     a = chunks.select(F.col("bucket"), F.col(id_col).alias("a"), F.col("simhash").alias("sim_a"))
     b = chunks.select(F.col("bucket"), F.col(id_col).alias("b"), F.col("simhash").alias("sim_b"))
     df_ok = chunks.groupBy("bucket").agg(F.count(F.lit(1)).alias("df")).where(F.col("df") <= max_df)
@@ -378,12 +372,10 @@ def embedding_cosine_pairs(
     elif method == "lsh":
         # widen the tiny-scan case (hyperplane dot products are the heavy
         # narrow work here) and materialize bk once for its two join sides
-        from halyard_spark.session import checkpoint_parallel
-
-        bk = checkpoint_parallel(lsh_buckets(
+        bk = lsh_buckets(
             widen_small_input(emb.select(F.col(id_col), F.col(vec_col))),
             dim=dim, n_planes=n_planes, n_tables=n_tables, vec_col=vec_col, seed=seed,
-        ).select(F.col(id_col).alias("__bid"), "bucket"))
+        ).select(F.col(id_col).alias("__bid"), "bucket").localCheckpoint(eager=True)
         pairs = (
             bk.alias("x")
             .join(bk.alias("y"), on="bucket")

@@ -16,19 +16,17 @@ scaling-equivalence criterion).
 Each round ends with ``localCheckpoint`` to truncate the lineage — an
 unbounded iterative plan otherwise blows up Catalyst analysis time.
 
-Round construction is ONE ``spark.sql`` statement over a temp view of the
-previous round, not a chain of DataFrame transformations: every classic
-DataFrame method analyzes its growing plan EAGERLY, and the incremental
-re-analysis of each round's ~15-op chain measured 450-700 ms per round on
-the driver — 4-6x the round's actual execution at sf0.1.  The single SQL
-statement analyzes once (~60 ms).  Both star ops use a min() window over
+Round construction is ONE ``spark.sql`` statement that takes the previous
+round as a DataFrame argument, not a chain of DataFrame transformations:
+every classic DataFrame method analyzes its growing plan EAGERLY, and
+the incremental re-analysis of each round's ~15-op chain measured
+450-700 ms per round on the driver — 4-6x the round's actual execution
+at sf0.1.  The single SQL statement analyzes once (~60 ms).  Both star ops use a min() window over
 partitionBy(src) — one exchange each — instead of the groupBy+self-join
 formulation (two shuffled sides + sorts per star op, guide §2.4).
 """
 
 from __future__ import annotations
-
-import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -75,30 +73,22 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     # a lazy checkpoint here measured no fewer jobs and no less wall (the
     # pipeline's 909-edge entity graph at local[4])
     cur = edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct()
-    # unique per invocation: concurrent pipeline threads share the
-    # session's temp-view namespace
-    view = f"cc_round_{uuid.uuid4().hex[:12]}"
     prev_sig: tuple | None = None
-    try:
-        for _ in range(max_iter):
-            cur.createOrReplaceTempView(view)
-            # lazy checkpoint + signature agg = ONE action per round (the
-            # agg materializes the checkpoint); an eager checkpoint plus a
-            # separate agg would add a scan job to every round
-            cur = spark.sql(_ROUND_SQL.format(v=view)).localCheckpoint(eager=False)
-            sig_row = cur.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.expr("bit_xor(xxhash64(src, dst))").alias("h"),
-            ).collect()[0]
-            sig = (sig_row["n"], sig_row["h"])
-            if sig == prev_sig:
-                break
-            prev_sig = sig
-    finally:
-        try:
-            spark.catalog.dropTempView(view)
-        except Exception:
-            pass
+    for _ in range(max_iter):
+        # spark.sql registers ``cur`` under a fresh view name and drops it
+        # once the statement is analyzed, so concurrent pipeline threads
+        # never share a name.  Lazy checkpoint + signature agg = ONE action
+        # per round (the agg materializes the checkpoint); an eager
+        # checkpoint plus a separate agg would add a scan job to every round
+        cur = spark.sql(_ROUND_SQL, v=cur).localCheckpoint(eager=False)
+        sig_row = cur.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.expr("bit_xor(xxhash64(src, dst))").alias("h"),
+        ).collect()[0]
+        sig = (sig_row["n"], sig_row["h"])
+        if sig == prev_sig:
+            break
+        prev_sig = sig
     # converged edge set is a forest of stars (node -> component root)
     members = cur.select(F.col("src").alias("node"), F.col("dst").alias("component"))
     roots = cur.select(F.col("dst").alias("node"), F.col("dst").alias("component"))

@@ -77,13 +77,14 @@ def _lineage_path(out_dir: str) -> str:
 
 
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
+    """The lineage rows under ``out_dir``, or None before the first stage
+    records one.  A directory that holds no row yet (a crash between
+    ``makedirs`` and the first write) reads as 0 rows; a damaged row file
+    raises rather than silently turning resume off."""
     path = _lineage_path(out_dir)
     if not os.path.exists(path):
         return None
-    try:
-        return spark.read.parquet(path)
-    except Exception:
-        return None
+    return spark.read.schema(LINEAGE_SCHEMA).parquet(path)
 
 
 def stage_done(spark: SparkSession, out_dir: str, stage: str, input_fp: str, output_path: str) -> bool:

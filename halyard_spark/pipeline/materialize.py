@@ -31,6 +31,7 @@ import json
 import os
 import time
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
@@ -92,11 +93,11 @@ def iceberg_available(spark: SparkSession) -> bool:
         # would report False on exactly the clusters this targets)
         spark._jvm.org.apache.spark.util.Utils.classForName(name, True, False)
         return True
-    except Exception:
+    except Py4JJavaError:
         try:
             spark._jvm.java.lang.Class.forName(name)
             return True
-        except Exception:
+        except Py4JJavaError:
             return False
 
 

@@ -21,17 +21,16 @@ distributed forms, chosen by what the seeds are and how far they reach:
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from halyard_spark.session import local_frame
 
 
-def _round_sql_array(fv: str, ev: str, hops: int, broadcast: bool) -> str:
-    """One dedup-free BFS round as a single SQL statement: a flat chain of
-    ``hops`` LEFT JOINs whose per-row node sequence is collected with
+def _round_sql_array(hops: int, broadcast: bool) -> str:
+    """One dedup-free BFS round as a single SQL statement over the
+    frontier ``{f}`` and the edge set ``{e}``: a flat chain of ``hops``
+    LEFT JOINs whose per-row node sequence is collected with
     ``array(...)`` + ``filter(not null)`` — once a path ends its join key
     is NULL and every later hop stays NULL, so the filtered array is
     exactly the hop-by-hop history the old iterative builder appended.
@@ -48,35 +47,36 @@ def _round_sql_array(fv: str, ev: str, hops: int, broadcast: bool) -> str:
         if broadcast
         else ""
     )
-    joins = [f"LEFT JOIN {ev} e1 ON s.node = e1.src"]
+    joins = ["LEFT JOIN {e} e1 ON s.node = e1.src"]
     joins += [
-        f"LEFT JOIN {ev} e{i} ON e{i - 1}.dst = e{i}.src" for i in range(2, hops + 1)
+        f"LEFT JOIN {{e}} e{i} ON e{i - 1}.dst = e{i}.src" for i in range(2, hops + 1)
     ]
     arr = ", ".join(f"e{i}.dst" for i in range(1, hops + 1))
     return (
         f"WITH chain AS (\n"
         f"  SELECT {hint}s.root,\n"
         f"         filter(array({arr}), x -> x IS NOT NULL) AS hist\n"
-        f"  FROM {fv} s\n  " + "\n  ".join(joins) + "\n)\n"
+        "  FROM {f} s\n  " + "\n  ".join(joins) + "\n)\n"
         "SELECT root, __n AS node, min(__p) + 1 AS __h\n"
         "FROM chain LATERAL VIEW posexplode(hist) t AS __p, __n\n"
         "GROUP BY root, __n"
     )
 
 
-def _round_sql_distinct(fv: str, ev: str, hops: int, broadcast: bool) -> str:
-    """One high-fanout BFS round: per-hop DISTINCT CTEs (bounding row
-    growth mid-round, which the array form cannot) unioned with their hop
-    depth, then min(__h) per pair — the same plan the old per-hop
-    DataFrame loop built, constructed in one analyzed statement."""
+def _round_sql_distinct(hops: int, broadcast: bool) -> str:
+    """One high-fanout BFS round over ``{f}`` and ``{e}``: per-hop
+    DISTINCT CTEs (bounding row growth mid-round, which the array form
+    cannot) unioned with their hop depth, then min(__h) per pair — the
+    same plan the old per-hop DataFrame loop built, constructed in one
+    analyzed statement."""
     hint = "/*+ BROADCAST(e) */ " if broadcast else ""
     ctes = [
         f"h1 AS (SELECT {hint}DISTINCT s.root, e.dst AS node "
-        f"FROM {fv} s JOIN {ev} e ON s.node = e.src)"
+        "FROM {f} s JOIN {e} e ON s.node = e.src)"
     ]
     ctes += [
         f"h{i} AS (SELECT {hint}DISTINCT p.root, e.dst AS node "
-        f"FROM h{i - 1} p JOIN {ev} e ON p.node = e.src)"
+        f"FROM h{i - 1} p JOIN {{e}} e ON p.node = e.src)"
         for i in range(2, hops + 1)
     ]
     arms = "\n  UNION ALL ".join(
@@ -126,16 +126,15 @@ def transitive_closure(
             f"transitive_closure supports min_length in {{0, 1}}; got {min_length} "
             "(use reachable_from for longer minimum paths)"
         )
-    edges = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
-    # NOT distinct'd here: reachable_from's seed construction dedups the
-    # source column anyway, and a distinct on top of that became a second
-    # redundant aggregation exchange in every closure's first round
-    sources = edges.select("src")
-    # _normalized: this function just deduped + checkpointed the edge set;
-    # letting reachable_from re-distinct + re-checkpoint it would
-    # materialize the edge table twice per closure call (code-review fix)
-    closure = reachable_from(
-        edges, sources, min_length=1, _normalized=True, _sources_from_edges=True
+    edges = _normalize(edges)
+    # the frontier is the src column, one row per out-edge: _fused_rounds
+    # dedups it unless the max out-degree is 1 (each src then appears
+    # once); a distinct here as well became a second aggregation exchange
+    # in every closure's first round
+    frontier = edges.select(F.col("src").alias("root"), F.col("src").alias("node"))
+    closure = _fused_rounds(
+        edges, frontier, result=None, result_rows=0, advance=0, hops_left=-1,
+        dedup_frontier=True, frontier_is_edge_srcs=True,
     )
     if min_length == 0:
         if nodes is None:
@@ -145,6 +144,12 @@ def transitive_closure(
         identity = nodes.select(F.col("n").alias("src"), F.col("n").alias("dst")).distinct()
         closure = closure.union(identity).distinct()
     return closure
+
+
+def _normalize(edges: DataFrame) -> DataFrame:
+    """The deduped, materialized (src, dst) edge set the fused rounds join
+    against: checkpointed once so every round reads it, not its lineage."""
+    return edges.select("src", "dst").distinct().localCheckpoint(eager=True)
 
 
 # Bounds of the bound-seed probe (_probe): a traversal from driver-side
@@ -226,8 +231,6 @@ def reachable_from(
     sources: DataFrame | list[str],
     min_length: int = 1,
     max_length: int | None = None,
-    _normalized: bool = False,
-    _sources_from_edges: bool = False,
 ) -> DataFrame:
     """Bound-source property path: all (src, dst) with a directed path of
     length >= min_length from each src in ``sources`` — a one-column
@@ -248,8 +251,8 @@ def reachable_from(
     within its bounds (a constant's one-hop neighbourhood, a star) never
     materializes the edge set and returns a JVM-local frame.  Once the
     traversal outgrows those hops, or when ``sources`` is a DataFrame,
-    the fused rounds below run, resuming from the probe's frontier and
-    seen pairs.
+    the fused rounds (:func:`_fused_rounds`) run, resuming from the
+    probe's frontier and seen pairs.
 
     min_length >= 2 advances the seeds exactly (min_length - 1) steps
     before collecting — {o : path(s, o) >= k} = {o : s ->^(k-1) m and
@@ -262,29 +265,6 @@ def reachable_from(
     default) runs the BFS to convergence — termination is guaranteed
     because every round's anti-join only admits never-seen (root, node)
     pairs from a finite space.
-
-    Fused rounds: the edge set is deduped and checkpointed once, and
-    several 1-hop joins run as ONE Spark job before the convergence
-    action; the depth follows the graph's max out-degree (32 hops on
-    degree-1 graphs, up to 16 on low-fanout (degree <= 4) ones, 4
-    otherwise).  Each round is still frontier-sized work (never a
-    whole-graph closure), but a diameter-D traversal costs
-    ceil(D / depth) driver actions instead of D.  Revisits across the
-    round are dropped at the round-end anti-join, so cyclic graphs stay
-    bounded.
-
-    Join strategy in the fused rounds: a checkpointed edge RDD carries
-    NO size statistics, so Catalyst would default every hop to a
-    sort-merge join — two exchanges + two sorts per hop.  The edge count
-    is known (the eager checkpoint just materialized it), so hops
-    BROADCAST the edge table whenever its estimated size fits the
-    session's autoBroadcastJoinThreshold: every hop becomes a narrow
-    broadcast-hash join, the whole multi-hop chain fuses into ONE codegen
-    stage, and — when the graph's max out-degree keeps worst-case
-    duplicate carriage bounded — per-hop dedup is deferred to the
-    round-end aggregation.  High-fanout or above-threshold edge sets keep
-    the per-hop distinct — at that scale data volume, not scheduling
-    latency, is the budget.
     """
     if min_length < 0:
         raise ValueError(f"min_length must be >= 0; got {min_length}")
@@ -306,8 +286,8 @@ def reachable_from(
         seen = local_frame(spark, sorted(seen_set), "root string, node string") if seen_set else None
         seen_rows = len(seen_set)
     pairs = _fused_rounds(
-        edges, frontier, seen, seen_rows, advance, hops_left,
-        _normalized, dedup_frontier=from_frame, _sources_from_edges=_sources_from_edges,
+        _normalize(edges), frontier, seen, seen_rows, advance, hops_left,
+        dedup_frontier=from_frame, frontier_is_edge_srcs=False,
     )
     if min_length == 0:
         identity = (
@@ -319,6 +299,25 @@ def reachable_from(
     return pairs
 
 
+def _round_shape(max_deg: int) -> tuple[int, bool]:
+    """``(depth, dedup_free)`` of every fused round over edges whose max
+    out-degree is ``max_deg``.  Within a dedup-free round a (root, node)
+    pair is carried once per distinct path, at most ``max_deg**depth``
+    times, so the round is the deepest of at most 32 hops whose carriage
+    stays <= 256; below 4 hops, rounds of 4 per-hop-DISTINCT hops run
+    instead.  Degree 1 gives 32, 2 gives 8, 3 gives 5, 4 gives 4, and 5
+    or more 4 DISTINCT hops.
+
+    Dedup-free hops fuse the whole round into one codegen stage, so
+    deeper is cheaper per hop: degree-1 chains measured 7.1 s at 32 hops
+    against 8.7 s at 16 (sf0.1).  A dense graph (1k near-complete nodes,
+    fanout ~500) would carry 500**4 duplicate rows per frontier row;
+    there each hop pays its DISTINCT, and deeper rounds only defer the
+    convergence check."""
+    depth = max((d for d in range(1, 33) if max_deg**d <= 256), default=0)
+    return (depth, True) if depth >= 4 else (4, False)
+
+
 def _fused_rounds(
     edges: DataFrame,
     frontier: DataFrame,
@@ -326,27 +325,40 @@ def _fused_rounds(
     result_rows: int,
     advance: int,
     hops_left: int,
-    _normalized: bool,
     dedup_frontier: bool,
-    _sources_from_edges: bool,
+    frontier_is_edge_srcs: bool,
 ) -> DataFrame:
-    """The materialized-edge BFS of :func:`reachable_from`: ``advance``
-    exact steps from ``frontier`` (root, node), then fused rounds while
-    ``hops_left != 0`` (-1 = to convergence).  ``result`` holds pairs
-    already found (``result_rows`` of them), which later rounds exclude
-    and the answer includes.  Returns the (src, dst) pairs."""
-    if not _normalized:
-        edges = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
+    """The materialized-edge BFS: ``advance`` exact steps from
+    ``frontier`` (root, node) over the normalized ``edges``
+    (:func:`_normalize`), then fused rounds while ``hops_left != 0``
+    (-1 = to convergence).  ``result`` holds pairs already found
+    (``result_rows`` of them), which later rounds exclude and the answer
+    includes.  ``dedup_frontier`` dedups the seed pairs, except when
+    ``frontier_is_edge_srcs`` (the frontier is the edge set's own src
+    column) and the max out-degree is 1, where each src appears once.
+    Returns the (src, dst) pairs.
+
+    Each round joins several hops as ONE Spark job before its
+    convergence action (:func:`_round_shape` picks the depth), so a
+    diameter-D traversal costs about ceil(D / depth) driver actions
+    instead of D.  Revisits across the round are dropped at the
+    round-end anti-join, so cyclic graphs stay bounded.
+
+    Join strategy: a checkpointed edge RDD carries NO size statistics, so
+    Catalyst would default every hop to a sort-merge join — two exchanges
+    + two sorts per hop.  The edge count is known, so hops BROADCAST the
+    edge table whenever its estimated size fits the session's
+    autoBroadcastJoinThreshold; above it, the hops shuffle."""
     # ONE action sizes the edge set and probes its max out-degree, which
-    # picks the round builder and depth below.  The degree is probed
-    # whether or not the edges broadcast: on a shuffle-joined chain it
-    # buys 32-hop rounds (sf0.01 chain closure, broadcast off, 4 cores:
-    # 83 jobs / 11.2 s median against 212 jobs / 15.2 s at 4 hops per
-    # round), and on shuffle-joined degree 2-4 graphs dedup-free rounds
-    # beat 4-hop per-hop-DISTINCT ones although every shuffled hop
-    # carries duplicate paths (600-node random DAGs from 10 seeds, 4 cores:
-    # degree 2 at 8 hops 12.9 s vs 21.5 s, degree 4 at 4 hops 17.6 s vs
-    # 27.7 s median wall).
+    # picks the round builder and depth.  The degree is probed whether or
+    # not the edges broadcast: on a shuffle-joined chain it buys 32-hop
+    # rounds (sf0.01 chain closure, broadcast off, 4 cores: 83 jobs /
+    # 11.2 s median against 212 jobs / 15.2 s at 4 hops per round), and on
+    # shuffle-joined degree 2-4 graphs dedup-free rounds beat 4-hop
+    # per-hop-DISTINCT ones although every shuffled hop carries duplicate
+    # paths (600-node random DAGs from 10 seeds, 4 cores: degree 2 at 8
+    # hops 12.9 s vs 21.5 s, degree 4 at 4 hops 17.6 s vs 27.7 s median
+    # wall).
     n_edges, max_deg = (
         edges.groupBy("src").count()
         .agg(F.sum("count"), F.max("count"))
@@ -354,50 +366,16 @@ def _fused_rounds(
     )
     n_edges, max_deg = n_edges or 0, max_deg or 0
     spark = edges.sparkSession
-    try:
-        bcast_limit = int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-    except Exception:
-        bcast_limit = 64 * 1024 * 1024
+    bcast_limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
     # ~128 B/row covers a pair of typical IRI terms; err toward NOT
     # broadcasting (a too-big broadcast OOMs, a missed one just shuffles)
     broadcast_edges = 0 <= n_edges * 128 <= bcast_limit
     hop_edges = F.broadcast(edges) if broadcast_edges else edges
-    # Depth: dedup-free hops are near-free (one fused stage regardless of
-    # depth), so fuse as many per driver round as the carriage bound
-    # allows — a diameter-49 chain then converges in few rounds.  Depth
-    # limits are PLAN-COST bounds, measured at sf0.1: with union-of-arms
-    # rounds Catalyst analysis grows superlinearly past 16 hops (8:
-    # 15.1 s, 16: 12.4 s, 24: 14.8 s, 32: 44.8 s end-to-end), so fanout
-    # 2-4 graphs cap at 16; the degree-1 array-history round keeps the
-    # plan ~25 nodes at any depth, so it goes to 32.  High-fanout graphs
-    # stay at 4: each hop pays its distinct, and deeper rounds just
-    # defer the convergence check.
-    if max_deg == 1:
-        # degree-1 graphs (chains/rings) carry no duplicates at any
-        # depth — 32 fused hops measured fastest at sf0.1 (7.1 s vs
-        # 8.7 s at 16, vs 44.8 s for the old 32-deep union-of-arms plan)
-        depth = 32
-    elif 2 <= max_deg <= 4:
-        depth = 16
-        while max_deg**depth > 256:
-            depth -= 1
-        depth = max(4, depth)
-    else:
-        depth = 4
-    # Dedup-free carriage is gated on FANOUT, not just edge-table size:
-    # within a round a (root, node) pair is carried once per distinct
-    # path, bounded by max_out_degree^depth.  Chains/trees (degree <= 4)
-    # stay within a 256x worst-case and win by fusing the whole round
-    # into one codegen stage; a dense graph (e.g. 1k near-complete nodes
-    # = 500k edges, fanout ~500) would carry 500^4 duplicate rows per
-    # frontier row — for those, keep the per-hop distinct (one exchange
-    # per hop when broadcast-joined).
-    dedup_free = max_deg**depth <= 256
-    if dedup_frontier and not (_sources_from_edges and max_deg == 1):
+    depth, dedup_free = _round_shape(max_deg)
+    build = _round_sql_array if dedup_free else _round_sql_distinct
+    if dedup_frontier and not (frontier_is_edge_srcs and max_deg == 1):
         # seed dedup costs an exchange in round 1's critical path; skip it
-        # only when uniqueness is PROVEN: the sources are the deduped edge
-        # set's own src column (transitive_closure) and max out-degree is
-        # 1, so each src appears exactly once
+        # only when uniqueness is PROVEN
         frontier = frontier.distinct()
     for _ in range(advance):
         frontier = (
@@ -408,33 +386,16 @@ def _fused_rounds(
         )
     # BFS terminates on its own: each round's anti-join keeps only pairs
     # never seen before, and the (root, node) space is finite — so the
-    # default is run-to-convergence, matching the removed path-doubling's
-    # effective 2^64-hop coverage (code-review fix: a finite default hop
-    # budget silently truncated deep closures).  max_length is an
-    # INTENTIONAL path-length cap — `p?` passes 1 — counted in hops
-    # after the min_length seed advance, not a convergence budget.
-    # The round body is generated as ONE SQL statement over temp views of
-    # the frontier + edge set (_round_sql_array / _round_sql_distinct):
-    # the old per-hop DataFrame loop re-analyzed its deepening plan after
-    # every join — ~1 s of driver time per 32-hop round, more than the
-    # round's execution.  View names are invocation-unique (the session's
-    # temp namespace is shared across concurrent driver threads).
-    tag = uuid.uuid4().hex[:12]
-    ev, fv = f"path_edges_{tag}", f"path_frontier_{tag}"
-    edges.createOrReplaceTempView(ev)
-    round_sql_cache: dict[int, str] = {}
-    try:
-      while hops_left != 0:
+    # default is run-to-convergence.  max_length is an INTENTIONAL
+    # path-length cap — `p?` passes 1 — counted in hops after the
+    # min_length seed advance, not a convergence budget.
+    while hops_left != 0:
         this_round = depth if hops_left < 0 else min(depth, hops_left)
         if hops_left > 0:
             hops_left -= this_round
-        sql = round_sql_cache.get(this_round)
-        if sql is None:
-            build = _round_sql_array if dedup_free else _round_sql_distinct
-            sql = build(fv, ev, this_round, broadcast_edges)
-            round_sql_cache[this_round] = sql
-        frontier.createOrReplaceTempView(fv)
-        acc = spark.sql(sql)
+        # spark.sql registers each DataFrame argument under a fresh view
+        # name and drops it once the statement is analyzed
+        acc = spark.sql(build(this_round, broadcast_edges), f=frontier, e=edges)
         if result is not None:
             # the accumulated result's exact row count is known (summed
             # fresh counts), so the seen-set side of the anti-join is
@@ -470,12 +431,6 @@ def _fused_rounds(
             # next frontier is PROVABLY empty — skip the verify round
             # (a whole plan+schedule cycle) the count==0 exit would cost
             break
-    finally:
-        for v in (fv, ev):
-            try:
-                spark.catalog.dropTempView(v)
-            except Exception:
-                pass
     if result is None:
         result = frontier.limit(0)
     return result.select(F.col("root").alias("src"), F.col("node").alias("dst"))

@@ -1485,7 +1485,7 @@ class _Planner:
         constant filter pushes into the first/last scan), alternative = bag
         union, inverse = endpoint swap, negated set = NOT-IN scan; closure
         modifiers route exactly like the round-2 operator — frontier BFS
-        from a bound endpoint, path doubling for var-var
+        from a bound endpoint, frontier BFS from every source for var-var
         (reference: RDF4J path algebra evaluated per-binding,
         HalyardTupleExprEvaluation.java:1073-1098)."""
         kind = ast[0]
@@ -1551,13 +1551,15 @@ class _Planner:
         """Closure modifier over a sub-path (ArbitraryLengthPath /
         ZeroLengthPath, HTEE:1046-1098).  A bound endpoint routes to the
         frontier-BFS reachable_from — never the whole-graph closure;
-        var-var falls back to path doubling / zero-or-one.
+        var-var runs transitive_closure (frontier BFS seeded from every
+        source, about ceil(D / depth) rounds for diameter D) or
+        zero_or_one_path.
 
         Every node enters the closure under a key: the term itself, or
         "ctx\\x00term" inside GRAPH ?g.  Both ends of an edge carry the
         same prefix, so paths can never cross graph boundaries, and the
         prefix splits back out as the ?g binding — no per-graph loop,
-        the same O(log d) rounds over all graphs at once."""
+        the same rounds over all graphs at once."""
         from halyard_spark.query import path as PATH
 
         graph_var = self.graph[1] if (self.graph is not None and self.graph[0] == "var") else None

@@ -39,10 +39,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DataType
 
 # Sized from the host: the CPUs this process may run on, and a share of
-# physical memory for the driver heap (local mode runs every task in it).
-# SPARK_GRAFT_CPUS / SPARK_GRAFT_DRIVER_MEM override both.
+# the memory still free for the driver heap (local mode runs every task
+# in it).  SPARK_GRAFT_CPUS / SPARK_GRAFT_DRIVER_MEM override both.
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
-DRIVER_MEM_SHARE = 0.5  # of MemTotal
+DRIVER_MEM_SHARE = 0.5  # of MemAvailable
 DRIVER_MEM_CAP_MB = 64 * 1024
 
 # JDK 17 Tier-4 defaults x10 (see the module docstring).
@@ -69,16 +69,26 @@ def driver_java_options(caller: str | None = None) -> str:
     return f"{ours} {caller}" if caller else ours
 
 
+def driver_memory_for(meminfo: str) -> str:
+    """The driver heap for a host whose ``/proc/meminfo`` text is
+    ``meminfo``: half of MemAvailable, with a 1 GB floor and a 64 GB cap.
+    MemAvailable, not MemTotal, so that a second session on the host
+    (a script beside a test run) does not ask for memory the first one
+    already holds."""
+    avail_kb = next(
+        int(line.split()[1]) for line in meminfo.splitlines() if line.startswith("MemAvailable:")
+    )
+    mb = int(avail_kb / 1024 * DRIVER_MEM_SHARE)
+    return f"{max(1024, min(DRIVER_MEM_CAP_MB, mb))}m"
+
+
 def default_driver_memory() -> str:
-    """``SPARK_GRAFT_DRIVER_MEM``, else half of MemTotal (/proc/meminfo)
-    with a 1 GB floor and a 64 GB cap."""
+    """``SPARK_GRAFT_DRIVER_MEM``, else :func:`driver_memory_for` this host."""
     env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
     if env:
         return env
     with open("/proc/meminfo") as f:
-        total_kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
-    mb = int(total_kb / 1024 * DRIVER_MEM_SHARE)
-    return f"{max(1024, min(DRIVER_MEM_CAP_MB, mb))}m"
+        return driver_memory_for(f.read())
 
 
 def _local_dir() -> str:
@@ -271,34 +281,6 @@ def widen_small_input(df, target: int | None = None, max_bytes_per_core: int = 8
     if total is None or total > target * max_bytes_per_core:
         return df  # remote store (scan splits decide) or already big
     return df.repartition(target)
-
-
-def checkpoint_parallel(df, target: int | None = None):
-    """Eager localCheckpoint whose materialized RDD keeps >= ``target``
-    partitions (default: the session's core count).
-
-    AQE's partition coalescing sizes post-shuffle output by BYTES, so a
-    small-but-compute-heavy intermediate (LSH bucket frames, signature
-    tables) materializes as ONE partition — and every downstream consumer
-    of the checkpoint (join map sides, df-cap aggregations) then runs as a
-    single serial task while the other cores idle (guide §2.5 input skew,
-    measured ~1 s serial stages per consumer on dedup_minhash at sf0.1).
-    When the checkpoint lands below ``target`` partitions it is, by the
-    same coalescing logic, SMALL — so re-spreading it costs one tiny
-    shuffle; frames that materialize wide (the 100 TB case) pass through
-    untouched.
-
-    The default target is a QUARTER of the core count (floor 8), not full
-    width: an interleaved A/B measured full-width re-spreading ~0.3 s
-    SLOWER cold (32 tiny tasks x 3 consumer stages of extra scheduling)
-    while width 8 keeps the insurance — in degraded host windows the
-    serial consumer stages were the dominant cost (~6 s), and 8-way
-    spreading removes that tail for ~0.1 s in healthy windows."""
-    ck = df.localCheckpoint(eager=True)
-    target = target or max(8, df.sparkSession.sparkContext.defaultParallelism // 4)
-    if ck.rdd.getNumPartitions() >= target:
-        return ck
-    return ck.repartition(target).localCheckpoint(eager=True)
 
 
 def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:

@@ -105,14 +105,74 @@ def test_random_digraph_matches_brute_force(spark, monkeypatch):
     srcs = df.select("src").distinct()
     statements = []
     sql = spark.sql
-    monkeypatch.setattr(spark, "sql", lambda q: statements.append(q) or sql(q))
+    monkeypatch.setattr(
+        spark, "sql", lambda q, *a, **kw: statements.append(q) or sql(q, *a, **kw)
+    )
     got = rows(reachable_from(df, srcs, min_length=1))
     monkeypatch.undo()
     assert got == brute_closure(chain)
-    # rounds are counted by their generated SQL: each fused round is one
-    # spark.sql statement over the invocation's frontier view
-    rounds = [q for q in statements if "path_frontier_" in q]
+    # rounds are counted by their SQL template: each fused round is one
+    # spark.sql statement over the frontier argument {f}
+    rounds = [q for q in statements if "FROM {f} s" in q]
     assert len(rounds) == 2
+
+
+def test_rounds_read_a_sized_broadcast_threshold(spark, monkeypatch):
+    # Spark reports the threshold as a size string ("10485760b" by
+    # default); below the edge set's size the hops shuffle
+    pairs = [(i, i + 1) for i in range(6)]
+    statements = []
+    sql = spark.sql
+    monkeypatch.setattr(
+        spark, "sql", lambda q, *a, **kw: statements.append(q) or sql(q, *a, **kw)
+    )
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1b")
+    try:
+        got = rows(transitive_closure(edges_df(spark, pairs)))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert got == brute_closure(pairs)
+    rounds = [q for q in statements if "FROM {f} s" in q]
+    assert rounds and not any("BROADCAST" in q for q in rounds)
+
+
+@pytest.mark.parametrize(
+    "max_deg, shape",
+    [(1, (32, True)), (2, (8, True)), (3, (5, True)), (4, (4, True)),
+     (5, (4, False)), (6, (4, False)), (16, (4, False)), (1000, (4, False))],
+)
+def test_round_shape_follows_the_carriage_rule(max_deg, shape):
+    # the deepest dedup-free round of <= 32 hops with max_deg**depth <= 256,
+    # else 4-hop per-hop-DISTINCT rounds
+    assert path_mod._round_shape(max_deg) == shape
+
+
+def test_iterative_operators_leave_the_catalog_as_found(spark, monkeypatch):
+    from pyspark.errors import AnalysisException
+
+    from halyard_spark.pipeline import cc
+
+    def tables():
+        return sorted(t.name for t in spark.catalog.listTables())
+
+    before = tables()
+    df = edges_df(spark, [(0, 1), (1, 2), (2, 0), (3, 4)])
+    srcs = spark.createDataFrame([("0",), ("3",)], "src string")
+    assert rows(cc.connected_components(df))
+    assert rows(transitive_closure(df))
+    assert rows(reachable_from(df, srcs))
+    assert tables() == before
+    # a round that fails its analysis still drops the views it registered
+    monkeypatch.setattr(cc, "_ROUND_SQL", "SELECT nope FROM {v}")
+    monkeypatch.setattr(path_mod, "_round_sql_array", lambda hops, b: "SELECT nope FROM {f}, {e}")
+    with pytest.raises(AnalysisException):
+        cc.connected_components(df)
+    with pytest.raises(AnalysisException):
+        transitive_closure(df)
+    with pytest.raises(AnalysisException):
+        reachable_from(df, srcs)
+    assert tables() == before
 
 
 def test_zero_or_one_path_identity_domain(spark):

@@ -353,6 +353,44 @@ def test_driver_java_options_keep_the_callers_last():
     assert merged.endswith(" " + caller)
 
 
+def test_driver_memory_is_half_of_mem_available(monkeypatch):
+    from halyard_spark import session
+
+    def meminfo(total_gb, avail_gb):
+        return (f"MemTotal:       {total_gb * 1024 * 1024} kB\n"
+                f"MemFree:        {avail_gb * 512 * 1024} kB\n"
+                f"MemAvailable:   {avail_gb * 1024 * 1024} kB\n")
+
+    assert session.driver_memory_for(meminfo(16, 6)) == "3072m"
+    assert session.driver_memory_for(meminfo(16, 1)) == "1024m"  # 1 GB floor
+    assert session.driver_memory_for(meminfo(512, 256)) == "65536m"  # 64 GB cap
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "5g")
+    assert session.default_driver_memory() == "5g"
+
+
+def test_lineage_dir_without_rows_reads_empty(spark, tmp_path):
+    """A crash between the lineage makedirs and the first row leaves a
+    directory with only _SUCCESS: it reads as 0 rows, so no stage is
+    done."""
+    (tmp_path / "lineage").mkdir()
+    (tmp_path / "lineage" / "_SUCCESS").touch()
+    (tmp_path / "out").mkdir()
+    (tmp_path / "out" / "_SUCCESS").touch()
+    assert lineage.read_lineage(spark, str(tmp_path)).count() == 0
+    assert not lineage.stage_done(spark, str(tmp_path), "extract", "1:2", str(tmp_path / "out"))
+
+
+def test_damaged_lineage_file_raises(spark, tmp_path):
+    """A damaged lineage file fails the resume check instead of silently
+    reading as 'no lineage' and re-running every stage."""
+    lineage.record_stage(spark, str(tmp_path), "extract", "1:2", 5, 10)
+    (tmp_path / "lineage" / "extract-0-0.parquet").write_bytes(b"not a parquet file")
+    (tmp_path / "out").mkdir()
+    (tmp_path / "out" / "_SUCCESS").touch()
+    with pytest.raises(Exception, match="(?i)parquet"):
+        lineage.stage_done(spark, str(tmp_path), "extract", "1:2", str(tmp_path / "out"))
+
+
 def test_jit_options_reach_the_driver_jvm(spark):
     """Spark's driver options include -XX:+IgnoreUnrecognizedVMOptions,
     so a misspelled flag would be dropped without a word: read every
