@@ -146,10 +146,3 @@ def generate_src(
         lang.alias("lang"),
         content.alias("content"),
     )
-
-
-def write_src(spark: SparkSession, n_files: int, out_dir: str) -> DataFrame:
-    """Materialize the corpus as parquet (the stand-in for the Iceberg table)."""
-    df = generate_src(spark, n_files)
-    df.write.mode("overwrite").parquet(out_dir)
-    return spark.read.parquet(out_dir)

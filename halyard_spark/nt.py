@@ -164,10 +164,6 @@ def nt_iri(col: str | Column) -> Column:
     return F.concat(F.lit("<"), _c(col), F.lit(">"))
 
 
-def nt_bnode(col: str | Column) -> Column:
-    return F.concat(F.lit("_:"), _c(col))
-
-
 def nt_lit(col: str | Column, lang: str | None = None, dtype: str | None = None) -> Column:
     base = F.concat(F.lit('"'), nt_escape(col), F.lit('"'))
     if lang:
@@ -333,13 +329,6 @@ def nt_datatype(col: str | Column) -> Column:
 def nt_localname(col: str | Column) -> Column:
     """IRI local name after last '#' or '/' (HalyardValueExprEvaluation.java:366-392)."""
     return F.element_at(F.split(nt_iri_value(col), r"[#/]"), -1)
-
-
-def nt_namespace(col: str | Column) -> Column:
-    """IRI namespace: everything up to and including the last '#' or '/'
-    (HalyardValueExprEvaluation.java:366-392 Namespace accessor)."""
-    v = nt_iri_value(col)
-    return F.regexp_extract(v, r"^(.*[#/])", 1)
 
 
 # ---------------------------------------------------------------- pandas

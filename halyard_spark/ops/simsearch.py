@@ -32,14 +32,6 @@ def _norm(a: Column) -> Column:
     return F.sqrt(_dot(a, a))
 
 
-def with_norm(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Attach the L2 norm and DROP zero-norm rows: a zero vector has no
-    direction, and under the session's default ANSI mode an unguarded
-    cosine division would kill the whole job (DIVIDE_BY_ZERO) the moment
-    one empty-document embedding appears in the corpus."""
-    return emb.withColumn("_norm", _norm(F.col(vec_col))).where(F.col("_norm") > 0)
-
-
 def cosine_topk(
     emb: DataFrame,
     queries: DataFrame,

@@ -139,7 +139,6 @@ def _ship_package(spark: SparkSession) -> None:
 def get_spark(
     cpus: int | None = None,
     app_name: str = "halyard_spark",
-    shuffle_partitions: int | None = None,
     driver_memory: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
@@ -150,11 +149,6 @@ def get_spark(
     plan tuned at sf0.01 still holds at 100 TB.
     """
     cpus = cpus or DEFAULT_CPUS
-    # Core-count width.  run_pipeline re-sizes it per job from its own
-    # input (adaptive_shuffle_width); a blanket-high initialPartitionNum
-    # instead turned every small shuffle into ~1024 tiny tasks and cost
-    # 5-20x on shuffle-iterating stages (CC rounds, LSH band joins).
-    shuffle_partitions = shuffle_partitions or max(cpus, 8)
     conf = dict(extra_conf or {})
     if "spark.local.dir" not in conf:
         # shuffle/spill on tmpfs when available: local-mode shuffles are
@@ -166,7 +160,11 @@ def get_spark(
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # Core-count width.  run_pipeline re-sizes it per job from its own
+        # input (adaptive_shuffle_width); a blanket-high initialPartitionNum
+        # instead turned every small shuffle into ~1024 tiny tasks and cost
+        # 5-20x on shuffle-iterating stages (CC rounds, LSH band joins).
+        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -308,9 +306,3 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFram
     return DataFrame(text.toDF(), spark).select(
         F.inline(F.from_json("value", ArrayType(struct)))
     )
-
-
-def stop_all() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

@@ -7,7 +7,7 @@ from halyard_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="halyard_spark_tests", shuffle_partitions=8)
+    s = get_spark(app_name="halyard_spark_tests")
     yield s
 
 

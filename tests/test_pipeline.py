@@ -318,13 +318,10 @@ def test_get_spark_leaves_default_local_dir_alone(spark, tmp_path, monkeypatch):
         raise AssertionError("default spark.local.dir created")
 
     monkeypatch.setattr(session, "_local_dir", no_default)
-    width = spark.conf.get("spark.sql.shuffle.partitions")
-    again = session.get_spark(
-        shuffle_partitions=int(width), extra_conf={"spark.local.dir": str(tmp_path)}
-    )
+    again = session.get_spark(extra_conf={"spark.local.dir": str(tmp_path)})
     assert again is spark
     with pytest.raises(AssertionError):
-        session.get_spark(shuffle_partitions=int(width))
+        session.get_spark()
 
 
 def test_get_spark_raises_when_the_package_zip_fails(spark, tmp_path, monkeypatch):
@@ -337,9 +334,8 @@ def test_get_spark_raises_when_the_package_zip_fails(spark, tmp_path, monkeypatc
 
     monkeypatch.setattr(session.tempfile, "gettempdir", lambda: str(tmp_path))
     monkeypatch.setattr(session.shutil, "make_archive", broken)
-    width = spark.conf.get("spark.sql.shuffle.partitions")
     with pytest.raises(OSError, match="zip build failed"):
-        session.get_spark(shuffle_partitions=int(width), extra_conf={"spark.local.dir": str(tmp_path)})
+        session.get_spark(extra_conf={"spark.local.dir": str(tmp_path)})
 
 
 def test_driver_java_options_keep_the_callers_last():
