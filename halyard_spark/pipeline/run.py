@@ -92,7 +92,8 @@ def _run_pipeline(
             return df
         df = builder()
         df.write.mode("overwrite").parquet(out_path)
-        out = spark.read.parquet(out_path)
+        # the writer's schema: reading it back infers nothing (a 1-task job)
+        out = spark.read.schema(df.schema).parquet(out_path)
         rows = out.count()
         wall = int((time.time() - t0) * 1000)
         lineage.record_stage(spark, out_dir, name, fp, rows, wall)

@@ -338,6 +338,22 @@ def test_get_spark_raises_when_the_package_zip_fails(spark, tmp_path, monkeypatc
         session.get_spark(extra_conf={"spark.local.dir": str(tmp_path)})
 
 
+def test_cold_run_pipeline_job_count(spark, tmp_path):
+    """A cold run_pipeline's Spark jobs, counted by the status tracker.
+    Each stage reads its output back with the writer's schema: inferring
+    it started one more job per stage."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def last_job() -> int:
+        return max(tracker.getJobIdsForGroup(None), default=-1)
+
+    src = corpus.generate_src(spark, 60)
+    first = last_job()
+    run.run_pipeline(spark, src, str(tmp_path), resume=False)
+    jobs = last_job() - first
+    assert jobs <= 72, jobs  # 69 on a 4-core host; 75 inferring schemas
+
+
 def test_driver_java_options_keep_the_callers_last():
     from halyard_spark.session import C2_THRESHOLDS, driver_java_options
 

@@ -164,6 +164,31 @@ def test_store_pred_obj_pattern_scans_pos(spark, store):
     assert "EqualTo(pred," in pushed and "EqualTo(obj," in pushed, plan
 
 
+def test_store_point_po_plan_py4j_commands(spark, store, monkeypatch):
+    """Planning a warm point_po query over a load_dataset store on the
+    main thread: PySpark's per-call origin capture (a stack walk and 5-7
+    py4j round trips per Column call) tripled the count; get_spark turns
+    it off."""
+    from halyard_spark.pipeline.rdfload import load_dataset
+    from halyard_spark.query.sparql import sparql_query
+
+    handle = load_dataset(spark, f"{store}/store")
+    m = handle.where(F.col("pred") == "<urn:p:imports>").first()["obj"]
+    query = f"SELECT ?s WHERE {{ ?s <urn:p:imports> {m} }}"
+    sparql_query(handle, query)
+    client = spark.sparkContext._gateway._gateway_client
+    send, sent = client.send_command, []
+
+    def counted(command, *args, **kwargs):
+        sent.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counted)
+    sparql_query(handle, query)
+    monkeypatch.undo()
+    assert 0 < len(sent) <= 45, len(sent)
+
+
 def test_store_closure_edge_scan_picks_by_bound_end(spark, store, monkeypatch):
     """A closure walks ``obj IN (frontier)`` over reversed edges from a
     bound object, which POS covers; from a bound subject it walks
