@@ -1020,6 +1020,9 @@ class _Planner:
         # projects (None: every column of the frame being evaluated)
         self._solution_cols: frozenset | None = None
         self._fresh_n = 0
+        # set once a _VOLATILE builtin is evaluated: the plan's values
+        # differ per execution, so it must not be executed twice
+        self.volatile = False
 
     def _fresh_var(self) -> str:
         self._fresh_n += 1
@@ -1392,11 +1395,13 @@ class _Planner:
             raise ValueError(f"SPARQL SERVICE: no registered endpoint {term[1]!r}")
         sub_planner = _Planner(store, self.parser, services=self.services)
         try:
-            return sub_planner.eval_group(elems, report_unbound=report_unbound)
+            df = sub_planner.eval_group(elems, report_unbound=report_unbound)
         except Exception:
             if silent:
                 return None
             raise
+        self.volatile |= sub_planner.volatile
+        return df
 
     def eval_values(self, el) -> DataFrame:
         _, vars_, rows = el
@@ -1780,6 +1785,7 @@ class _Planner:
     # -- builtin functions
     def eval_call(self, name: str, args: list, df: DataFrame) -> tuple[Column, str]:
         fn = _builtin(name, len(args), ValueError)
+        self.volatile |= name in _VOLATILE
         vals = [_Val(*self.eval_expr(a, df)) for a in args]
         coerced: list = []
         for i, v in enumerate(vals):
@@ -2391,6 +2397,11 @@ _BUILTINS: dict[str, _Builtin] = {
         kinds[0] if len(set(kinds)) == 1 else _EXPR_TERM)),
 }
 _BUILTINS.update(isuri=_BUILTINS["isiri"], uri=_BUILTINS["iri"])
+# builtins whose value Spark fixes per plan, not per execution: the seed
+# of rand() and uuid() at analysis, current_timestamp() at optimization.
+# A re-executed plan would repeat them.  BNODE seeds from the solution
+# (_bnode), so it is not here.
+_VOLATILE = frozenset({"rand", "now", "uuid", "struuid"})
 # XSD constructor casts such as xsd:double(?x), under any prefix bound to
 # the XSD namespace or an undeclared xsd: (names arrive lower-cased)
 _XSD_CASTS = {
@@ -2537,6 +2548,19 @@ def sparql_query(
     lists of N-Triples ctx lexicals; when given it OVERRIDES the query's
     own FROM / FROM NAMED (the SPARQL protocol rule for
     default-graph-uri / named-graph-uri parameters)."""
+    return plan_query(triples, query, base, services, dataset)[0]
+
+
+def plan_query(
+    triples: DataFrame,
+    query: str,
+    base: str | None = None,
+    services: dict[str, DataFrame] | None = None,
+    dataset: tuple[list | None, list | None] | None = None,
+) -> tuple[DataFrame, bool]:
+    """``sparql_query``, plus whether the plan evaluates a builtin whose
+    value Spark fixes per plan (``_VOLATILE``): such a plan answers
+    correctly once, and must be planned again to be run again."""
     parser = _Parser(tokenize(query), base=base)
     q = parser.parse()
     planner = _Planner(triples, parser, services=services)
@@ -2544,7 +2568,8 @@ def sparql_query(
 
     if q.form == "ask":
         df = planner.eval_group(q.where)
-        return df.limit(1).select(F.lit(1).alias("one")).agg((F.count("one") > 0).alias("ask"))
+        ask = df.limit(1).select(F.lit(1).alias("one")).agg((F.count("one") > 0).alias("ask"))
+        return ask, planner.volatile
 
     if q.form == "describe":
         spark = triples.sparkSession
@@ -2570,7 +2595,7 @@ def sparql_query(
         hop = scoped.join(F.broadcast(hops), scoped["subj"] == hops["node"], "left_semi")
         return own.select("subj", "pred", "obj").unionByName(
             hop.select("subj", "pred", "obj")
-        ).dropDuplicates()
+        ).dropDuplicates(), planner.volatile
 
     df = planner.eval_group(q.where)
 
@@ -2594,9 +2619,9 @@ def sparql_query(
         # the constructed graph is a set
         return _instantiate(
             df, [(s, p, o) for _, s, p, o in q.template], "_:c"
-        ).dropDuplicates()
+        ).dropDuplicates(), planner.volatile
 
-    return planner.plan_select(q, df=df)
+    return planner.plan_select(q, df=df), planner.volatile
 
 
 # SELECT was the original public name; all four forms run through
